@@ -5,6 +5,7 @@ import graft.analysis.Analyzer
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
+import SegmentStore.liveOnly
 
 /** The persistent, compressed, block-structured inverted index — the
   * 100 TB-scale physical counterpart of the in-memory [[IndexBundle]].
@@ -74,14 +75,6 @@ object BlockIndex {
   private def emptyBlocks(spark: SparkSession): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), BlockSchema)
 
-  /** Shard directories that actually exist — a shard with no terms gets
-    * no directory from partitionBy, and an out-of-vocabulary query term
-    * hashes to a shard that may not exist at all; passing a missing path
-    * to the parquet reader throws instead of reading empty.
-    */
-  private def existingShardPaths(dir: String, shards: Seq[Int]): Seq[String] =
-    shards.map(s => s"$dir/shard=$s").filter(MetaIO.exists)
-
   /** The block relation for `shards` across every live segment of `dir` —
     * a union of per-segment reads (each with its own basePath so the
     * `shard` partition column is recovered), or None when no segment has
@@ -90,8 +83,8 @@ object BlockIndex {
     */
   private def shardBlocksRelation(
       spark: SparkSession, dir: String, shards: Seq[Int]): Option[DataFrame] =
-    segDirs(dir).flatMap { d =>
-      val paths = existingShardPaths(d, shards)
+    Store.segDirs(dir).flatMap { d =>
+      val paths = SegmentStore.shardPaths(d, shards)
       if (paths.isEmpty) None
       else Some(spark.read.option("basePath", d).parquet(paths: _*))
     }.reduceOption(_ unionByName _)
@@ -294,7 +287,7 @@ object BlockIndex {
     */
   private def plainBlocks(
       spark: SparkSession, dir: String, layout: Layout): Option[DataFrame] = {
-    val paths = existingShardPaths(dir, 0 until layout.nShards)
+    val paths = SegmentStore.shardPaths(dir, 0 until layout.nShards)
     if (paths.isEmpty) None
     else Some(spark.read.option("basePath", dir).parquet(paths: _*))
   }
@@ -340,17 +333,24 @@ object BlockIndex {
   }
 
   private def writeStats(dir: String, stats: CorpusStats, layout: Layout,
-      maxDocId: Long = -1L): Unit = {
+      maxDocId: Long = -1L): Unit =
     // nonce: identifies THIS build for the envelope cache. nanoTime is
     // strictly monotonic within a JVM and collision-free across JVMs for
     // practical purposes — unlike file mtime, whose millisecond (or
     // coarser) granularity can leave two back-to-back rebuilds
     // indistinguishable and serve stale cached envelopes. maxDocId lets
     // the first refresh of a plain index skip the block-metadata scan.
-    val json =
-      s"""{"nDocs":${stats.nDocs},"vocabSize":${stats.vocabSize},"totalLen":${stats.totalLen},"blockSpan":${layout.blockSpan},"nShards":${layout.nShards},"maxDocId":$maxDocId,"nonce":${System.nanoTime()}}"""
-    MetaIO.writeAtomic(s"$dir/$StatsName", json.getBytes(StandardCharsets.UTF_8))
-  }
+    MetaIO.writeMeta(s"$dir/$StatsName", statsParams(stats, layout) ++
+      Seq("maxDocId" -> maxDocId, "nonce" -> System.nanoTime()), Nil)
+
+  private def statsParams(stats: CorpusStats, layout: Layout): Seq[(String, Long)] =
+    Seq("nDocs" -> stats.nDocs, "vocabSize" -> stats.vocabSize,
+      "totalLen" -> stats.totalLen, "blockSpan" -> layout.blockSpan.toLong,
+      "nShards" -> layout.nShards.toLong)
+
+  private def statsOf(f: String => Long): (CorpusStats, Layout) =
+    (CorpusStats(f("nDocs"), f("vocabSize"), f("totalLen")),
+      Layout(f("blockSpan").toInt, f("nShards").toInt))
 
   def readStats(dir: String): (CorpusStats, Layout) = {
     if (isSegmented(dir)) { val m = readSegments(dir); return (m.stats, m.layout) }
@@ -362,17 +362,12 @@ object BlockIndex {
     * combined stats would otherwise be returned (and double-counted by a
     * second refresh's commit).
     */
-  private def readStatsPlain(dir: String): (CorpusStats, Layout) = {
-    val s = MetaIO.readString(s"$dir/$StatsName")
-    val re = """"(\w+)":(\d+)""".r
-    val kv = re.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toLong).toMap
-    (CorpusStats(kv("nDocs"), kv("vocabSize"), kv("totalLen")),
-      Layout(kv("blockSpan").toInt, kv("nShards").toInt))
-  }
+  private def readStatsPlain(dir: String): (CorpusStats, Layout) =
+    statsOf(Store.readMarker(dir)(_))
 
   // ------------------------------------------------------------------
-  // Segments: incremental refresh without rebuilding (the Lucene/LSM
-  // segment model, Spark-shaped)
+  // Segments: incremental refresh without rebuilding — the lifecycle
+  // and commit protocol of [[SegmentStore]]
   // ------------------------------------------------------------------
 
   /** Committed state of a segmented index root: the ordered segment
@@ -388,70 +383,100 @@ object BlockIndex {
   final case class SegmentsMeta(
       segs: Seq[String], stats: CorpusStats, layout: Layout, maxDocId: Long)
 
-  def isSegmented(dir: String): Boolean = MetaIO.exists(s"$dir/$SegmentsName")
-
-  /** Absolute segment directories of `dir` (just `dir` for a plain,
-    * non-segmented index).
-    */
-  private def segDirs(dir: String): Seq[String] =
-    if (!isSegmented(dir)) Seq(dir)
-    else readSegments(dir).segs.map(s => if (s == ".") dir else s"$dir/$s")
-
-  def readSegments(dir: String): SegmentsMeta = {
-    val s = MetaIO.readString(s"$dir/$SegmentsName")
-    val kv = """"(\w+)":(-?\d+)""".r.findAllMatchIn(s)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-    val segs = """"segs":\[([^\]]*)\]""".r.findFirstMatchIn(s).map(_.group(1))
-      .getOrElse("").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq
-    SegmentsMeta(segs,
-      CorpusStats(kv("nDocs"), kv("vocabSize"), kv("totalLen")),
-      Layout(kv("blockSpan").toInt, kv("nShards").toInt), kv("maxDocId"))
+  private def toMeta(s: SegmentStore.Segments): SegmentsMeta = {
+    val (stats, layout) = statsOf(s(_))
+    SegmentsMeta(s.segs, stats, layout, s.maxDocId)
   }
 
-  private def writeSegments(dir: String, m: SegmentsMeta): Unit = {
-    val segsJson = m.segs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json =
-      s"""{"nDocs":${m.stats.nDocs},"vocabSize":${m.stats.vocabSize},"totalLen":${m.stats.totalLen},"blockSpan":${m.layout.blockSpan},"nShards":${m.layout.nShards},"maxDocId":${m.maxDocId},"nonce":${System.nanoTime()},"segs":$segsJson}"""
-    MetaIO.writeAtomic(s"$dir/$SegmentsName", json.getBytes(StandardCharsets.UTF_8))
-  }
+  private[graft] object Store
+      extends SegmentStore("seg-", SegmentsName, StatsName, "index") {
+    protected def paramKeys: Seq[String] =
+      Seq("nDocs", "vocabSize", "totalLen", "blockSpan", "nShards")
+    protected def rootArtifacts: Seq[String] = Seq(ManifestName, DocLensName,
+      VocabName, LegacyDocLensName, LegacyVocabName, StatsName)
+    // append-only ⇒ (maxDocId, nDocs) pins the folded doc set
+    override protected def compactTag(s: SegmentStore.Segments): Long = s("nDocs")
 
-  /** Current metadata of `dir` whether segmented or plain; for a plain
-    * index the (cheap, metadata-only) max over the blocks' `maxDoc`
-    * column supplies maxDocId.
-    */
-  private def segMeta(spark: SparkSession, dir: String): SegmentsMeta =
-    if (isSegmented(dir)) readSegments(dir)
-    else {
-      val (stats, layout) = readStats(dir)
-      // prefer the maxDocId recorded at build completion; pre-maxDocId
-      // stats files fall back to one metadata-only scan of `maxDoc`
-      val maxDoc =
-        """"maxDocId":(-?\d+)""".r
-          .findFirstMatchIn(MetaIO.readString(s"$dir/$StatsName"))
-          .map(_.group(1).toLong)
-          .getOrElse {
-            val blocks = readBlocks(spark, dir)
-            if (blocks.isEmpty) -1L
-            else blocks.agg(max(col("maxDoc"))).head().getLong(0)
-          }
-      SegmentsMeta(Seq("."), stats, layout, maxDoc)
+    // pre-maxDocId stats files: one metadata-only scan of `maxDoc`
+    protected def scanMaxDocId(dir: String): Long = {
+      val blocks = readBlocks(SparkSession.active, dir)
+      if (blocks.isEmpty) -1L else blocks.agg(max(col("maxDoc"))).head().getLong(0)
     }
 
+    /** A new segment from the DECODED postings of the folded segments' blocks —
+      * no re-tokenization. Block contents after a full compaction are
+      * byte-identical to a cold build over the surviving corpus
+      * (spec-asserted): both paths feed docId-sorted postings of the same
+      * (term, blockId) groups through [[VarByteAgg]], and `keep` drops
+      * tombstoned docs from postings and doc lengths alike.
+      */
+    protected def merge(dirs: Seq[String], keep: DataFrame => DataFrame,
+        target: String, s: SegmentStore.Segments): Unit = {
+      val spark = SparkSession.active
+      val layout = toMeta(s).layout
+      val postings = keep(dirs
+        .flatMap(d => plainBlocks(spark, d, layout))
+        .map(decodePostings)
+        .reduceOption(_ union _)
+        .getOrElse {
+          import spark.implicits._
+          Seq.empty[(String, Long, Int, Int)].toDF("term", "docId", "tf", "dl")
+        })
+      val lensPaths = dirs.map(d => metaTablePath(d, DocLensName, LegacyDocLensName))
+      val docLens =
+        if (lensPaths.forall(_.nonEmpty))
+          keep(lensPaths.flatten
+            .map(p => spark.read.parquet(p).select(col("docId"), col("len")))
+            .reduce(_ union _))
+        else // pre-doclens segment: derive lengths from the decoded rows
+          postings.select(col("docId"), col("dl").cast("long").as("len")).distinct()
+      buildFromPostings(postings, docLens, target, layout)
+    }
+
+    /** Combined counts from per-segment stats, exact cross-segment
+      * distinct vocabulary, then the atomic `_segments.json` replace. The
+      * vocabulary union reads each segment's `vocab` table (one row per
+      * DISTINCT term, written at build completion) — NOT the block-level
+      * term column, which carries one entry per (term, blockId) row and
+      * made every refresh pay a near-full index metadata scan. Pre-vocab
+      * segments fall back to their block term columns.
+      */
+    override protected def commit(dir: String, segs: Seq[String],
+        s: SegmentStore.Segments, maxDocId: Long): SegmentStore.Segments = {
+      val spark = SparkSession.active
+      val layout = toMeta(s).layout
+      val dirs = segs.map(resolve(dir, _))
+      val perSeg = dirs.map(readStatsPlain) // NEVER the segmented view of "."
+      val vocab = dirs
+        .flatMap { d =>
+          metaTablePath(d, VocabName, LegacyVocabName)
+            .map(p => spark.read.parquet(p).select(col("term")))
+            .orElse(plainBlocks(spark, d, layout).map(_.select(col("term"))))
+        }
+        .reduceOption(_ union _)
+        .fold(0L)(_.distinct().count())
+      val combined = CorpusStats(
+        perSeg.map(_._1.nDocs).sum, vocab, perSeg.map(_._1.totalLen).sum)
+      val m = SegmentStore.Segments(segs, statsParams(combined, layout), maxDocId)
+      writeList(dir, m)
+      m
+    }
+  }
+
+  def isSegmented(dir: String): Boolean = Store.isSegmented(dir)
+
+  def readSegments(dir: String): SegmentsMeta = toMeta(Store.readList(dir))
+
   /** Incrementally add `newDocs` to the index at `dir` WITHOUT touching
-    * committed data: the delta is built as a brand-new immutable segment
-    * (reusing [[build]], so the refresh itself checkpoints per shard and
-    * resumes after a kill), then committed by atomically replacing
-    * `_segments.json`. Readers see the old index until the commit instant
-    * and the full index after it; a kill anywhere before the commit
-    * leaves the old index intact and the half-built segment invisible —
-    * re-running the same refresh resumes its remaining shards.
+    * committed data, under the [[SegmentStore]] commit protocol: the
+    * delta is built as a brand-new immutable segment (reusing [[build]],
+    * so the refresh itself checkpoints per shard and resumes after a
+    * kill), then committed by the `_segments.json` replace.
     *
     * Requirements: `newDocs.docId` must all exceed the committed
     * `maxDocId` (the dense-id append contract of
     * [[graft.sources.CorpusSource.withDenseDocIds]]) — checked with one
-    * tiny aggregation — so segments partition the corpus along the global
-    * docId grid. Because blockId = docId / blockSpan, at most one
+    * tiny aggregation. Because blockId = docId / blockSpan, at most one
     * (term, blockId) BLOCK straddles a segment boundary per term; all
     * query paths treat (term, blockId) as non-unique and their block
     * upper bounds remain sound (a doc's postings live in exactly one
@@ -463,261 +488,45 @@ object BlockIndex {
     * segments back into one.
     */
   def refresh(newDocs: DataFrame, dir: String,
-      genName: Option[String] = None): SegmentsMeta = {
-    val spark = newDocs.sparkSession
-    val meta = segMeta(spark, dir)
-    // a caller-keyed generation (e.g. a streaming micro-batch id) makes
-    // REPLAY detectable before any work: if its segment is already
-    // committed this refresh is a redelivery and must be a no-op — the
-    // exactly-once hook foreachBatch sinks rely on. Checked before the
-    // delta is even counted, because a replayed batch would otherwise be
-    // re-numbered past the committed maxDocId and silently double-commit.
-    genName.map(g => s"seg-$g").foreach { gen =>
-      if (isSegmented(dir) && readSegments(dir).segs.contains(gen))
-        return readSegments(dir)
-    }
-    val bounds = newDocs.agg(
-      min(col("docId")), max(col("docId")), count(lit(1))).head()
-    if (bounds.getLong(2) == 0L) { // empty delta: commit = current state
-      if (!isSegmented(dir)) writeSegments(dir, meta)
-      return readSegments(dir)
-    }
-    val (minNew, maxNew) = (bounds.getLong(0), bounds.getLong(1))
-    // default segment name = the docId RANGE: re-running the same
-    // refresh resumes the same directory's remaining shards (the resume
-    // contract, like build's, assumes the same delta content), while a
-    // different delta — e.g. after an abandoned attempt — gets a fresh
-    // directory instead of resuming half-built foreign shards
-    val gen = genName.map(g => s"seg-$g").getOrElse(s"seg-$minNew-$maxNew")
-    if (isSegmented(dir) && readSegments(dir).segs.contains(gen))
-      return readSegments(dir)
-    require(minNew > meta.maxDocId,
-      s"refresh docIds must exceed committed maxDocId=${meta.maxDocId}, got min=$minNew")
-    build(newDocs, s"$dir/$gen", meta.layout)
-    commitSegments(spark, dir, meta.segs :+ gen, meta.layout, maxNew)
-  }
+      genName: Option[String] = None): SegmentsMeta =
+    toMeta(Store.refresh(newDocs, col("docId"), dir, genName)(
+      (seg, s) => build(newDocs, seg, toMeta(s).layout)))
 
-  /** Commit a segment list: combined counts from per-segment stats, exact
-    * cross-segment distinct vocabulary, then the atomic `_segments.json`
-    * replace. The vocabulary union reads each segment's `vocab` table
-    * (one row per DISTINCT term, written at build completion) — NOT the
-    * block-level term column, which carries one entry per (term, blockId)
-    * row and made every refresh pay a near-full index metadata scan.
-    * Pre-vocab segments fall back to their block term columns.
+  /** Fold all committed segments back into ONE ([[SegmentStore.compact]]):
+    * block contents afterwards are byte-identical to a cold build over the
+    * surviving corpus.
     */
-  private def commitSegments(spark: SparkSession, dir: String,
-      segs: Seq[String], layout: Layout, maxDocId: Long): SegmentsMeta = {
-    val dirs = segs.map(s => if (s == ".") dir else s"$dir/$s")
-    val perSeg = dirs.map(readStatsPlain) // NEVER the segmented view of "."
-    val vocab = dirs
-      .flatMap { d =>
-        metaTablePath(d, VocabName, LegacyVocabName)
-          .map(p => spark.read.parquet(p).select(col("term")))
-          .orElse(plainBlocks(spark, d, layout).map(_.select(col("term"))))
-      }
-      .reduceOption(_ union _)
-      .fold(0L)(_.distinct().count())
-    val combined = CorpusStats(
-      perSeg.map(_._1.nDocs).sum, vocab, perSeg.map(_._1.totalLen).sum)
-    val m = SegmentsMeta(segs, combined, layout, maxDocId)
-    writeSegments(dir, m)
-    m
-  }
+  def compact(dir: String): SegmentsMeta = toMeta(Store.compact(dir))
 
-  /** Fold all committed segments back into ONE (the new segment is built
-    * from the DECODED postings of every live block — no re-tokenization),
-    * then commit the singleton segment list and delete the old segment
-    * data. Block contents after compaction are byte-identical to a cold
-    * build over the union corpus (spec-asserted): both paths feed
-    * docId-sorted postings of the same (term, blockId) groups through
-    * [[VarByteAgg]].
-    */
-  def compact(dir: String): SegmentsMeta = {
-    val tomb = readTombMeta(dir).filter(_.gens.nonEmpty)
-    require(isSegmented(dir) || tomb.nonEmpty,
-      s"$dir is not a segmented index and has no tombstones to fold out")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val meta = segMeta(spark, dir)
-    if (meta.segs.size == 1 && meta.segs.head != "." && tomb.isEmpty) {
-      // nothing to fold, but a killed earlier compaction may have left
-      // unreferenced data behind — reclaim it now
-      sweepUnreferenced(dir, meta)
-      return meta
-    }
-    // named by corpus identity: append-only ⇒ (maxDocId, nDocs) pins the
-    // doc set, and the committed tombstone row count pins the delete set
-    // on top — a killed compaction resumes its own directory; a later
-    // compaction after further refreshes/deletes gets a fresh one.
-    // maxDocId survives even when the max-id doc was deleted: ids are
-    // never reused, so the refresh floor must not drop.
-    val gen = s"seg-compact-${meta.maxDocId}-${meta.stats.nDocs}" +
-      tomb.fold("")(t => s"-d${t.nIds}")
-    // tombstoned docs are dropped HERE — the physical reclaim: postings
-    // and doc lengths both filter, so the rebuilt segment's completion
-    // artifacts (nDocs, totalLen, vocabulary, df) are exactly those of a
-    // cold build over the surviving corpus (spec-asserted byte-identical)
-    val postings = liveOnly(spark, dir, decodePostings(readBlocks(spark, dir)))
-    val docLens = liveOnly(spark, dir, readDocLens(spark, dir))
-    buildFromPostings(postings, docLens, s"$dir/$gen", meta.layout)
-    val committed = commitSegments(spark, dir, Seq(gen), meta.layout, meta.maxDocId)
-    // a kill between the commit above and this clear re-runs the fold on
-    // the next compact (the anti-join is then a no-op): wasteful once,
-    // never wrong — tombstones only ever filter docs already absent
-    clearTombstones(dir)
-    sweepUnreferenced(dir, committed)
-    committed
-  }
-
-  /** Bounded-write-amplification maintenance — the Lucene
-    * TieredMergePolicy shape, minimally: policy triggers, partial merge.
-    *
-    *   - Tombstone-fraction trigger: when committed tombstone rows
-    *     exceed `tombFraction` of the docId space, escalate to the full
-    *     [[compact]] — a delete set that big should be reclaimed, not
-    *     carried per query.
-    *   - Segment-count trigger: when the committed segment count
-    *     exceeds `maxSegments`, fold the `mergeFactor` SMALLEST
-    *     segments (by on-disk bytes — the size-ratio half of the
-    *     policy: small segments merge together, the big ones are left
-    *     alone) into ONE new segment built from their stored decoded
-    *     rows. Never the whole index: under steady ingest each doc is
-    *     rewritten O(log n) times total, vs the every-N-batches full
-    *     fold's O(n²/N) cumulative writes.
-    *
-    * Partial merges do NOT apply tombstones (the tombstone files must
-    * keep gating the untouched segments, and stats keep the documented
-    * stale-until-compact semantics — a merge changes WHERE rows live,
-    * never WHICH rows exist), and never lower maxDocId. No-op below
-    * both triggers. Single-writer maintenance, like [[compact]].
+  /** Tiered maintenance ([[SegmentStore.compactTiered]]): under steady
+    * ingest each doc is rewritten O(log n) times total, vs the
+    * every-N-batches full fold's O(n²/N) cumulative writes. Partial
+    * merges keep the documented stale-until-compact stats.
     */
   def compactTiered(dir: String, maxSegments: Int, mergeFactor: Int = 0,
-      tombFraction: Double = 0.2): SegmentsMeta = {
-    require(maxSegments >= 2, s"maxSegments must be >= 2, got $maxSegments")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val meta = segMeta(spark, dir)
-    val tomb = readTombMeta(dir).filter(_.gens.nonEmpty)
-    if (tomb.exists(t => meta.maxDocId >= 0 &&
-        t.nIds > tombFraction * (meta.maxDocId + 1)))
-      return compact(dir)
-    if (!isSegmented(dir) || meta.segs.size <= maxSegments) return meta
-    val mf = math.min(
-      if (mergeFactor >= 2) mergeFactor else math.max(2, maxSegments / 2),
-      meta.segs.size)
-    val skipTop = (n: String) => n.startsWith("seg-") || n.startsWith("tomb-")
-    val victims = meta.segs
-      .map(s => s -> MetaIO.dirBytes(if (s == ".") dir else s"$dir/$s", skipTop))
-      .sortBy { case (s, b) => (b, s) }
-      .take(mf).map(_._1)
-    val vDirs = victims.map(s => if (s == ".") dir else s"$dir/$s")
-    // deterministic name from the merged set's identity: a killed merge
-    // re-runs into its own directory (build resumes per shard)
-    val gen = "seg-tier-" + java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(victims.mkString("|"))) +
-      s"-${victims.size}"
-    val postings = vDirs
-      .flatMap(d => plainBlocks(spark, d, meta.layout))
-      .map(decodePostings)
-      .reduceOption(_ union _)
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, Long, Int, Int)].toDF("term", "docId", "tf", "dl")
-      }
-    val lensPaths = vDirs.map(d => metaTablePath(d, DocLensName, LegacyDocLensName))
-    val docLens =
-      if (lensPaths.forall(_.nonEmpty))
-        lensPaths.flatten
-          .map(p => spark.read.parquet(p).select(col("docId"), col("len")))
-          .reduce(_ union _)
-      else // pre-doclens victim: derive lengths from the decoded rows
-        postings.select(col("docId"), col("dl").cast("long").as("len")).distinct()
-    buildFromPostings(postings, docLens, s"$dir/$gen", meta.layout)
-    val committed = commitSegments(spark, dir,
-      meta.segs.filterNot(victims.contains) :+ gen, meta.layout, meta.maxDocId)
-    sweepUnreferenced(dir, committed)
-    committed
-  }
-
-  /** Delete every segment directory (and, when the root-held base `"."`
-    * is unreferenced, the root's own index artifacts) that the committed
-    * segment list does not reference — the old segments a compaction
-    * just folded, AND leftovers of any EARLIER kill between a commit and
-    * its cleanup, which a targeted delete of `meta.segs` alone would
-    * leak forever. Compaction is a maintenance operation under the
-    * index's single-writer contract: it must not run concurrently with a
-    * refresh (whose half-built segment would look unreferenced) — the
-    * streaming sink serializes them by construction.
-    */
-  private def sweepUnreferenced(dir: String, committed: SegmentsMeta): Unit = {
-    val referenced = committed.segs.toSet
-    MetaIO.list(dir)
-      .filter(n => n.startsWith("seg-") && !referenced.contains(n))
-      .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
-    if (!referenced.contains(".")) {
-      MetaIO.list(dir).filter(_.startsWith("shard="))
-        .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
-      MetaIO.deleteIfExists(s"$dir/$ManifestName")
-      MetaIO.deleteIfExists(s"$dir/$StatsName")
-      MetaIO.deleteIfExists(s"$dir/$DocLensName", recursive = true)
-      MetaIO.deleteIfExists(s"$dir/$VocabName", recursive = true)
-      MetaIO.deleteIfExists(s"$dir/$LegacyDocLensName", recursive = true)
-      MetaIO.deleteIfExists(s"$dir/$LegacyVocabName", recursive = true)
-    }
-  }
+      tombFraction: Double = SegmentStore.TombFraction): SegmentsMeta =
+    toMeta(Store.compactTiered(dir, maxSegments, mergeFactor, tombFraction))
 
   /** Highest committed docId of the index at `dir` (−1 for an empty
     * index) — the floor for externally-assigned refresh ids.
     */
   def committedMaxDocId(spark: SparkSession, dir: String): Long =
-    segMeta(spark, dir).maxDocId
+    Store.state(dir).maxDocId
 
   // ------------------------------------------------------------------
-  // Document deletion (tombstones)
+  // Document deletion (tombstones, kept by [[SegmentStore]] for every
+  // index)
   // ------------------------------------------------------------------
 
-  /** Committed tombstone state: the parquet generation directories
-    * holding deleted docIds, plus the total committed row count (used
-    * for compaction naming and the broadcast-vs-shuffle filter choice;
-    * it counts committed delete ROWS, which may include repeats or ids
-    * absent from the index — both harmless to the anti-join).
-    */
-  final case class TombMeta(gens: Seq[String], nIds: Long)
+  type TombMeta = SegmentStore.TombMeta
+  val TombMeta = SegmentStore.TombMeta
+  val TombMetaName = SegmentStore.TombMetaName
+  val BroadcastTombCap = SegmentStore.BroadcastTombCap
 
-  val TombMetaName = "_tombstones.json"
+  def readTombMeta(dir: String): Option[TombMeta] = SegmentStore.readTombMeta(dir)
 
-  /** Above this many committed tombstone rows the query-side filter
-    * stops hinting broadcast and lets the planner shuffle — a delete
-    * set that big should be [[compact]]ed away, not carried per query.
-    */
-  val BroadcastTombCap = 4000000L
-
-  def readTombMeta(dir: String): Option[TombMeta] =
-    if (!MetaIO.exists(s"$dir/$TombMetaName")) None
-    else {
-      val s = MetaIO.readString(s"$dir/$TombMetaName")
-      val n = """"nIds":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-        .getOrElse(0L)
-      val gens = """"gens":\[([^\]]*)\]""".r.findFirstMatchIn(s).map(_.group(1))
-        .getOrElse("").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq
-      Some(TombMeta(gens, n))
-    }
-
-  private def writeTombMeta(dir: String, m: TombMeta): Unit = {
-    val gens = m.gens.map("\"" + _ + "\"").mkString("[", ",", "]")
-    MetaIO.writeAtomic(s"$dir/$TombMetaName",
-      s"""{"nIds":${m.nIds},"nonce":${System.nanoTime()},"gens":$gens}"""
-        .getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** The committed tombstoned docIds as a relation (None when no delete
-    * was ever committed — the fast path pays one metadata existence
-    * check and nothing else).
-    */
   def tombstones(spark: SparkSession, dir: String): Option[DataFrame] =
-    readTombMeta(dir).filter(_.gens.nonEmpty).map { m =>
-      m.gens.map(g => spark.read.parquet(s"$dir/$g").select(col("docId")))
-        .reduce(_ unionByName _)
-    }
+    SegmentStore.tombstones(spark, dir)
 
   /** Mark documents DELETED without touching committed segment data —
     * Lucene's tombstone model, the shape a 100 TB index needs (a
@@ -733,64 +542,24 @@ object BlockIndex {
     * Each call commits one immutable tombstone generation named by the
     * delete set's (min, max, count) — like [[refresh]], a re-run of the
     * SAME delete (a redelivered message, a retried job) is detected
-    * before any work and is a no-op; the resume contract assumes equal
-    * content for equal bounds. A kill between the parquet write and the
-    * meta commit leaves an invisible directory that the re-run
-    * overwrites. Ids never come back: deletion is monotone until
-    * compaction, and docIds are never reused ([[refresh]]'s floor is
-    * maxDocId, which deletion does not lower).
+    * before any work and is a no-op; a caller-keyed `genName` (a
+    * streaming micro-batch id) is detected before the delete set is even
+    * counted. A kill between the parquet write and the meta commit
+    * leaves an invisible directory that the re-run overwrites. Ids never
+    * come back: deletion is monotone until compaction, and docIds are
+    * never reused ([[refresh]]'s floor is maxDocId, which deletion does
+    * not lower). Every index's delete is this one, on its own directory.
     *
     * `ids` must have a `docId` column; ids absent from the index are
     * tolerated (the anti-join ignores them).
     */
   def delete(ids: DataFrame, dir: String,
-      genName: Option[String] = None): TombMeta = {
-    val cur = readTombMeta(dir).getOrElse(TombMeta(Nil, 0L))
-    // a caller-keyed generation (e.g. a streaming micro-batch id) makes
-    // replay detectable BEFORE the delete set is even counted — the
-    // exactly-once hook foreachBatch delete sinks rely on, exactly like
-    // [[refresh]]'s genName
-    genName.map(g => s"tomb-$g").foreach { gen =>
-      if (cur.gens.contains(gen)) return cur
-    }
-    val b = ids.agg(min(col("docId")), max(col("docId")), count(lit(1))).head()
-    if (b.getLong(2) == 0L) return cur
-    val gen = genName.map(g => s"tomb-$g")
-      .getOrElse(s"tomb-${b.getLong(0)}-${b.getLong(1)}-${b.getLong(2)}")
-    if (cur.gens.contains(gen)) return cur
-    ids.select(col("docId").cast("long").as("docId"))
-      .write.mode("overwrite").parquet(s"$dir/$gen")
-    val m = TombMeta(cur.gens :+ gen, cur.nIds + b.getLong(2))
-    writeTombMeta(dir, m)
-    m
-  }
-
-  /** Drop all tombstone state — called after a compaction physically
-    * removed the deleted docs. Removes EVERY `tomb-*` directory
-    * (committed or the leftover of a killed [[delete]]), then the meta.
-    */
-  private[index] def clearTombstones(dir: String): Unit = {
-    MetaIO.deleteIfExists(s"$dir/$TombMetaName")
-    MetaIO.list(dir).filter(_.startsWith("tomb-"))
-      .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
-  }
-
-  /** Filter a relation with a `docId` column down to live (untombstoned)
-    * docs. No tombstones ⇒ the relation is returned untouched (zero plan
-    * change); a small committed delete set broadcasts; past
-    * [[BroadcastTombCap]] the planner chooses (compact instead of
-    * carrying that per query).
-    */
-  private def liveOnly(spark: SparkSession, dir: String, rel: DataFrame): DataFrame =
-    readTombMeta(dir).filter(_.gens.nonEmpty).fold(rel) { m =>
-      val t = tombstones(spark, dir).get.distinct()
-      rel.join(if (m.nIds <= BroadcastTombCap) broadcast(t) else t,
-        Seq("docId"), "left_anti")
-    }
+      genName: Option[String] = None): TombMeta =
+    SegmentStore.delete(ids, dir, genName)
 
   /** The materialized doc-length relation across all segments. */
   private[graft] def readDocLens(spark: SparkSession, dir: String): DataFrame =
-    segDirs(dir)
+    Store.segDirs(dir)
       .flatMap(d => metaTablePath(d, DocLensName, LegacyDocLensName))
       .map(p => spark.read.parquet(p).select(col("docId"), col("len")))
       .reduceOption(_ union _)
@@ -808,7 +577,7 @@ object BlockIndex {
     * posting blocks touched.
     */
   def liveDocIds(spark: SparkSession, dir: String): DataFrame =
-    liveOnly(spark, dir, readDocLens(spark, dir).select(col("docId")))
+    liveOnly(dir, readDocLens(spark, dir).select(col("docId")))
 
   /** Driver-local twin of the build's `pmod(xxhash64(term), nShards)` —
     * same XXH64 with Spark's default seed 42, so query planning computes
@@ -857,12 +626,12 @@ object BlockIndex {
     // tombstoned docs are filtered out of the postings relation, so every
     // query mode the bundle serves excludes them; stats/df stay those of
     // the last build (Lucene's stale-until-compact semantics, see delete)
-    val decoded = liveOnly(spark, dir, decodePostings(blocks))
+    val decoded = liveOnly(dir, decodePostings(blocks))
     val postings = decoded.select(col("term"), col("docId"), col("tf"))
     // prefer the materialized doc-length parquet (written at build time);
     // decode-and-distinct over the whole index is only the fallback for
     // pre-doclens indexes
-    val docLensPaths = segDirs(dir)
+    val docLensPaths = Store.segDirs(dir)
       .flatMap(d => metaTablePath(d, DocLensName, LegacyDocLensName))
     val docLens =
       if (docLensPaths.nonEmpty)
@@ -945,9 +714,7 @@ object BlockIndex {
     */
   private def statsMtime(dir: String): Long = {
     val p = if (isSegmented(dir)) s"$dir/$SegmentsName" else s"$dir/$StatsName"
-    val s = MetaIO.readString(p)
-    """"nonce":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-      .getOrElse(MetaIO.mtimeMillis(p))
+    MetaIO.readMeta(p).get("nonce").getOrElse(MetaIO.mtimeMillis(p))
   }
 
   /** Current stats mtime for `dir`, evicting the dir's stale entries when
@@ -1019,7 +786,7 @@ object BlockIndex {
       * per-partition TakeOrdered + driver merge of nPartitions·k rows.
       */
     def scoreRel(rel: DataFrame): DataFrame =
-      liveOnly(spark, dir, decodePostingsWithBlock(
+      liveOnly(dir, decodePostingsWithBlock(
         rel.select(col("term"), col("blockId"), col("bytes"))
           .repartition(col("blockId"))))
         .join(idfDf, "term")
@@ -1165,7 +932,7 @@ object BlockIndex {
           termBlocks.where(col("blockId").isin(pairs.map(_._2).distinct: _*))
         case _ => termBlocks
       }
-      val base = liveOnly(spark, dir, decodePostingsWithBlock(
+      val base = liveOnly(dir, decodePostingsWithBlock(
           blocksRel.select(col("term"), col("blockId"), col("bytes"))
             .repartition(col("blockId"))))
         .join(broadcast(termDf.select(col("term"), col("idf"))), "term")

@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import SegmentStore.liveOnly
 
 /** Character k-gram (default trigram) index over RAW document content +
   * literal substring search — the code-grep capability the analyzed word
@@ -138,12 +139,12 @@ object GramIndex {
       idCol: String, textCol: String, needle: String,
       ctx: Int = 40): DataFrame = {
     require(ctx >= 0, s"ctx must be >= 0, got $ctx")
-    val m = gramMeta(spark, dir)
+    val m = gramMeta(dir)
     val sel = rarestGrams(spark, dir, allGrams(needle, m.k), m.nShards,
       MaxQueryGrams)
-    statsOf(liveOnly(spark, dir,
+    statsOf(liveOnly(dir,
       matchedVerify(docs, idCol, textCol, needle, sel,
-        indexedPostings(spark, dir, sel, m.nShards))), needle, ctx)
+        indexedPostings(dir, sel, m.nShards))), needle, ctx)
   }
 
   private def statsOf(matched: DataFrame, needle: String,
@@ -183,16 +184,16 @@ object GramIndex {
     */
   def grepLinesIndexed(spark: SparkSession, dir: String, docs: DataFrame,
       idCol: String, textCol: String, needle: String): DataFrame = {
-    val m = gramMeta(spark, dir)
+    val m = gramMeta(dir)
     val sel = rarestGrams(spark, dir, allGrams(needle, m.k), m.nShards,
       MaxQueryGrams)
     val base = docs.select(col(idCol).cast("long").as("docId"),
       coalesce(col(textCol), lit("")).as("__t"))
     val cand =
       if (sel.isEmpty) base
-      else base.join(candidates(indexedPostings(spark, dir, sel, m.nShards),
+      else base.join(candidates(indexedPostings(dir, sel, m.nShards),
         sel), Seq("docId"), "left_semi")
-    liveOnly(spark, dir, grepLines(cand, "docId", "__t", needle))
+    liveOnly(dir, grepLines(cand, "docId", "__t", needle))
   }
 
   /** grep -C: every line within `ctx` lines of a match — (docId, line_no,
@@ -235,16 +236,16 @@ object GramIndex {
   def grepLinesContextIndexed(spark: SparkSession, dir: String,
       docs: DataFrame, idCol: String, textCol: String, needle: String,
       ctx: Int): DataFrame = {
-    val m = gramMeta(spark, dir)
+    val m = gramMeta(dir)
     val sel = rarestGrams(spark, dir, allGrams(needle, m.k), m.nShards,
       MaxQueryGrams)
     val base = docs.select(col(idCol).cast("long").as("docId"),
       coalesce(col(textCol), lit("")).as("__t"))
     val cand =
       if (sel.isEmpty) base
-      else base.join(candidates(indexedPostings(spark, dir, sel, m.nShards),
+      else base.join(candidates(indexedPostings(dir, sel, m.nShards),
         sel), Seq("docId"), "left_semi")
-    liveOnly(spark, dir, grepLinesContext(cand, "docId", "__t", needle, ctx))
+    liveOnly(dir, grepLinesContext(cand, "docId", "__t", needle, ctx))
   }
 
   /** Corpus-scale literal sed: rewrite every occurrence of `needle` to
@@ -265,7 +266,7 @@ object GramIndex {
       idCol: String, textCol: String, needle: String,
       replacement: String): DataFrame = {
     require(needle.nonEmpty, "empty needle matches everything; refusing")
-    val m = gramMeta(spark, dir)
+    val m = gramMeta(dir)
     val sel = rarestGrams(spark, dir, allGrams(needle, m.k), m.nShards,
       MaxQueryGrams)
     val base = docs.select(col(idCol).cast("long").as("docId"),
@@ -274,7 +275,7 @@ object GramIndex {
       base.select(col("docId"),
         replace(col("content"), lit(needle), lit(replacement)).as("content"))
     else {
-      val cand = candidates(indexedPostings(spark, dir, sel, m.nShards), sel)
+      val cand = candidates(indexedPostings(dir, sel, m.nShards), sel)
       val hit = base.join(cand, Seq("docId"), "left_semi")
         .select(col("docId"),
           replace(col("content"), lit(needle), lit(replacement))
@@ -288,8 +289,7 @@ object GramIndex {
   // Persisted sharded layout
   // ---------------------------------------------------------------------
 
-  private def metaPath(dir: String) = s"$dir/_grammeta.json"
-  private def dfDir(dir: String) = s"$dir/_gramdf"
+  private val DfName = "_gramdf"
 
   /** Build the persisted gram index: one shuffle (repartition by shard),
     * files sorted by (gram, docId), plus a per-gram df table (one row
@@ -300,40 +300,8 @@ object GramIndex {
     */
   def build(docs: DataFrame, idCol: String, textCol: String, dir: String,
       k: Int = 3, nShards: Int = 16): Unit =
-    buildFromPostings(gramPostings(docs, idCol, textCol, k), dir, k, nShards)
-
-  /** The write half of [[build]], also the engine of [[compact]] (which
-    * re-segments from STORED (gram, docId) rows — no re-gramming).
-    */
-  private def buildFromPostings(rows: DataFrame, dir: String,
-      k: Int, nShards: Int): Unit = {
-    require(nShards > 0, s"nShards must be positive, got $nShards")
-    MetaIO.deleteIfExists(dir, recursive = true)
-    rows
-      .withColumn("shard",
-        pmod(xxhash64(col("gram")), lit(nShards.toLong)).cast("int"))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("gram"), col("docId"))
-      .write.mode("overwrite").partitionBy("shard").parquet(dir)
-    val spark = rows.sparkSession
-    val shardPaths = (0 until nShards).map(s => s"$dir/shard=$s")
-      .filter(MetaIO.exists)
-    val maxDocId =
-      if (shardPaths.isEmpty) -1L
-      else {
-        val back = spark.read.option("basePath", dir).parquet(shardPaths: _*)
-        back.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-          .withColumn("shard",
-            pmod(xxhash64(col("gram")), lit(nShards.toLong)).cast("int"))
-          .repartition(col("shard"))
-          .sortWithinPartitions(col("gram"))
-          .write.mode("overwrite").partitionBy("shard").parquet(dfDir(dir))
-        back.agg(max(col("docId"))).head().getLong(0)
-      }
-    MetaIO.writeAtomic(metaPath(dir),
-      s"""{"k":$k,"nShards":$nShards,"maxDocId":$maxDocId}"""
-        .getBytes("UTF-8"))
-  }
+    Store.writeSegment(gramPostings(docs, idCol, textCol, k), dir,
+      Seq("k" -> k.toLong, "nShards" -> nShards.toLong), -1L)
 
   /** The `maxGrams` rarest of the needle's grams by stored df (absent
     * grams are df 0 — rarest of all: they prove emptiness with one
@@ -366,11 +334,8 @@ object GramIndex {
   }
 
   def readMeta(dir: String): (Int, Int) = {
-    val s = MetaIO.readString(metaPath(dir))
-    def f(key: String) = (s""""$key"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(s)
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"malformed ${metaPath(dir)}: $s"))
-    (f("k"), f("nShards"))
+    val j = Store.readMarker(dir)
+    (j("k").toInt, j("nShards").toInt)
   }
 
   /** Posting rows for exactly these grams, read from ONLY the shard
@@ -379,18 +344,10 @@ object GramIndex {
     * across the live segments when the root is segmented (a doc's grams
     * live in exactly one segment, so the union is disjoint by docId).
     */
-  private def indexedPostings(spark: SparkSession, dir: String,
-      grams: Seq[String], nShards: Int): DataFrame = {
-    val shards = grams.map(g => BlockIndex.shardOf(g, nShards))
-      .distinct.sorted
-    segDirs(dir).flatMap { seg =>
-      val paths = shards.map(sh => s"$seg/shard=$sh").filter(MetaIO.exists)
-      if (paths.isEmpty) None
-      else Some(spark.read.option("basePath", seg).parquet(paths: _*)
-        .select(col("gram"), col("docId")))
-    }.reduceOption(_ union _).getOrElse(
-      spark.range(0).select(col("id").as("docId"), lit("").as("gram")))
-  }
+  private def indexedPostings(dir: String, grams: Seq[String],
+      nShards: Int): DataFrame =
+    Store.storedRows(Store.segDirs(dir),
+      Some(grams.map(g => BlockIndex.shardOf(g, nShards)).distinct.sorted))
 
   /** Substring search against the persisted index — driver-routed shard
     * reads, then the same candidates-then-verify plan as
@@ -399,12 +356,12 @@ object GramIndex {
   def substringSearchIndexed(spark: SparkSession, dir: String,
       docs: DataFrame, idCol: String, textCol: String,
       needle: String): DataFrame = {
-    val m = gramMeta(spark, dir)
+    val m = gramMeta(dir)
     val sel = rarestGrams(spark, dir, allGrams(needle, m.k), m.nShards,
       MaxQueryGrams)
-    liveOnly(spark, dir,
+    liveOnly(dir,
       matchedVerify(docs, idCol, textCol, needle, sel,
-        indexedPostings(spark, dir, sel, m.nShards)))
+        indexedPostings(dir, sel, m.nShards)))
       .select(col("docId"))
   }
 
@@ -567,28 +524,41 @@ object GramIndex {
     }
 
     /** Class body after `[`. Some(Some(cs)) = expandable to literal
-      * chars cs; Some(None) = valid but opaque; None = unterminated.
+      * chars cs; Some(None) = valid but opaque; None = unterminated or
+      * outside the subset (nested classes, `&&` intersections).
       */
     def parseClass(): Option[Option[Seq[Char]]] = {
       var opaque = false
       if (i < n && pattern.charAt(i) == '^') { opaque = true; i += 1 }
+      // one class element at i, raw or escaped, advancing past it:
+      // Some(Some(c)) = literal c, Some(None) = a class escape (\d …),
+      // None = a trailing backslash
+      def elem(): Option[Option[Char]] =
+        if (pattern.charAt(i) != '\\') { i += 1; Some(Some(pattern.charAt(i - 1))) }
+        else if (i + 1 >= n) None
+        else {
+          val e = pattern.charAt(i + 1)
+          i += 2
+          Some(if (LiteralEscapes.indexOf(e) >= 0) Some(e) else None)
+        }
       val chars = Seq.newBuilder[Char]
       var first = true
       while (i < n && (pattern.charAt(i) != ']' || first)) {
-        val c = pattern.charAt(i)
-        if (c == '\\') {
-          if (i + 1 >= n) return None
-          val e = pattern.charAt(i + 1)
-          if (LiteralEscapes.indexOf(e) >= 0) chars += e
-          else opaque = true // \d etc. inside the class
-          i += 2
-        } else if (i + 2 < n && pattern.charAt(i + 1) == '-' &&
-            pattern.charAt(i + 2) != ']') {
-          val (lo, hi) = (c, pattern.charAt(i + 2))
-          if (lo <= hi && hi - lo < MaxClassExpand) chars ++= (lo to hi)
-          else opaque = true
-          i += 3
-        } else { chars += c; i += 1 }
+        if (pattern.charAt(i) == '[' || pattern.startsWith("&&", i)) return None
+        // a range's endpoints are whole elements, so `[\]-a]` is the
+        // range ]..a and `[+-\]]` the range +..]
+        val lo = elem().getOrElse(return None)
+        if (i + 1 < n && pattern.charAt(i) == '-' && pattern.charAt(i + 1) != ']') {
+          i += 1
+          (lo, elem().getOrElse(return None)) match {
+            case (Some(a), Some(b)) if a <= b && b - a < MaxClassExpand =>
+              chars ++= (a to b)
+            case _ => opaque = true
+          }
+        } else lo match {
+          case Some(c) => chars += c
+          case None => opaque = true
+        }
         first = false
       }
       if (i >= n) return None // unterminated class
@@ -830,7 +800,7 @@ object GramIndex {
   def grepLinesRegexIndexed(spark: SparkSession, dir: String,
       docs: DataFrame, idCol: String, textCol: String,
       pattern: String): DataFrame = {
-    val m = gramMeta(spark, dir)
+    val m = gramMeta(dir)
     val q0 = regexGramQuery(pattern, m.k).getOrElse(GramQ.Any)
     val q = pruneGramQuery(q0,
       readGramDfs(spark, dir, GramQ.gramsOf(q0), m.nShards))
@@ -838,8 +808,8 @@ object GramIndex {
     val base = docs.select(col(idCol).cast("long").as("docId"),
       coalesce(col(textCol), lit("")).as("__t"))
     val cand = gramCandJoin(base, q,
-      indexedPostings(spark, dir, sel, m.nShards))
-    liveOnly(spark, dir, grepLinesRegex(cand, "docId", "__t", pattern))
+      indexedPostings(dir, sel, m.nShards))
+    liveOnly(dir, grepLinesRegex(cand, "docId", "__t", pattern))
   }
 
   /** Batched substring search against the persisted index — the
@@ -859,7 +829,7 @@ object GramIndex {
       needles: Seq[String]): DataFrame = {
     require(needles.nonEmpty && needles.forall(_.nonEmpty),
       "needles must be non-empty")
-    val meta0 = gramMeta(spark, dir)
+    val meta0 = gramMeta(dir)
     val (k, nShards) = (meta0.k, meta0.nShards)
     val t = coalesce(col(textCol), lit(""))
     val base = docs.select(col(idCol).cast("long").as("docId"), t.as("__t"))
@@ -878,7 +848,7 @@ object GramIndex {
       if (grammed.isEmpty) None
       else {
         val unionGrams = grammed.flatMap(gramsByNeedle).distinct
-        val postings = indexedPostings(spark, dir, unionGrams, nShards)
+        val postings = indexedPostings(dir, unionGrams, nShards)
           .where(col("gram").isin(unionGrams: _*))
         // (gram, needle, required): a gram may serve several needles
         val mapping = grammed.flatMap(n =>
@@ -903,7 +873,7 @@ object GramIndex {
           .where(contains(col("__t"), col("needle")))
           .select(col("needle"), col("docId")))
       }
-    liveOnly(spark, dir,
+    liveOnly(dir,
       (verifiedGrammed.toSeq ++ verifiedScanned.toSeq).reduce(_ union _))
   }
 
@@ -918,11 +888,10 @@ object GramIndex {
     if (grams.isEmpty) return Map.empty
     val shards = grams.map(g => BlockIndex.shardOf(g, nShards))
       .distinct.sorted
-    segDirs(dir).flatMap { seg =>
-      val paths = shards.map(sh => s"${dfDir(seg)}/shard=$sh")
-        .filter(MetaIO.exists)
+    Store.segDirs(dir).flatMap { seg =>
+      val paths = SegmentStore.shardPaths(s"$seg/$DfName", shards)
       if (paths.isEmpty) None
-      else Some(spark.read.option("basePath", dfDir(seg))
+      else Some(spark.read.option("basePath", s"$seg/$DfName")
         .parquet(paths: _*)
         .where(col("gram").isin(grams: _*))
         .select(col("gram"), col("df")))
@@ -954,22 +923,20 @@ object GramIndex {
   def regexSearchIndexed(spark: SparkSession, dir: String,
       docs: DataFrame, idCol: String, textCol: String,
       pattern: String): DataFrame = {
-    val m = gramMeta(spark, dir)
+    val m = gramMeta(dir)
     val q0 = regexGramQuery(pattern, m.k).getOrElse(GramQ.Any)
     val q = pruneGramQuery(q0,
       readGramDfs(spark, dir, GramQ.gramsOf(q0), m.nShards))
     val sel = GramQ.gramsOf(q)
-    liveOnly(spark, dir,
+    liveOnly(dir,
       regexVerify(docs, idCol, textCol, pattern, q,
-        indexedPostings(spark, dir, sel, m.nShards)))
+        indexedPostings(dir, sel, m.nShards)))
   }
 
   // ---------------------------------------------------------------------
-  // Segments (incremental refresh) + tombstone deletes — the same
-  // Lucene/LSM model as BlockIndex/PositionalIndex, gram-index-sized:
-  // each segment is a complete plain gram index (its _grammeta.json is
-  // the commit marker), `_gramsegments.json` is the atomically-replaced
-  // commit point, and deletes are the shared tombstone files.
+  // Segments (incremental refresh) + tombstone deletes: the
+  // [[SegmentStore]] lifecycle, gram-index-sized — each segment is a
+  // complete plain gram index, `_gramsegments.json` is the segment list
   // ---------------------------------------------------------------------
 
   val GramSegmentsName = "_gramsegments.json"
@@ -981,211 +948,54 @@ object GramIndex {
   final case class GramSegMeta(
       segs: Seq[String], k: Int, nShards: Int, maxDocId: Long)
 
-  def isSegmented(dir: String): Boolean =
-    MetaIO.exists(s"$dir/$GramSegmentsName")
+  private[graft] val Store = new ShardedStore("gseg-", GramSegmentsName,
+    "_grammeta.json", "gram index", "gram", Seq("gram", "docId"),
+    "gram string, docId long", Seq("k", "nShards"), Some(DfName), Nil, Nil)
+
+  private def toMeta(s: SegmentStore.Segments): GramSegMeta =
+    GramSegMeta(s.segs, s("k").toInt, s("nShards").toInt, s.maxDocId)
+
+  def isSegmented(dir: String): Boolean = Store.isSegmented(dir)
 
   /** True iff `dir` holds a committed gram index (plain or segmented). */
-  def exists(dir: String): Boolean =
-    MetaIO.exists(metaPath(dir)) || isSegmented(dir)
+  def exists(dir: String): Boolean = Store.exists(dir)
 
-  private def segDirs(dir: String): Seq[String] =
-    if (!isSegmented(dir)) Seq(dir)
-    else readSegments(dir).segs.map(s => if (s == ".") dir else s"$dir/$s")
+  def readSegments(dir: String): GramSegMeta = toMeta(Store.readList(dir))
 
-  def readSegments(dir: String): GramSegMeta = {
-    val s = MetaIO.readString(s"$dir/$GramSegmentsName")
-    val kv = """"(\w+)":(-?\d+)""".r.findAllMatchIn(s)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-    val segs = """"segs":\[([^\]]*)\]""".r.findFirstMatchIn(s).map(_.group(1))
-      .getOrElse("").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq
-    GramSegMeta(segs, kv("k").toInt, kv("nShards").toInt, kv("maxDocId"))
-  }
-
-  private def writeSegments(dir: String, m: GramSegMeta): Unit = {
-    val segsJson = m.segs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    MetaIO.writeAtomic(s"$dir/$GramSegmentsName",
-      s"""{"k":${m.k},"nShards":${m.nShards},"maxDocId":${m.maxDocId},"nonce":${System.nanoTime()},"segs":$segsJson}"""
-        .getBytes("UTF-8"))
-  }
-
-  /** Current metadata whether segmented or plain; plain roots read the
-    * maxDocId recorded at build completion (pre-maxDocId metas fall back
-    * to one column-pruned max scan).
-    */
-  private def gramMeta(spark: SparkSession, dir: String): GramSegMeta =
-    if (isSegmented(dir)) readSegments(dir)
-    else {
-      val (k, nShards) = readMeta(dir)
-      val maxDoc = """"maxDocId":(-?\d+)""".r
-        .findFirstMatchIn(MetaIO.readString(metaPath(dir)))
-        .map(_.group(1).toLong)
-        .getOrElse {
-          val paths = (0 until nShards).map(sh => s"$dir/shard=$sh")
-            .filter(MetaIO.exists)
-          if (paths.isEmpty) -1L
-          else spark.read.option("basePath", dir).parquet(paths: _*)
-            .agg(max(col("docId"))).head().getLong(0)
-        }
-      GramSegMeta(Seq("."), k, nShards, maxDoc)
-    }
+  /** Current metadata whether segmented or plain. */
+  private def gramMeta(dir: String): GramSegMeta = toMeta(Store.state(dir))
 
   /** Incrementally add `newDocs`' grams WITHOUT touching committed data:
-    * the delta is built as a brand-new complete segment and committed by
-    * atomically replacing `_gramsegments.json` — readers see the old
-    * index until the commit instant; a kill before it leaves the old
-    * index intact and the half-built segment invisible. `newDocs.docId`
-    * must exceed the committed maxDocId. A caller-keyed `genName` (e.g.
-    * a streaming micro-batch id) makes replay a detectable no-op before
-    * any work; the default range name makes a killed refresh rebuild its
-    * own directory.
+    * the delta becomes one new segment under the [[SegmentStore]] commit
+    * protocol. `newDocs.docId` must exceed the committed maxDocId; a
+    * caller-keyed `genName` (a streaming micro-batch id) makes replay a
+    * no-op before any work.
     */
   def refresh(newDocs: DataFrame, idCol: String, textCol: String,
-      dir: String, genName: Option[String] = None): GramSegMeta = {
-    val spark = newDocs.sparkSession
-    val meta = gramMeta(spark, dir)
-    genName.map(g => s"gseg-$g").foreach { gen =>
-      if (isSegmented(dir) && readSegments(dir).segs.contains(gen))
-        return readSegments(dir)
-    }
-    val b = newDocs.agg(min(col(idCol).cast("long")),
-      max(col(idCol).cast("long")), count(lit(1))).head()
-    if (b.getLong(2) == 0L) { // empty delta: commit = current state
-      if (!isSegmented(dir)) writeSegments(dir, meta)
-      return readSegments(dir)
-    }
-    val (minNew, maxNew) = (b.getLong(0), b.getLong(1))
-    val gen = genName.map(g => s"gseg-$g").getOrElse(s"gseg-$minNew-$maxNew")
-    if (isSegmented(dir) && readSegments(dir).segs.contains(gen))
-      return readSegments(dir)
-    require(minNew > meta.maxDocId,
-      s"refresh docIds must exceed committed maxDocId=${meta.maxDocId}, got min=$minNew")
-    build(newDocs, idCol, textCol, s"$dir/$gen", meta.k, meta.nShards)
-    val m = GramSegMeta(meta.segs :+ gen, meta.k, meta.nShards, maxNew)
-    writeSegments(dir, m)
-    m
-  }
+      dir: String, genName: Option[String] = None): GramSegMeta =
+    toMeta(Store.refresh(newDocs, col(idCol).cast("long"), dir, genName) {
+      (seg, s) => build(newDocs, idCol, textCol, seg, s("k").toInt, s("nShards").toInt)
+    })
 
   /** Mark documents DELETED without touching committed segment data —
-    * the same tombstone files, replay detection, and stale-until-compact
-    * semantics as [[BlockIndex.delete]] (implementation shared; only the
-    * directory differs). Every indexed query path anti-joins the
-    * tombstones; the per-gram df table keeps pre-delete counts until
-    * [[compact]] (selection-order heuristic only).
+    * [[BlockIndex.delete]] on this directory. Every indexed query path
+    * anti-joins the tombstones; the per-gram df table keeps pre-delete
+    * counts until [[compact]] (selection-order heuristic only).
     */
   def delete(ids: DataFrame, dir: String,
       genName: Option[String] = None): BlockIndex.TombMeta =
     BlockIndex.delete(ids, dir, genName)
 
-  private def liveOnly(spark: SparkSession, dir: String,
-      rel: DataFrame): DataFrame =
-    BlockIndex.readTombMeta(dir).filter(_.gens.nonEmpty).fold(rel) { m =>
-      val t = BlockIndex.tombstones(spark, dir).get.distinct()
-      rel.join(
-          if (m.nIds <= BlockIndex.BroadcastTombCap) broadcast(t) else t,
-          Seq("docId"), "left_anti")
-        // the using-column join moves docId first; restore rel's order
-        .select(rel.columns.map(col).toIndexedSeq: _*)
-    }
-
-  /** Fold all committed segments back into ONE — rebuilt from the STORED
-    * (gram, docId) rows with tombstoned docs dropped, no re-gramming —
-    * then commit the singleton list, clear tombstone state, and sweep
-    * unreferenced segment data. Single-writer maintenance op.
+  /** Fold all committed segments back into ONE from the STORED
+    * (gram, docId) rows, tombstoned docs dropped, no re-gramming
+    * ([[SegmentStore.compact]]).
     */
-  def compact(dir: String): GramSegMeta = {
-    val tomb = BlockIndex.readTombMeta(dir).filter(_.gens.nonEmpty)
-    require(isSegmented(dir) || tomb.nonEmpty,
-      s"$dir is not a segmented gram index and has no tombstones to fold out")
-    val spark = SparkSession.active
-    val meta = gramMeta(spark, dir)
-    if (meta.segs.size == 1 && meta.segs.head != "." && tomb.isEmpty) {
-      sweepUnreferenced(dir, meta)
-      return meta
-    }
-    val gen = s"gseg-compact-${meta.maxDocId}-${meta.segs.size}" +
-      tomb.fold("")(t => s"-d${t.nIds}")
-    val rows0 = segDirs(dir).flatMap { seg =>
-      val nSh = readMeta(seg)._2
-      val paths = (0 until nSh).map(sh => s"$seg/shard=$sh")
-        .filter(MetaIO.exists)
-      if (paths.isEmpty) None
-      else Some(spark.read.option("basePath", seg).parquet(paths: _*)
-        .select(col("gram"), col("docId")))
-    }.reduceOption(_ union _).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("gram", "docId")
-    }
-    val rows = liveOnly(spark, dir, rows0)
-    buildFromPostings(rows, s"$dir/$gen", meta.k, meta.nShards)
-    val m = GramSegMeta(Seq(gen), meta.k, meta.nShards, meta.maxDocId)
-    writeSegments(dir, m)
-    BlockIndex.clearTombstones(dir)
-    sweepUnreferenced(dir, m)
-    m
-  }
+  def compact(dir: String): GramSegMeta = toMeta(Store.compact(dir))
 
-  /** Tiered maintenance for the gram index — the same two triggers and
-    * partial-merge semantics as [[BlockIndex.compactTiered]]: tombstones
-    * past `tombFraction` of the docId space escalate to the full
-    * [[compact]]; a segment count past `maxSegments` folds the
-    * `mergeFactor` smallest segments (by on-disk bytes) into one, from
-    * their STORED (gram, docId) rows, tombstones untouched. No-op below
-    * both.
+  /** Tiered maintenance ([[SegmentStore.compactTiered]]), the same
+    * triggers and partial-merge semantics as [[BlockIndex.compactTiered]].
     */
   def compactTiered(dir: String, maxSegments: Int, mergeFactor: Int = 0,
-      tombFraction: Double = 0.2): GramSegMeta = {
-    require(maxSegments >= 2, s"maxSegments must be >= 2, got $maxSegments")
-    val spark = SparkSession.active
-    val meta = gramMeta(spark, dir)
-    val tomb = BlockIndex.readTombMeta(dir).filter(_.gens.nonEmpty)
-    if (tomb.exists(t => meta.maxDocId >= 0 &&
-        t.nIds > tombFraction * (meta.maxDocId + 1)))
-      return compact(dir)
-    if (!isSegmented(dir) || meta.segs.size <= maxSegments) return meta
-    val mf = math.min(
-      if (mergeFactor >= 2) mergeFactor else math.max(2, maxSegments / 2),
-      meta.segs.size)
-    val skipTop = (n: String) => n.startsWith("gseg-") || n.startsWith("tomb-")
-    val victims = meta.segs
-      .map(s => s -> MetaIO.dirBytes(if (s == ".") dir else s"$dir/$s", skipTop))
-      .sortBy { case (s, b) => (b, s) }
-      .take(mf).map(_._1)
-    val gen = "gseg-tier-" + java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(victims.mkString("|"))) +
-      s"-${victims.size}"
-    val rows = victims.map(s => if (s == ".") dir else s"$dir/$s")
-      .flatMap { seg =>
-        val nSh = readMeta(seg)._2
-        val paths = (0 until nSh).map(sh => s"$seg/shard=$sh")
-          .filter(MetaIO.exists)
-        if (paths.isEmpty) None
-        else Some(spark.read.option("basePath", seg).parquet(paths: _*)
-          .select(col("gram"), col("docId")))
-      }.reduceOption(_ union _).getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, Long)].toDF("gram", "docId")
-      }
-    buildFromPostings(rows, s"$dir/$gen", meta.k, meta.nShards)
-    val m = GramSegMeta(
-      meta.segs.filterNot(victims.contains) :+ gen, meta.k, meta.nShards,
-      meta.maxDocId)
-    writeSegments(dir, m)
-    sweepUnreferenced(dir, m)
-    m
-  }
-
-  private def sweepUnreferenced(dir: String,
-      committed: GramSegMeta): Unit = {
-    val referenced = committed.segs.toSet
-    MetaIO.list(dir)
-      .filter(n => n.startsWith("gseg-") && !referenced.contains(n))
-      .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
-    if (!referenced.contains(".")) {
-      MetaIO.list(dir).filter(_.startsWith("shard="))
-        .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
-      MetaIO.deleteIfExists(dfDir(dir), recursive = true)
-      MetaIO.deleteIfExists(metaPath(dir))
-    }
-  }
+      tombFraction: Double = SegmentStore.TombFraction): GramSegMeta =
+    toMeta(Store.compactTiered(dir, maxSegments, mergeFactor, tombFraction))
 }

@@ -32,21 +32,11 @@ object KeyMap {
 
   def readMeta(dir: String): Meta =
     if (!exists(dir)) Meta(Nil)
-    else {
-      val s = MetaIO.readString(s"$dir/$MetaName")
-      val segs = """"segs":\[([^\]]*)\]""".r.findFirstMatchIn(s)
-        .map(_.group(1)).getOrElse("")
-        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq
-      Meta(segs)
-    }
+    else Meta(MetaIO.readMeta(s"$dir/$MetaName").strings("segs"))
 
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    val arr = m.segs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    MetaIO.writeAtomic(s"$dir/$MetaName",
-      s"""{"nonce":${System.nanoTime()},"segs":$arr}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+  private def writeMeta(dir: String, m: Meta): Unit =
+    MetaIO.writeMeta(s"$dir/$MetaName", Seq("nonce" -> System.nanoTime()),
+      Seq("segs" -> m.segs))
 
   /** Commit one (key, docId) segment under `marker` — idempotent by
     * name: a replayed micro-batch that already committed is a no-op.

@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Index-metadata IO (`_stats.json`, `_manifest.jsonl`,
-  * `_segments.json`, existence probes, cleanup) that works on any Hadoop
+  * `_segments.json`, existence probes, cleanup, and the one reader and
+  * writer of the flat JSON meta files) that works on any Hadoop
   * filesystem, not just local paths.
   *
   * Scheme dispatch, deliberately:
@@ -191,6 +192,57 @@ object MetaIO {
           else fs.getContentSummary(st.getPath).getLength
         }.sum
     }
+
+  /** Version stamped by [[writeMeta]] into every metadata file. A reader
+    * refuses a file stamped with any other version; files written before
+    * the stamp existed carry none and read as this version.
+    */
+  val FormatVersion = 1L
+
+  /** One parsed metadata file: its integer fields and its string arrays
+    * (a segment list's `segs`, a tombstone meta's `gens`).
+    */
+  final case class Meta(path: String, longs: Map[String, Long],
+      arrays: Map[String, Seq[String]]) {
+    def apply(key: String): Long =
+      longs.getOrElse(key, sys.error(s"malformed $path: no \"$key\""))
+    def get(key: String): Option[Long] = longs.get(key)
+    def strings(key: String): Seq[String] = arrays.getOrElse(key, Nil)
+  }
+
+  private val LongField = """"(\w+)"\s*:\s*(-?\d+)""".r
+  private val ArrayField = """"(\w+)"\s*:\s*\[([^\]]*)\]""".r
+
+  /** The one reader of the flat JSON metadata files (`_segments.json` and
+    * its sidecar twins, the per-segment meta files, `_tombstones.json`,
+    * `_keymap.json`). Throws on a `formatVersion` other than
+    * [[FormatVersion]].
+    */
+  def readMeta(p: String): Meta = {
+    val s = readString(p)
+    val m = Meta(p,
+      LongField.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toLong).toMap,
+      ArrayField.findAllMatchIn(s).map(m => m.group(1) ->
+        m.group(2).split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
+          .filter(_.nonEmpty)).toMap)
+    m.get("formatVersion").filter(_ != FormatVersion).foreach { v =>
+      throw new IllegalStateException(
+        s"$p has formatVersion $v; this build reads $FormatVersion — rebuild the index")
+    }
+    m
+  }
+
+  /** The one writer of those files: `formatVersion` first, then `longs`
+    * and `arrays` in the given order, replaced atomically.
+    */
+  def writeMeta(p: String, longs: Seq[(String, Long)],
+      arrays: Seq[(String, Seq[String])]): Unit = {
+    val fields = (("formatVersion" -> FormatVersion) +: longs)
+      .map { case (k, v) => s""""$k":$v""" } ++
+      arrays.map { case (k, vs) =>
+        vs.map("\"" + _ + "\"").mkString(s""""$k":[""", ",", "]") }
+    writeAtomic(p, fields.mkString("{", ",", "}").getBytes(StandardCharsets.UTF_8))
+  }
 
   def mtimeMillis(p: String): Long =
     if (isLocal(p)) Files.getLastModifiedTime(localPath(p)).toMillis

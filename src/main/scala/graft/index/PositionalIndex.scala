@@ -317,14 +317,14 @@ object PositionalIndex {
   // Persisted sidecar
   // ---------------------------------------------------------------------
 
-  private def metaPath(dir: String) = s"$dir/_posmeta.json"
-
   /** The per-term document-frequency table (vocab-sized, same shard
     * routing as the postings) — [[phraseSearch]]'s selectivity probe
     * reads a handful of its rows with a pushed `In(term)` instead of
     * counting posting rows per query.
     */
-  private def dfStatsDir(dir: String) = s"$dir/dfstats"
+  private val DfStatsName = "dfstats"
+  private def dfStatsDir(dir: String) = s"$dir/$DfStatsName"
+  private val NextwordName = "nextword" // the accelerator, see below
 
   /** Build the positional sidecar for a model-form corpus. One shuffle
     * (the (term, docId) position aggregation); the shard repartition
@@ -349,53 +349,18 @@ object PositionalIndex {
 
   /** The write half of [[build]] over already-aggregated
     * (term, docId, positions) rows — also the engine of [[compact]],
-    * which re-segments WITHOUT re-tokenizing. The read-back that derives
-    * the df table also supplies the segment's maxDocId (recorded in the
-    * meta commit marker — [[refresh]]'s disjointness floor) from
-    * column-pruned scans of the written postings.
+    * which re-segments WITHOUT re-tokenizing ([[ShardedStore.writeSegment]]).
     */
   private def buildFromRows(rows: DataFrame, dir: String,
-      nShards: Int): Unit = {
-    require(nShards > 0, s"nShards must be positive, got $nShards")
-    MetaIO.deleteIfExists(dir, recursive = true)
-    rows
-      .withColumn("shard",
-        pmod(xxhash64(col("term")), lit(nShards.toLong)).cast("int"))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("term"), col("docId"))
-      .write.mode("overwrite").partitionBy("shard").parquet(dir)
-    val spark = rows.sparkSession
-    val shardPaths = (0 until nShards).map(s => s"$dir/shard=$s")
-      .filter(MetaIO.exists)
-    val maxDocId =
-      if (shardPaths.isEmpty) -1L
-      else {
-        val back = spark.read.option("basePath", dir).parquet(shardPaths: _*)
-        back.groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .withColumn("shard",
-            pmod(xxhash64(col("term")), lit(nShards.toLong)).cast("int"))
-          .repartition(col("shard"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite").partitionBy("shard")
-          .parquet(dfStatsDir(dir))
-        back.agg(max(col("docId"))).head().getLong(0)
-      }
-    MetaIO.writeAtomic(metaPath(dir),
-      s"""{"nShards":$nShards,"maxDocId":$maxDocId}""".getBytes("UTF-8"))
-  }
+      nShards: Int): Unit =
+    Store.writeSegment(rows, dir, Seq("nShards" -> nShards.toLong), -1L)
 
-  def readNShards(dir: String): Int = {
-    val s = MetaIO.readString(metaPath(dir))
-    """"nShards"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"malformed ${metaPath(dir)}: $s"))
-  }
+  def readNShards(dir: String): Int = Store.readMarker(dir)("nShards").toInt
 
   // ---------------------------------------------------------------------
   // Segments: incremental refresh without re-tokenizing the committed
-  // corpus (the same Lucene/LSM segment model as BlockIndex, sidecar-
-  // sized: each segment is a complete plain sidecar; `_possegments.json`
-  // is the atomically-replaced commit point)
+  // corpus — the [[SegmentStore]] lifecycle, sidecar-sized: each segment
+  // is a complete plain sidecar; `_possegments.json` is the segment list
   // ---------------------------------------------------------------------
 
   val PosSegmentsName = "_possegments.json"
@@ -410,193 +375,56 @@ object PositionalIndex {
   final case class PosSegmentsMeta(
       segs: Seq[String], nShards: Int, maxDocId: Long)
 
-  def isSegmented(dir: String): Boolean =
-    MetaIO.exists(s"$dir/$PosSegmentsName")
+  /** Each segment's `_posmeta.json` records [[FieldGapWidth]], and a
+    * sidecar recording any other width (or none — a 1-wide-gap artifact
+    * cannot be told from a 100-wide one) is refused with a rebuild
+    * message: its positions follow another convention.
+    */
+  private[graft] val Store = new ShardedStore("pseg-", PosSegmentsName,
+    "_posmeta.json", "positional sidecar", "term",
+    Seq("term", "docId", "positions"),
+    "term string, docId long, positions array<long>", Seq("nShards"),
+    Some(DfStatsName), Seq(NextwordName),
+    Seq("fieldGapWidth" -> FieldGapWidth.toLong))
+
+  private def toMeta(s: SegmentStore.Segments): PosSegmentsMeta =
+    PosSegmentsMeta(s.segs, s("nShards").toInt, s.maxDocId)
+
+  def isSegmented(dir: String): Boolean = Store.isSegmented(dir)
 
   /** True iff `dir` holds a committed sidecar (plain or segmented). */
-  def exists(dir: String): Boolean =
-    MetaIO.exists(metaPath(dir)) || isSegmented(dir)
+  def exists(dir: String): Boolean = Store.exists(dir)
 
-  private def segDirs(dir: String): Seq[String] =
-    if (!isSegmented(dir)) Seq(dir)
-    else readSegments(dir).segs.map(s => if (s == ".") dir else s"$dir/$s")
-
-  def readSegments(dir: String): PosSegmentsMeta = {
-    val s = MetaIO.readString(s"$dir/$PosSegmentsName")
-    val kv = """"(\w+)":(-?\d+)""".r.findAllMatchIn(s)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-    val segs = """"segs":\[([^\]]*)\]""".r.findFirstMatchIn(s).map(_.group(1))
-      .getOrElse("").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq
-    PosSegmentsMeta(segs, kv("nShards").toInt, kv("maxDocId"))
-  }
-
-  private def writeSegments(dir: String, m: PosSegmentsMeta): Unit = {
-    val segsJson = m.segs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    MetaIO.writeAtomic(s"$dir/$PosSegmentsName",
-      s"""{"nShards":${m.nShards},"maxDocId":${m.maxDocId},"nonce":${System.nanoTime()},"segs":$segsJson}"""
-        .getBytes("UTF-8"))
-  }
-
-  /** Current metadata whether segmented or plain; plain sidecars read
-    * the maxDocId recorded at build completion (pre-maxDocId metas fall
-    * back to one column-pruned max scan).
-    */
-  private def segMeta(spark: SparkSession, dir: String): PosSegmentsMeta =
-    if (isSegmented(dir)) readSegments(dir)
-    else {
-      val nShards = readNShards(dir)
-      val maxDoc = """"maxDocId":(-?\d+)""".r
-        .findFirstMatchIn(MetaIO.readString(metaPath(dir)))
-        .map(_.group(1).toLong)
-        .getOrElse {
-          val paths = (0 until nShards).map(s => s"$dir/shard=$s")
-            .filter(MetaIO.exists)
-          if (paths.isEmpty) -1L
-          else spark.read.option("basePath", dir).parquet(paths: _*)
-            .agg(max(col("docId"))).head().getLong(0)
-        }
-      PosSegmentsMeta(Seq("."), nShards, maxDoc)
-    }
+  def readSegments(dir: String): PosSegmentsMeta = toMeta(Store.readList(dir))
 
   /** Incrementally add `newDocs`' positions WITHOUT touching committed
     * data: the delta is tokenized and built as a brand-new immutable
-    * segment (reusing [[build]], whose meta file is its commit marker),
-    * then committed by atomically replacing `_possegments.json`. Readers
-    * see the old sidecar until the commit instant; a kill before it
-    * leaves the old sidecar intact and the half-built segment invisible.
-    *
-    * `newDocs.docId` must all exceed the committed maxDocId (checked
-    * with one tiny aggregation). A caller-keyed `genName` (e.g. a
-    * streaming micro-batch id) makes replay a detectable no-op before
-    * any work, as in [[BlockIndex.refresh]]; the default name is the
-    * delta's docId range, so re-running the same refresh after a kill
-    * rebuilds the same directory and an abandoned different delta gets
-    * a fresh one.
+    * segment (reusing [[build]]) under the [[SegmentStore]] commit
+    * protocol. `newDocs.docId` must all exceed the committed maxDocId
+    * (checked with one tiny aggregation); a caller-keyed `genName` (a
+    * streaming micro-batch id) makes replay a no-op before any work.
     */
   def refresh(newDocs: DataFrame, dir: String,
-      genName: Option[String] = None): PosSegmentsMeta = {
-    val spark = newDocs.sparkSession
-    val meta = segMeta(spark, dir)
-    genName.map(g => s"pseg-$g").foreach { gen =>
-      if (isSegmented(dir) && readSegments(dir).segs.contains(gen))
-        return readSegments(dir)
-    }
-    val bounds = newDocs.agg(
-      min(col("docId")), max(col("docId")), count(lit(1))).head()
-    if (bounds.getLong(2) == 0L) { // empty delta: commit = current state
-      if (!isSegmented(dir)) writeSegments(dir, meta)
-      return readSegments(dir)
-    }
-    val (minNew, maxNew) = (bounds.getLong(0), bounds.getLong(1))
-    val gen = genName.map(g => s"pseg-$g").getOrElse(s"pseg-$minNew-$maxNew")
-    if (isSegmented(dir) && readSegments(dir).segs.contains(gen))
-      return readSegments(dir)
-    require(minNew > meta.maxDocId,
-      s"refresh docIds must exceed committed maxDocId=${meta.maxDocId}, got min=$minNew")
-    build(newDocs, s"$dir/$gen", meta.nShards)
-    val m = PosSegmentsMeta(meta.segs :+ gen, meta.nShards, maxNew)
-    writeSegments(dir, m)
-    m
-  }
+      genName: Option[String] = None): PosSegmentsMeta =
+    toMeta(Store.refresh(newDocs, col("docId"), dir, genName)(
+      (seg, s) => build(newDocs, seg, s("nShards").toInt)))
 
-  /** Fold all committed segments back into ONE — built from the stored
-    * (term, docId, positions) rows, no re-tokenization — then commit the
-    * singleton list and sweep unreferenced segment data (including any
-    * leftovers of an earlier kill between commit and cleanup). Single-
-    * writer maintenance op, like [[BlockIndex.compact]].
+  /** Fold all committed segments back into ONE from the stored
+    * (term, docId, positions) rows, no re-tokenization, deleted docs'
+    * positions reclaimed ([[SegmentStore.compact]]).
     */
-  def compact(dir: String): PosSegmentsMeta = {
-    val tomb = BlockIndex.readTombMeta(dir).filter(_.gens.nonEmpty)
-    require(isSegmented(dir) || tomb.nonEmpty,
-      s"$dir is not a segmented positional sidecar and has no tombstones" +
-        " to fold out")
-    val spark = SparkSession.active
-    val meta = segMeta(spark, dir)
-    if (meta.segs.size == 1 && meta.segs.head != "." && tomb.isEmpty) {
-      sweepUnreferenced(dir, meta)
-      return meta
-    }
-    // named by corpus identity (append-only ⇒ (maxDocId, segment count)
-    // pins the fold; the committed tombstone row count pins the delete
-    // set on top): a killed compaction re-runs its own directory
-    val gen = s"pseg-compact-${meta.maxDocId}-${meta.segs.size}" +
-      tomb.fold("")(t => s"-d${t.nIds}")
-    val rows0 = segDirs(dir).flatMap { seg =>
-      val paths = (0 until readNShards(seg)).map(s => s"$seg/shard=$s")
-        .filter(MetaIO.exists)
-      if (paths.isEmpty) None
-      else Some(spark.read.option("basePath", seg).parquet(paths: _*)
-        .select(col("term"), col("docId"), col("positions")))
-    }.reduceOption(_ union _).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long, Seq[Long])].toDF("term", "docId", "positions")
-    }
-    // physical reclaim of deleted docs' positions — like
-    // [[BlockIndex.compact]], a kill between the commit below and
-    // clearTombstones re-runs the (then no-op) fold: wasteful once,
-    // never wrong
-    val rows = tomb.fold(rows0)(_ => antiJoinTombstones(spark, dir, rows0))
-    buildFromRows(rows, s"$dir/$gen", meta.nShards)
-    val m = PosSegmentsMeta(Seq(gen), meta.nShards, meta.maxDocId)
-    writeSegments(dir, m)
-    BlockIndex.clearTombstones(dir)
-    sweepUnreferenced(dir, m)
-    m
-  }
+  def compact(dir: String): PosSegmentsMeta = toMeta(Store.compact(dir))
 
-  /** Tiered maintenance for the sidecar — the same two triggers and
-    * partial-merge semantics as [[BlockIndex.compactTiered]]: tombstones
-    * past `tombFraction` of the docId space escalate to the full
-    * [[compact]]; a segment count past `maxSegments` folds the
-    * `mergeFactor` smallest segments (by on-disk bytes) into one, from
-    * their STORED rows, tombstones untouched. No-op below both.
+  /** Tiered maintenance ([[SegmentStore.compactTiered]]), the same
+    * triggers and partial-merge semantics as [[BlockIndex.compactTiered]];
+    * nextword accelerators do not count toward a segment's size.
     */
   def compactTiered(dir: String, maxSegments: Int, mergeFactor: Int = 0,
-      tombFraction: Double = 0.2): PosSegmentsMeta = {
-    require(maxSegments >= 2, s"maxSegments must be >= 2, got $maxSegments")
-    val spark = SparkSession.active
-    val meta = segMeta(spark, dir)
-    val tomb = BlockIndex.readTombMeta(dir).filter(_.gens.nonEmpty)
-    if (tomb.exists(t => meta.maxDocId >= 0 &&
-        t.nIds > tombFraction * (meta.maxDocId + 1)))
-      return compact(dir)
-    if (!isSegmented(dir) || meta.segs.size <= maxSegments) return meta
-    val mf = math.min(
-      if (mergeFactor >= 2) mergeFactor else math.max(2, maxSegments / 2),
-      meta.segs.size)
-    val skipTop = (n: String) => n.startsWith("pseg-") ||
-      n.startsWith("tomb-") || n == "nextword" // accelerator ≠ data bytes
-    val victims = meta.segs
-      .map(s => s -> MetaIO.dirBytes(if (s == ".") dir else s"$dir/$s", skipTop))
-      .sortBy { case (s, b) => (b, s) }
-      .take(mf).map(_._1)
-    val gen = "pseg-tier-" + java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(victims.mkString("|"))) +
-      s"-${victims.size}"
-    val rows = victims.map(s => if (s == ".") dir else s"$dir/$s")
-      .flatMap { seg =>
-        val paths = (0 until readNShards(seg)).map(s => s"$seg/shard=$s")
-          .filter(MetaIO.exists)
-        if (paths.isEmpty) None
-        else Some(spark.read.option("basePath", seg).parquet(paths: _*)
-          .select(col("term"), col("docId"), col("positions")))
-      }.reduceOption(_ union _).getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, Long, Seq[Long])].toDF("term", "docId", "positions")
-      }
-    buildFromRows(rows, s"$dir/$gen", meta.nShards)
-    val m = PosSegmentsMeta(
-      meta.segs.filterNot(victims.contains) :+ gen, meta.nShards, meta.maxDocId)
-    writeSegments(dir, m)
-    sweepUnreferenced(dir, m)
-    m
-  }
+      tombFraction: Double = SegmentStore.TombFraction): PosSegmentsMeta =
+    toMeta(Store.compactTiered(dir, maxSegments, mergeFactor, tombFraction))
 
   /** Mark documents DELETED in the sidecar without touching committed
-    * segment data — the same tombstone files, replay detection, and
-    * Lucene stale-until-compact semantics as [[BlockIndex.delete]] (the
-    * implementation is shared; only the directory differs). The sidecar
+    * segment data — [[BlockIndex.delete]] on this directory. The sidecar
     * lives in its own directory, so deletes are per-structure: run the
     * same delete against the block index dir AND the sidecar dir.
     * [[phraseSearch]]/[[proximitySearch]] anti-join the tombstones;
@@ -607,33 +435,6 @@ object PositionalIndex {
   def delete(ids: DataFrame, dir: String,
       genName: Option[String] = None): BlockIndex.TombMeta =
     BlockIndex.delete(ids, dir, genName)
-
-  /** Filter position rows down to live (untombstoned) docs; identity
-    * when no delete was ever committed.
-    */
-  private def antiJoinTombstones(spark: SparkSession, dir: String,
-      rows: DataFrame): DataFrame =
-    BlockIndex.readTombMeta(dir).filter(_.gens.nonEmpty).fold(rows) { m =>
-      val t = BlockIndex.tombstones(spark, dir).get.distinct()
-      rows.join(
-        if (m.nIds <= BlockIndex.BroadcastTombCap) broadcast(t) else t,
-        Seq("docId"), "left_anti")
-    }
-
-  private def sweepUnreferenced(dir: String,
-      committed: PosSegmentsMeta): Unit = {
-    val referenced = committed.segs.toSet
-    MetaIO.list(dir)
-      .filter(n => n.startsWith("pseg-") && !referenced.contains(n))
-      .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
-    if (!referenced.contains(".")) {
-      MetaIO.list(dir).filter(_.startsWith("shard="))
-        .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
-      MetaIO.deleteIfExists(dfStatsDir(dir), recursive = true)
-      MetaIO.deleteIfExists(nextwordDir(dir), recursive = true)
-      MetaIO.deleteIfExists(metaPath(dir))
-    }
-  }
 
   /** Every phrase match lies in the rarest term's document set, so when
     * term selectivities are skewed (a tail identifier next to stop-word-
@@ -663,13 +464,12 @@ object PositionalIndex {
       qTerms: Seq[String]): Option[(DataFrame, Map[String, Long])] = {
     val nShards = readNShards(dir)
     val shards = qTerms.map(BlockIndex.shardOf(_, nShards)).distinct.sorted
-    val paths = shards.map(s => s"$dir/shard=$s").filter(MetaIO.exists)
+    val paths = SegmentStore.shardPaths(dir, shards)
     if (paths.isEmpty) return None
     val rows = spark.read.option("basePath", dir).parquet(paths: _*)
       .where(col("term").isin(qTerms: _*))
       .select(col("term"), col("docId"), col("positions"))
-    val statsPaths = shards.map(s => s"${dfStatsDir(dir)}/shard=$s")
-      .filter(MetaIO.exists)
+    val statsPaths = SegmentStore.shardPaths(dfStatsDir(dir), shards)
     val dfs =
       (if (statsPaths.nonEmpty)
         spark.read.option("basePath", dfStatsDir(dir)).parquet(statsPaths: _*)
@@ -688,7 +488,7 @@ object PositionalIndex {
     */
   private def queryPositions(spark: SparkSession, dir: String,
       terms: Seq[String]): Option[DataFrame] =
-    positionsOver(spark, dir, segDirs(dir), terms)
+    positionsOver(spark, dir, Store.segDirs(dir), terms)
 
   /** The scan core shared by the unigram and nextword paths: union the
     * shard-routed, token-filtered scans of `scanDirs`, anti-join the ROOT
@@ -706,8 +506,7 @@ object PositionalIndex {
     if (qTerms.exists(t => dfs.getOrElse(t, 0L) == 0L)) return None
     // tombstoned docs vanish before any matching; the df probe above
     // keeps stale (pre-delete) counts until compact — heuristic-only
-    val rows = antiJoinTombstones(spark, rootDir,
-      perSeg.map(_._1).reduce(_ union _))
+    val rows = SegmentStore.liveOnly(rootDir, perSeg.map(_._1).reduce(_ union _))
     val (rareTerm, rareDf) = dfs.minBy(_._2)
     val filtered =
       if (dfs.values.max / math.max(rareDf, 1L) < SkewRatio) rows
@@ -729,7 +528,7 @@ object PositionalIndex {
     def rank(hits: DataFrame): DataFrame =
       hits.orderBy(col("phrase_tf").desc, col("docId").asc).limit(k)
     if (terms.size >= 2) {
-      val (armed, plain) = segDirs(dir).partition(hasNextword)
+      val (armed, plain) = Store.segDirs(dir).partition(hasNextword)
       if (armed.nonEmpty) {
         // segments partition the corpus by docId, so evaluating armed
         // segments through bigram postings and unarmed ones through the
@@ -775,10 +574,9 @@ object PositionalIndex {
   // need no re-arm: tombstones anti-join at query time on both paths.
   // ---------------------------------------------------------------------
 
-  private def nextwordDir(seg: String) = s"$seg/nextword"
+  private def nextwordDir(seg: String) = s"$seg/$NextwordName"
 
-  private def hasNextword(seg: String): Boolean =
-    MetaIO.exists(metaPath(nextwordDir(seg)))
+  private def hasNextword(seg: String): Boolean = Store.exists(nextwordDir(seg))
 
   /** Arm every committed segment that lacks its nextword accelerator.
     * Idempotent and incremental: armed segments are skipped, so after a
@@ -800,18 +598,9 @@ object PositionalIndex {
     * only where pos(next) = pos(prev) + 1.
     */
   def buildNextword(dir: String): Unit = {
-    val spark = SparkSession.active
-    segDirs(dir).filterNot(hasNextword).foreach { seg =>
-      val nShards = readNShards(seg)
-      val paths = (0 until nShards).map(s => s"$seg/shard=$s")
-        .filter(MetaIO.exists)
-      val rows =
-        if (paths.isEmpty) {
-          import spark.implicits._
-          Seq.empty[(String, Long, Seq[Long])].toDF("term", "docId", "positions")
-        } else spark.read.option("basePath", seg).parquet(paths: _*)
-          .select(col("term"), col("docId"), col("positions"))
-      buildFromRows(pairRows(rows), nextwordDir(seg), nShards)
+    Store.segDirs(dir).filterNot(hasNextword).foreach { seg =>
+      buildFromRows(pairRows(Store.storedRows(Seq(seg), None)),
+        nextwordDir(seg), readNShards(seg))
     }
   }
 
@@ -858,7 +647,7 @@ object PositionalIndex {
     graft.analysis.Analyzer.tokenize(prev).lastOption match {
       case None => empty
       case Some(p) =>
-        val armed = segDirs(dir).filter(hasNextword)
+        val armed = Store.segDirs(dir).filter(hasNextword)
         if (armed.isEmpty) empty
         else
           armed.map(seg =>
@@ -882,7 +671,7 @@ object PositionalIndex {
     */
   def nextwordFresh(spark: SparkSession, dir: String): Boolean = {
     val _ = spark // kept for API symmetry with the other probes
-    val segs = segDirs(dir)
+    val segs = Store.segDirs(dir)
     segs.nonEmpty && segs.forall(hasNextword)
   }
 

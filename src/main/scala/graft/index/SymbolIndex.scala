@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import SegmentStore.liveOnly
 
 /** Persisted ctags-shaped symbol sidecar — the "jump to definition" /
   * symbol-ranked-search structure Zoekt and GitHub code search store
@@ -19,16 +20,12 @@ import org.apache.spark.sql.functions._
   * is paid ONCE at build (a single map-only pass), not per query as in
   * the transform-side [[graft.pipeline.CodeOps.symbolSearch]].
   *
-  * Maintenance is the house LSM discipline shared with
-  * [[PositionalIndex]]/[[GramIndex]]: immutable complete segments
-  * (`sseg-*`, `_symmeta.json` as each segment's commit marker),
-  * `_symsegments.json` as the atomically-replaced commit point, shared
-  * tombstone files for deletes, full [[compact]] and tiered
-  * [[compactTiered]] folds from STORED rows (no re-extraction).
+  * Maintenance is the [[SegmentStore]] lifecycle shared by every index
+  * (`sseg-*` segments, `_symmeta.json` markers, `_symsegments.json`
+  * list); [[compact]] and [[compactTiered]] fold from STORED rows, no
+  * re-extraction.
   */
 object SymbolIndex {
-
-  private def metaPath(dir: String) = s"$dir/_symmeta.json"
 
   /** Extraction half, shared by build and refresh: the symbolDefs
     * relation renamed to the sidecar's (symbol, kind, docId, n_defs).
@@ -57,25 +54,12 @@ object SymbolIndex {
     * [[compactTiered]] (which re-segment from STORED rows).
     */
   private def buildFromRows(rows: DataFrame, dir: String, nShards: Int,
-      maxDocId: Long): Unit = {
-    require(nShards > 0, s"nShards must be positive, got $nShards")
-    MetaIO.deleteIfExists(dir, recursive = true)
-    rows
-      .withColumn("shard",
-        pmod(xxhash64(col("symbol")), lit(nShards.toLong)).cast("int"))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("symbol"), col("docId"))
-      .write.mode("overwrite").partitionBy("shard").parquet(dir)
-    MetaIO.writeAtomic(metaPath(dir),
-      s"""{"nShards":$nShards,"maxDocId":$maxDocId}""".getBytes("UTF-8"))
-  }
+      maxDocId: Long): Unit =
+    Store.writeSegment(rows, dir, Seq("nShards" -> nShards.toLong), maxDocId)
 
   def readMeta(dir: String): (Int, Long) = {
-    val s = MetaIO.readString(metaPath(dir))
-    def f(key: String) = (s""""$key"\\s*:\\s*(-?\\d+)""").r
-      .findFirstMatchIn(s).map(_.group(1).toLong)
-      .getOrElse(sys.error(s"malformed ${metaPath(dir)}: $s"))
-    (f("nShards").toInt, f("maxDocId"))
+    val j = Store.readMarker(dir)
+    (j("nShards").toInt, j("maxDocId"))
   }
 
   /** Live (symbol, kind, docId, n_defs) rows for exactly this symbol:
@@ -86,20 +70,10 @@ object SymbolIndex {
     */
   def lookup(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(name.nonEmpty, "empty symbol name; refusing")
-    val m = symMeta(spark, dir)
-    val rel = segDirs(dir).flatMap { seg =>
-      val sh = BlockIndex.shardOf(name, m.nShards)
-      val p = s"$seg/shard=$sh"
-      if (!MetaIO.exists(p)) None
-      else Some(spark.read.option("basePath", seg).parquet(p)
-        .where(col("symbol") === name)
-        .select(col("symbol"), col("kind"), col("docId"), col("n_defs")))
-    }.reduceOption(_ union _).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, String, Long, Long)]
-        .toDF("symbol", "kind", "docId", "n_defs")
-    }
-    liveOnly(spark, dir, rel)
+    val nShards = Store.state(dir)("nShards").toInt
+    liveOnly(dir, Store.storedRows(Store.segDirs(dir),
+      Some(Seq(BlockIndex.shardOf(name, nShards))))
+      .where(col("symbol") === name))
   }
 
   /** Indexed twin of [[graft.pipeline.CodeOps.symbolSearch]] — identical
@@ -117,7 +91,7 @@ object SymbolIndex {
       .orderBy(col("weight").desc, col("n_defs").desc, col("id").asc)
 
   // ---------------------------------------------------------------------
-  // Segments + tombstones: the GramIndex discipline, symbol-schema'd
+  // Segments + tombstones: the [[SegmentStore]] lifecycle, symbol-schema'd
   // ---------------------------------------------------------------------
 
   val SymSegmentsName = "_symsegments.json"
@@ -129,183 +103,52 @@ object SymbolIndex {
   final case class SymSegMeta(segs: Seq[String], nShards: Int,
       maxDocId: Long)
 
-  def isSegmented(dir: String): Boolean =
-    MetaIO.exists(s"$dir/$SymSegmentsName")
+  private[graft] val Store = new ShardedStore("sseg-", SymSegmentsName,
+    "_symmeta.json", "symbol index", "symbol",
+    Seq("symbol", "kind", "docId", "n_defs"),
+    "symbol string, kind string, docId long, n_defs long", Seq("nShards"),
+    None, Nil, Nil)
+
+  private def toMeta(s: SegmentStore.Segments): SymSegMeta =
+    SymSegMeta(s.segs, s("nShards").toInt, s.maxDocId)
+
+  def isSegmented(dir: String): Boolean = Store.isSegmented(dir)
 
   /** True iff `dir` holds a committed symbol index (plain or segmented). */
-  def exists(dir: String): Boolean =
-    MetaIO.exists(metaPath(dir)) || isSegmented(dir)
+  def exists(dir: String): Boolean = Store.exists(dir)
 
-  private def segDirs(dir: String): Seq[String] =
-    if (!isSegmented(dir)) Seq(dir)
-    else readSegments(dir).segs.map(s => if (s == ".") dir else s"$dir/$s")
-
-  def readSegments(dir: String): SymSegMeta = {
-    val s = MetaIO.readString(s"$dir/$SymSegmentsName")
-    val kv = """"(\w+)":(-?\d+)""".r.findAllMatchIn(s)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-    val segs = """"segs":\[([^\]]*)\]""".r.findFirstMatchIn(s).map(_.group(1))
-      .getOrElse("").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq
-    SymSegMeta(segs, kv("nShards").toInt, kv("maxDocId"))
-  }
-
-  private def writeSegments(dir: String, m: SymSegMeta): Unit = {
-    val segsJson = m.segs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    MetaIO.writeAtomic(s"$dir/$SymSegmentsName",
-      s"""{"nShards":${m.nShards},"maxDocId":${m.maxDocId},"nonce":${System.nanoTime()},"segs":$segsJson}"""
-        .getBytes("UTF-8"))
-  }
-
-  private def symMeta(spark: SparkSession, dir: String): SymSegMeta =
-    if (isSegmented(dir)) readSegments(dir)
-    else {
-      val (nShards, maxDocId) = readMeta(dir)
-      SymSegMeta(Seq("."), nShards, maxDocId)
-    }
+  def readSegments(dir: String): SymSegMeta = toMeta(Store.readList(dir))
 
   /** Incrementally add `newDocs`' symbols WITHOUT touching committed
-    * data: the delta is built as a brand-new complete segment and
-    * committed by atomically replacing `_symsegments.json` — readers see
-    * the old index until the commit instant; a kill before it leaves the
-    * old index intact and the half-built segment invisible.
-    * `newDocs.docId` must exceed the committed maxDocId. A caller-keyed
-    * `genName` (a streaming micro-batch id) makes replay a detectable
-    * no-op before any work.
+    * data: one new segment under the [[SegmentStore]] commit protocol.
+    * `newDocs.docId` must exceed the committed maxDocId; a caller-keyed
+    * `genName` (a streaming micro-batch id) makes replay a no-op before
+    * any work.
     */
   def refresh(newDocs: DataFrame, idCol: String, textCol: String,
-      dir: String, genName: Option[String] = None): SymSegMeta = {
-    val spark = newDocs.sparkSession
-    val meta = symMeta(spark, dir)
-    genName.map(g => s"sseg-$g").foreach { gen =>
-      if (isSegmented(dir) && readSegments(dir).segs.contains(gen))
-        return readSegments(dir)
-    }
-    val b = newDocs.agg(min(col(idCol).cast("long")),
-      max(col(idCol).cast("long")), count(lit(1))).head()
-    if (b.getLong(2) == 0L) { // empty delta: commit = current state
-      if (!isSegmented(dir)) writeSegments(dir, meta)
-      return readSegments(dir)
-    }
-    val (minNew, maxNew) = (b.getLong(0), b.getLong(1))
-    val gen = genName.map(g => s"sseg-$g").getOrElse(s"sseg-$minNew-$maxNew")
-    if (isSegmented(dir) && readSegments(dir).segs.contains(gen))
-      return readSegments(dir)
-    require(minNew > meta.maxDocId,
-      s"refresh docIds must exceed committed maxDocId=${meta.maxDocId}, got min=$minNew")
-    buildFromRows(symbolRows(newDocs, idCol, textCol), s"$dir/$gen",
-      meta.nShards, maxNew)
-    val m = SymSegMeta(meta.segs :+ gen, meta.nShards, maxNew)
-    writeSegments(dir, m)
-    m
-  }
+      dir: String, genName: Option[String] = None): SymSegMeta =
+    toMeta(Store.refresh(newDocs, col(idCol).cast("long"), dir, genName) {
+      (seg, s) => buildFromRows(symbolRows(newDocs, idCol, textCol), seg,
+        s("nShards").toInt, s.maxDocId)
+    })
 
   /** Mark documents DELETED without touching committed segment data —
-    * the shared tombstone files ([[BlockIndex.delete]]); every query path
-    * anti-joins them; [[compact]] folds them out.
+    * [[BlockIndex.delete]] on this directory; every query path anti-joins
+    * them; [[compact]] folds them out.
     */
   def delete(ids: DataFrame, dir: String,
       genName: Option[String] = None): BlockIndex.TombMeta =
     BlockIndex.delete(ids, dir, genName)
 
-  private def liveOnly(spark: SparkSession, dir: String,
-      rel: DataFrame): DataFrame =
-    BlockIndex.readTombMeta(dir).filter(_.gens.nonEmpty).fold(rel) { m =>
-      val t = BlockIndex.tombstones(spark, dir).get.distinct()
-      rel.join(
-          if (m.nIds <= BlockIndex.BroadcastTombCap) broadcast(t) else t,
-          Seq("docId"), "left_anti")
-        .select(rel.columns.map(col).toIndexedSeq: _*)
-    }
-
-  private def storedRows(spark: SparkSession, segs: Seq[String],
-      dir: String): DataFrame =
-    segs.map(s => if (s == ".") dir else s"$dir/$s").flatMap { seg =>
-      val nSh = readMeta(seg)._1
-      val paths = (0 until nSh).map(sh => s"$seg/shard=$sh")
-        .filter(MetaIO.exists)
-      if (paths.isEmpty) None
-      else Some(spark.read.option("basePath", seg).parquet(paths: _*)
-        .select(col("symbol"), col("kind"), col("docId"), col("n_defs")))
-    }.reduceOption(_ union _).getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, String, Long, Long)]
-        .toDF("symbol", "kind", "docId", "n_defs")
-    }
-
-  /** Fold all committed segments back into ONE — rebuilt from the STORED
-    * rows with tombstoned docs dropped, no re-extraction — then commit
-    * the singleton list, clear tombstone state, and sweep unreferenced
-    * segment data. Single-writer maintenance op.
+  /** Fold all committed segments back into ONE from the STORED rows,
+    * tombstoned docs dropped, no re-extraction ([[SegmentStore.compact]]).
     */
-  def compact(dir: String): SymSegMeta = {
-    val tomb = BlockIndex.readTombMeta(dir).filter(_.gens.nonEmpty)
-    require(isSegmented(dir) || tomb.nonEmpty,
-      s"$dir is not a segmented symbol index and has no tombstones to fold out")
-    val spark = SparkSession.active
-    val meta = symMeta(spark, dir)
-    if (meta.segs.size == 1 && meta.segs.head != "." && tomb.isEmpty) {
-      sweepUnreferenced(dir, meta)
-      return meta
-    }
-    val gen = s"sseg-compact-${meta.maxDocId}-${meta.segs.size}" +
-      tomb.fold("")(t => s"-d${t.nIds}")
-    val rows = liveOnly(spark, dir, storedRows(spark, meta.segs, dir))
-    buildFromRows(rows, s"$dir/$gen", meta.nShards, meta.maxDocId)
-    val m = SymSegMeta(Seq(gen), meta.nShards, meta.maxDocId)
-    writeSegments(dir, m)
-    BlockIndex.clearTombstones(dir)
-    sweepUnreferenced(dir, m)
-    m
-  }
+  def compact(dir: String): SymSegMeta = toMeta(Store.compact(dir))
 
-  /** Tiered maintenance — the same two triggers and partial-merge
-    * semantics as [[BlockIndex.compactTiered]]: tombstones past
-    * `tombFraction` of the docId space escalate to the full [[compact]];
-    * a segment count past `maxSegments` folds the `mergeFactor` smallest
-    * segments (by on-disk bytes) into one, tombstones untouched. No-op
-    * below both.
+  /** Tiered maintenance ([[SegmentStore.compactTiered]]), the same
+    * triggers and partial-merge semantics as [[BlockIndex.compactTiered]].
     */
   def compactTiered(dir: String, maxSegments: Int, mergeFactor: Int = 0,
-      tombFraction: Double = 0.2): SymSegMeta = {
-    require(maxSegments >= 2, s"maxSegments must be >= 2, got $maxSegments")
-    val spark = SparkSession.active
-    val meta = symMeta(spark, dir)
-    val tomb = BlockIndex.readTombMeta(dir).filter(_.gens.nonEmpty)
-    if (tomb.exists(t => meta.maxDocId >= 0 &&
-        t.nIds > tombFraction * (meta.maxDocId + 1)))
-      return compact(dir)
-    if (!isSegmented(dir) || meta.segs.size <= maxSegments) return meta
-    val mf = math.min(
-      if (mergeFactor >= 2) mergeFactor else math.max(2, maxSegments / 2),
-      meta.segs.size)
-    val skipTop = (n: String) => n.startsWith("sseg-") || n.startsWith("tomb-")
-    val victims = meta.segs
-      .map(s => s -> MetaIO.dirBytes(if (s == ".") dir else s"$dir/$s", skipTop))
-      .sortBy { case (s, b) => (b, s) }
-      .take(mf).map(_._1)
-    val gen = "sseg-tier-" + java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(victims.mkString("|"))) +
-      s"-${victims.size}"
-    val rows = storedRows(spark, victims, dir)
-    buildFromRows(rows, s"$dir/$gen", meta.nShards, meta.maxDocId)
-    val m = SymSegMeta(
-      meta.segs.filterNot(victims.contains) :+ gen, meta.nShards,
-      meta.maxDocId)
-    writeSegments(dir, m)
-    sweepUnreferenced(dir, m)
-    m
-  }
-
-  private def sweepUnreferenced(dir: String, committed: SymSegMeta): Unit = {
-    val referenced = committed.segs.toSet
-    MetaIO.list(dir)
-      .filter(n => n.startsWith("sseg-") && !referenced.contains(n))
-      .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
-    if (!referenced.contains(".")) {
-      MetaIO.list(dir).filter(_.startsWith("shard="))
-        .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
-      MetaIO.deleteIfExists(metaPath(dir))
-    }
-  }
+      tombFraction: Double = SegmentStore.TombFraction): SymSegMeta =
+    toMeta(Store.compactTiered(dir, maxSegments, mergeFactor, tombFraction))
 }

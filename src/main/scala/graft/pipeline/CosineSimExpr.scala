@@ -29,9 +29,10 @@ import org.apache.spark.sql.types._
   *     `d / (sqrt(Σa²)·sqrt(Σb²))`, or 0.0 when either norm is 0;
   *   - a null ARRAY or a null ELEMENT → 0.0 (the HOF twin's null dot /
   *     null norm falls through `when(nn > 0, …).otherwise(0.0)`);
-  *   - length mismatch → NULL (zip_with pads with nulls → null dot
-  *     while both norms stay positive, so the `when` branch is taken
-  *     with a null numerator).
+  *   - length mismatch → NULL when both norms are positive (zip_with
+  *     pads with nulls → null dot, and the `when` branch is taken with a
+  *     null numerator), else 0.0 (a zero norm or a null element fails
+  *     the `nn > 0` test first).
   */
 case class CosineSimExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -97,14 +98,19 @@ object CosineSimExpr {
         org.apache.spark.sql.GraftColumnBridge.expression(b)))
 
   /** Static entry point used by both eval and the generated code.
-    * Returns null (boxed) ONLY on length mismatch; 0.0 for null arrays,
-    * null elements, or zero norms — see the class doc for why.
+    * Returns null (boxed) ONLY on a length mismatch between two
+    * positive-norm arrays; 0.0 for null arrays, null elements, or zero
+    * norms — see the class doc for why.
     */
   def compute(a: ArrayData, b: ArrayData, aFloat: Boolean,
       bFloat: Boolean): java.lang.Double = {
     if (a == null || b == null) return 0.0d
     val n = a.numElements()
-    if (b.numElements() != n) return null
+    if (b.numElements() != n) {
+      val (sa, sb) = (sumSq(a, aFloat), sumSq(b, bFloat))
+      return if (sa >= 0 && sb >= 0 && math.sqrt(sa) * math.sqrt(sb) > 0) null
+        else 0.0d
+    }
     var d = 0.0
     var sa = 0.0
     var sb = 0.0
@@ -120,5 +126,18 @@ object CosineSimExpr {
     }
     val nn = math.sqrt(sa) * math.sqrt(sb)
     if (nn > 0) d / nn else 0.0d
+  }
+
+  /** Σx² in the twin's left-fold order; −1 when an element is null. */
+  private def sumSq(a: ArrayData, isFloat: Boolean): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) return -1.0
+      val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      s += x * x
+      i += 1
+    }
+    s
   }
 }

@@ -104,6 +104,12 @@ object StreamOps {
         bytes.length, 42) & 0xffffffffL)
   }
 
+  /** One optional sidecar of [[indexRefreshBatch]]: its segment store and
+    * directory, how to lay down an empty base, and how to commit a batch.
+    */
+  private final case class Sidecar(store: graft.index.SegmentStore,
+      dir: String, init: DataFrame => Unit, refresh: DataFrame => Unit)
+
   /** Commit ONE micro-batch of documents (title, body, url — ids are
     * assigned here) into the block index at `dir` as an immutable
     * segment: the Structured-Streaming face of
@@ -138,39 +144,36 @@ object StreamOps {
     val corpusCols = batch.select(
       col("title").cast("string"), col("body").cast("string"),
       col("url").cast("string"))
+    val empty = corpusCols.withColumn("docId", lit(0L)).limit(0)
     if (!BlockIndex.isSegmented(dir) &&
         !graft.index.MetaIO.exists(s"$dir/${BlockIndex.StatsName}")) {
-      BlockIndex.build(
-        corpusCols.withColumn("docId", lit(0L)).limit(0), dir, layout)
+      BlockIndex.build(empty, dir, layout)
     }
-    // the optional positional sidecar commits the SAME batch under the
-    // SAME marker, BEFORE the block index: block-committed ⇒ positional-
-    // committed, so the block marker check below safely gates both, and
-    // a crash between the two replays into a positional genName no-op
+    // the optional sidecars — positional, gram (code-grep), symbol
+    // (ctags), in that order — commit the SAME batch under the SAME
+    // marker, BEFORE the block index: block-committed ⇒ sidecar-
+    // committed, so the block marker check below safely gates them all,
+    // and a crash between commits replays into sidecar genName no-ops
     // followed by the block commit (ids re-derive identically because
-    // the block maxDocId is still the pre-crash value)
-    posDir.foreach { pd =>
-      if (!PositionalIndex.exists(pd))
-        PositionalIndex.build(
-          corpusCols.withColumn("docId", lit(0L)).limit(0), pd, posShards)
-    }
-    // the optional gram (code-grep) sidecar follows the same discipline:
-    // committed FIRST under the same marker, so the block marker check
-    // gates it and a crash between commits converges on replay
-    gramDir.foreach { gd =>
-      if (!GramIndex.exists(gd))
-        GramIndex.build(
-          corpusCols.withColumn("docId", lit(0L)).limit(0),
-          "docId", "body", gd, nShards = gramShards)
-    }
-    // the optional symbol (ctags) sidecar: same discipline again —
-    // committed FIRST under the same marker, gated by the block marker
-    symDir.foreach { sd =>
-      if (!SymbolIndex.exists(sd))
-        SymbolIndex.build(
-          corpusCols.withColumn("docId", lit(0L)).limit(0),
-          "docId", "body", sd, nShards = symShards)
-    }
+    // the block maxDocId is still the pre-crash value). Nextword arming
+    // is DERIVED and idempotent (immutable segments; armed ones skip), so
+    // it sits outside the commit protocol: a crash mid-arm leaves that
+    // segment on the unigram path and the next batch heals it; a
+    // replayed batch re-arms nothing. Per-batch cost is one
+    // pair-aggregation over the DELTA segment only.
+    val sidecars = posDir.map(pd => Sidecar(PositionalIndex.Store, pd,
+        PositionalIndex.build(_, pd, posShards),
+        { docs =>
+          PositionalIndex.refresh(docs, pd, Some(marker))
+          if (armNextword) PositionalIndex.buildNextword(pd)
+        })).toSeq ++
+      gramDir.map(gd => Sidecar(GramIndex.Store, gd,
+        GramIndex.build(_, "docId", "body", gd, nShards = gramShards),
+        GramIndex.refresh(_, "docId", "body", gd, Some(marker)))) ++
+      symDir.map(sd => Sidecar(SymbolIndex.Store, sd,
+        SymbolIndex.build(_, "docId", "body", sd, nShards = symShards),
+        SymbolIndex.refresh(_, "docId", "body", sd, Some(marker))))
+    sidecars.foreach(s => if (!s.store.exists(s.dir)) s.init(empty))
     if (BlockIndex.isSegmented(dir)) {
       val segs = graft.index.BlockIndex.readSegments(dir).segs
       // the bare-batchId marker is the pre-runTag legacy format: a
@@ -198,52 +201,29 @@ object StreamOps {
     // already holds the CURRENT batch's marker is mid-replay of an
     // uncommitted batch and must not compact this cycle (its refresh
     // below no-ops; compaction runs on the next committed batch).
-    if (compactEvery > 0 && BlockIndex.isSegmented(dir) &&
-        BlockIndex.readSegments(dir).segs.size >= compactEvery)
-      BlockIndex.compact(dir)
-    if (compactEvery > 0) posDir.foreach { pd =>
-      if (PositionalIndex.isSegmented(pd) && {
-            val segs = PositionalIndex.readSegments(pd).segs
-            segs.size >= compactEvery && !segs.contains(s"pseg-$marker")
-          })
-        PositionalIndex.compact(pd)
-    }
-    if (compactEvery > 0) gramDir.foreach { gd =>
-      if (GramIndex.isSegmented(gd) && {
-            val segs = GramIndex.readSegments(gd).segs
-            segs.size >= compactEvery && !segs.contains(s"gseg-$marker")
-          })
-        GramIndex.compact(gd)
-    }
-    if (compactEvery > 0) symDir.foreach { sd =>
-      if (SymbolIndex.isSegmented(sd) && {
-            val segs = SymbolIndex.readSegments(sd).segs
-            segs.size >= compactEvery && !segs.contains(s"sseg-$marker")
-          })
-        SymbolIndex.compact(sd)
+    def settledSegs(s: Sidecar): Option[Seq[String]] =
+      if (!s.store.isSegmented(s.dir)) None
+      else Some(s.store.readList(s.dir).segs)
+        .filterNot(_.contains(s.store.prefix + marker))
+    if (compactEvery > 0) {
+      if (BlockIndex.isSegmented(dir) &&
+          BlockIndex.readSegments(dir).segs.size >= compactEvery)
+        BlockIndex.compact(dir)
+      sidecars.foreach { s =>
+        if (settledSegs(s).exists(_.size >= compactEvery)) s.store.compact(s.dir)
+      }
     }
     // tiered maintenance (compactTiered): partial merges of the smallest
     // segments — bounded write amplification, the steady-state policy for
     // a long-running sink (compactEvery's full fold rewrites the whole
-    // index every N batches). Same crash-window guard as above: a sidecar
-    // already holding the CURRENT batch's marker is mid-replay of an
-    // uncommitted batch and must not fold that marker away.
-    if (maxSegments > 0 && BlockIndex.isSegmented(dir))
-      BlockIndex.compactTiered(dir, maxSegments)
-    if (maxSegments > 0) posDir.foreach { pd =>
-      if (PositionalIndex.isSegmented(pd) &&
-          !PositionalIndex.readSegments(pd).segs.contains(s"pseg-$marker"))
-        PositionalIndex.compactTiered(pd, maxSegments)
-    }
-    if (maxSegments > 0) gramDir.foreach { gd =>
-      if (GramIndex.isSegmented(gd) &&
-          !GramIndex.readSegments(gd).segs.contains(s"gseg-$marker"))
-        GramIndex.compactTiered(gd, maxSegments)
-    }
-    if (maxSegments > 0) symDir.foreach { sd =>
-      if (SymbolIndex.isSegmented(sd) &&
-          !SymbolIndex.readSegments(sd).segs.contains(s"sseg-$marker"))
-        SymbolIndex.compactTiered(sd, maxSegments)
+    // index every N batches). Same crash-window guard as above.
+    if (maxSegments > 0) {
+      if (BlockIndex.isSegmented(dir)) BlockIndex.compactTiered(dir, maxSegments)
+      sidecars.foreach { s =>
+        if (settledSegs(s).nonEmpty)
+          s.store.compactTiered(s.dir, maxSegments, 0,
+            graft.index.SegmentStore.TombFraction)
+      }
     }
     val docs = docsWithIds.getOrElse {
       val start =
@@ -251,17 +231,7 @@ object StreamOps {
       graft.sources.CorpusSource.withDenseDocIds(
         corpusCols, idSortCols.map(col), firstId = start)
     }
-    posDir.foreach(pd => PositionalIndex.refresh(docs, pd, Some(marker)))
-    // nextword arming is DERIVED and idempotent (immutable segments;
-    // armed ones skip), so it sits outside the commit protocol: a crash
-    // mid-arm leaves that segment on the unigram path and the next batch
-    // heals it; a replayed batch re-arms nothing. Per-batch cost is one
-    // pair-aggregation over the DELTA segment only.
-    if (armNextword) posDir.foreach(PositionalIndex.buildNextword)
-    gramDir.foreach(gd =>
-      GramIndex.refresh(docs, "docId", "body", gd, Some(marker)))
-    symDir.foreach(sd =>
-      SymbolIndex.refresh(docs, "docId", "body", sd, Some(marker)))
+    sidecars.foreach(_.refresh(docs))
     BlockIndex.refresh(docs, dir, genName = Some(marker))
   }
 
@@ -312,13 +282,12 @@ object StreamOps {
       genTag: String = "", posDir: Option[String] = None,
       gramDir: Option[String] = None,
       symDir: Option[String] = None): Unit = {
-    import graft.index.{BlockIndex, GramIndex, PositionalIndex, SymbolIndex}
     val marker = if (genTag.isEmpty) s"b$batchId" else s"b$genTag-$batchId"
     val ids = batch.select(col("docId").cast("long").as("docId"))
-    posDir.foreach(pd => PositionalIndex.delete(ids, pd, Some(marker)))
-    gramDir.foreach(gd => GramIndex.delete(ids, gd, Some(marker)))
-    symDir.foreach(sd => SymbolIndex.delete(ids, sd, Some(marker)))
-    BlockIndex.delete(ids, dir, Some(marker))
+    // sidecars first, block last; every index's delete is the same
+    // tombstone commit on its own directory
+    (posDir ++ gramDir ++ symDir ++ Seq(dir)).foreach(d =>
+      graft.index.BlockIndex.delete(ids, d, Some(marker)))
   }
 
   /** A live delete stream against a persisted index: every micro-batch

@@ -337,11 +337,38 @@ class GramIndexSpec extends AnyFunSuite {
   test("indexed regex ≡ in-memory ≡ brute") {
     val dir = java.nio.file.Files.createTempDirectory("gramidx-re").toString
     GramIndex.build(docs, "doc_id", "text", dir, k = 3, nShards = 4)
-    for (p <- Seq("read.*Frame", "spark.*parquet", "zz.*yy", "t[aA]ble"))
+    // escaped range endpoints: `]`..`z` (matches "table") and `+`..`]`
+    // (matches "Table")
+    for (p <- Seq("read.*Frame", "spark.*parquet", "zz.*yy", "t[aA]ble",
+        "t[\\]-z]ble", "[+-\\]]able"))
       assert(
         GramIndex.regexSearchIndexed(spark, dir, docs, "doc_id", "text", p)
           .collect().map(_.getLong(0)).toSet == bruteRegexIds(p),
         s"pattern '$p'")
+  }
+
+  test("char-class ranges with escaped endpoints: indexed ≡ brute") {
+    val sp = spark
+    import sp.implicits._
+    val odd = Seq((1L, "t_ble"), (2L, "t^ble"), (3L, "t]ble"), (4L, "t-ble"),
+      (5L, "t+ble"), (6L, "tAble\nt`ble"), (7L, "tzble")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("gramidx-range").toString
+    GramIndex.build(odd, "doc_id", "text", dir, k = 3, nShards = 4)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getLong(0)).toSet
+    for (p <- Seq("t[\\]-a]ble", "t[+-\\]]ble", "t[\\]-\\`]ble")) {
+      val brute = ids(odd.where(col("text").rlike(p)))
+      assert(brute.nonEmpty, p)
+      assert(ids(GramIndex.regexSearch(odd, "doc_id", "text", p)) == brute,
+        s"inline '$p'")
+      assert(ids(GramIndex.regexSearchIndexed(spark, dir, odd, "doc_id",
+        "text", p)) == brute, s"indexed '$p'")
+      assert(GramIndex.grepLinesRegexIndexed(spark, dir, odd, "doc_id", "text", p)
+        .collect().map(_.getLong(0)).toSet == brute, s"grep '$p'")
+    }
+    // nested classes and intersections stay outside the gram subset
+    assert(GramIndex.regexGramQuery("t[a[b]]ble", 3).isEmpty)
+    assert(GramIndex.regexGramQuery("t[a-z&&[^x]]ble", 3).isEmpty)
   }
 
   test("grepLines: per-matching-line rows with 1-based numbers; empty lines keep numbering") {

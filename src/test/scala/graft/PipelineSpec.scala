@@ -843,7 +843,10 @@ class PipelineSpec extends AnyFunSuite {
     val rows = (0L until 200L).map(i => (i, fvec(i), fvec(i * 7 + 3))) ++
       Seq((997L, Array.fill(16)(0.0f), fvec(1)), // zero-norm left
         (998L, fvec(2), Array.fill(16)(0.0f)), // zero-norm right
-        (999L, Array.fill(16)(0.0f), Array.fill(16)(0.0f)))
+        (999L, Array.fill(16)(0.0f), Array.fill(16)(0.0f)),
+        // length mismatch with a zero norm on either side: 0.0, not NULL
+        (995L, Array.fill(16)(0.0f), fvec(4).take(8)),
+        (996L, fvec(5), Array.fill(8)(0.0f)))
     val df = rows.toDF("id", "a", "b")
     val got = df.select(col("id"),
         Similarity.cosine(col("a"), col("b")).as("n"),

@@ -6,7 +6,7 @@ Usage: bench_guard.py BENCH_prev.json BENCH_curr.json [CHANGES_note.md]
 Flags every shared query entry that regressed more than GUARD_FRAC
 (25%) AND more than ABS_FLOOR seconds (entries under the floor are
 job-floor noise at bench scale — documented in BENCH.md). An entry is
-excused when the optional CHANGES note mentions it by name (a
+excused when the optional CHANGES note mentions it by its whole name (a
 deliberate, documented cost). Exits 1 on unexcused regressions.
 
 VM-day drift caveat (BENCH.md ADR): absolute numbers on this VM swing
@@ -40,6 +40,13 @@ def entries(path):
             ("value", "sf", "index_docs_per_sec")}
 
 
+def mentions(note, name):
+    """True when `note` names the entry as a whole word: a note about
+    `ivfpq_build` must not excuse `pq_build`."""
+    return re.search(rf'(?<![a-z0-9_]){re.escape(name)}(?![a-z0-9_])',
+                     note) is not None
+
+
 def main() -> int:
     if len(sys.argv) < 3:
         print(__doc__)
@@ -53,7 +60,7 @@ def main() -> int:
         if c is None or p <= 0 or c <= 0:
             continue
         if c - p > ABS_FLOOR and (c - p) / p > GUARD_FRAC:
-            if name in note:
+            if mentions(note, name):
                 print(f"excused {name}: {p:.3f}s -> {c:.3f}s (in CHANGES note)")
             else:
                 bad.append((name, p, c))
