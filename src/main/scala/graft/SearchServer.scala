@@ -62,17 +62,8 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
         ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
         ex.sendResponseHeaders(200, body.length)
         ex.getResponseBody.write(body)
-      } catch {
-        case e: Throwable =>
-          // the 200 headers may already be out (e.g. client disconnected
-          // mid-body) — a second sendResponseHeaders throws and would
-          // mask the original failure
-          try {
-            val msg = s"internal error: ${e.getMessage}".getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(500, msg.length)
-            ex.getResponseBody.write(msg)
-          } catch { case _: Throwable => () }
-      } finally ex.close()
+      } catch { case e: Throwable => internalError(ex, e) }
+      finally ex.close()
   })
 
   // autocomplete endpoint: GET /suggest?p=<prefix> → one completion per
@@ -89,16 +80,24 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
         ex.getResponseHeaders.set("Content-Type", "text/plain; charset=utf-8")
         ex.sendResponseHeaders(200, if (body.isEmpty) -1 else body.length)
         if (body.nonEmpty) ex.getResponseBody.write(body)
-      } catch {
-        case e: Throwable =>
-          try {
-            val msg = s"internal error: ${e.getMessage}"
-              .getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(500, msg.length)
-            ex.getResponseBody.write(msg)
-          } catch { case _: Throwable => () }
-      } finally ex.close()
+      } catch { case e: Throwable => internalError(ex, e) }
+      finally ex.close()
   })
+
+  /** Answer 500 with the failure's message, and log the request and the
+    * stack trace to stderr. The 200 headers may already be out (e.g. the
+    * client disconnected mid-body): a second sendResponseHeaders throws,
+    * and must not mask the original failure.
+    */
+  private def internalError(ex: HttpExchange, e: Throwable): Unit = {
+    System.err.println(s"[graft-serve] 500 ${ex.getRequestURI}: $e")
+    e.printStackTrace()
+    try {
+      val msg = s"internal error: ${e.getMessage}".getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(500, msg.length)
+      ex.getResponseBody.write(msg)
+    } catch { case _: Throwable => () }
+  }
 
   /** Bound port (ephemeral when constructed with port = 0). */
   def boundPort: Int = server.getAddress.getPort

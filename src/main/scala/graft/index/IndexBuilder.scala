@@ -2,7 +2,7 @@ package graft.index
 
 import graft.CorpusStats
 import graft.analysis.Analyzer._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -40,14 +40,32 @@ final case class IndexBundle(
     * of DISTINCT TERMS, not documents (reference index_inverted.go:128-135).
     * Rank identity on the reference query set requires this.
     */
-  def idfCol(df: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    when(df > 0 && lit(stats.vocabSize) > 0,
-      log(10.0, lit(stats.vocabSize.toDouble) / df)).otherwise(0.0)
+  def idfCol(df: Column): Column = IndexBundle.idfCol(stats.vocabSize, df)
 
   def unpersist(): Unit = {
     postings.unpersist(); docLens.unpersist()
     termStats.unpersist(); kgramIndex.unpersist()
   }
+}
+
+object IndexBundle {
+
+  /** The one IDF definition of every BM25/TF-IDF scorer: Spark's
+    * `log(10, V/df)`, 0 when V or df is 0.
+    */
+  def idfCol(vocabSize: Column, df: Column): Column =
+    when(df > 0 && vocabSize > 0, log(10.0, vocabSize / df)).otherwise(0.0)
+
+  def idfCol(vocabSize: Long, df: Column): Column =
+    idfCol(lit(vocabSize.toDouble), df)
+
+  /** Driver twin of [[idfCol]], bit-identical to it: Spark's `log(base,
+    * x)` evaluates `StrictMath.log(x) / StrictMath.log(base)`, which is
+    * not always `math.log10(x)` (V/df = 1000 gives 2.9999999999999996).
+    */
+  def idf(vocabSize: Long, df: Long): Double =
+    if (vocabSize <= 0 || df <= 0) 0.0
+    else StrictMath.log(vocabSize.toDouble / df.toDouble) / StrictMath.log(10.0)
 }
 
 object IndexBuilder {

@@ -355,15 +355,37 @@ object SegmentStore {
       Some(TombMeta(j.strings("gens"), j.get("nIds").getOrElse(0L)))
     }
 
+  /** An opened tombstone state: the committed deleted docIds as one
+    * relation, and the committed row count that picks the join strategy.
+    */
+  final case class Tombs(ids: DataFrame, nIds: Long) {
+
+    /** Filter a relation with a `docId` column down to live docs, keeping
+      * its column order. A small committed delete set broadcasts; past
+      * [[BroadcastTombCap]] the planner chooses. A left-anti join ignores
+      * duplicate keys, so an id deleted in several generations needs no
+      * `distinct` (which would cost an aggregation and a shuffle).
+      */
+    def live(rel: DataFrame): DataFrame =
+      rel.join(if (nIds <= BroadcastTombCap) broadcast(ids) else ids,
+          Seq("docId"), "left_anti")
+        .select(rel.columns.map(col).toIndexedSeq: _*)
+  }
+
+  /** Open the committed tombstone generations `m` of `dir`. */
+  def openTombs(spark: SparkSession, dir: String, m: TombMeta): Tombs =
+    Tombs(m.gens.map(g => spark.read.parquet(s"$dir/$g").select(col("docId")))
+      .reduce(_ unionByName _), m.nIds)
+
+  private def committedTombs(spark: SparkSession, dir: String): Option[Tombs] =
+    readTombMeta(dir).filter(_.gens.nonEmpty).map(openTombs(spark, dir, _))
+
   /** The committed tombstoned docIds as a relation (None when no delete
     * was ever committed — the fast path pays one metadata existence
     * check and nothing else).
     */
   def tombstones(spark: SparkSession, dir: String): Option[DataFrame] =
-    readTombMeta(dir).filter(_.gens.nonEmpty).map { m =>
-      m.gens.map(g => spark.read.parquet(s"$dir/$g").select(col("docId")))
-        .reduce(_ unionByName _)
-    }
+    committedTombs(spark, dir).map(_.ids)
 
   /** Commit one immutable tombstone generation for `ids` (a `docId`
     * column) under `dir`, named by `genName` or by the delete set's
@@ -397,15 +419,9 @@ object SegmentStore {
   }
 
   /** Filter a relation with a `docId` column down to live (untombstoned)
-    * docs, keeping its column order. No tombstones ⇒ the relation is
-    * returned untouched; a small committed delete set broadcasts; past
-    * [[BroadcastTombCap]] the planner chooses.
+    * docs ([[Tombs.live]]); no tombstones ⇒ the relation is returned
+    * untouched.
     */
   def liveOnly(dir: String, rel: DataFrame): DataFrame =
-    readTombMeta(dir).filter(_.gens.nonEmpty).fold(rel) { m =>
-      val t = tombstones(rel.sparkSession, dir).get.distinct()
-      rel.join(if (m.nIds <= BroadcastTombCap) broadcast(t) else t,
-          Seq("docId"), "left_anti")
-        .select(rel.columns.map(col).toIndexedSeq: _*)
-    }
+    committedTombs(rel.sparkSession, dir).fold(rel)(_.live(rel))
 }

@@ -901,8 +901,7 @@ object QueryEngine {
         lit(wBody) * size(Analyzer.tokensCol(col("body"))))
         .cast("double").as("wdl"))
     val avg = wdl.agg((sum(col("wdl")) / count(lit(1))).as("__avgwdl"))
-    val idf = when(col("df") > 0 && col("__v") > 0,
-      log(10.0, col("__v") / col("df"))).otherwise(0.0)
+    val idf = graft.index.IndexBundle.idfCol(col("__v"), col("df"))
     val partial = idf * (col("wtf") * (k1 + 1)) /
       (lit(k1) * (lit(1 - b) + lit(b) * col("wdl") / col("__avgwdl")) +
         col("wtf"))

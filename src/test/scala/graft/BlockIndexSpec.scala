@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{BlockIndex, IndexBuilder, VarByte}
+import graft.index.{BlockIndex, IndexBuilder, IndexBundle, VarByte}
 import graft.query.QueryEngine
 import graft.sources.CorpusSource
 import org.apache.spark.sql.functions._
@@ -504,6 +504,143 @@ class BlockIndexSpec extends AnyFunSuite {
       assert(b.map(_._2).toSeq == single.map(_._1).toSeq, s"rank mismatch q='$q'")
       b.map(_._3).zip(single.map(_._2)).foreach { case (x, y) =>
         assert(math.abs(x - y) < 1e-9, s"score mismatch q='$q'")
+      }
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // bm25TopK routes and the opened epoch
+  // ------------------------------------------------------------------
+
+  // one block per term: 500 docs under a 4096-doc span, so short queries
+  // take the bound route (coldDir's span of 64 leaves the other side of
+  // the 8-block cut to the envelope and WAND routes)
+  private val wideLayout = BlockIndex.Layout(blockSpan = 4096, nShards = 8)
+  private val rankQueries = Seq("spark join fast window", "table",
+    "spark spark join", "customer query stream batch vector", "nosuchterm spark")
+
+  private def assertSameRanking(got: Seq[(Long, Double)],
+      want: Seq[(Long, Double)], what: String): Unit = {
+    assert(got.map(_._1) == want.map(_._1), s"rank mismatch $what")
+    got.zip(want).foreach { case ((_, g), (_, w)) =>
+      assert(math.abs(g - w) < 1e-9, s"score mismatch $what")
+    }
+  }
+
+  private def naiveRanking(e: QueryEngine, q: String) =
+    e.bm25Query(q).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  test("blockSpan 4096: WAND == naive BM25 (rank + score) on plain, refreshed and tombstoned indexes") {
+    val engine = new QueryEngine(IndexBuilder.build(docs, persist = false))
+    val naive = rankQueries.map(q => q -> naiveRanking(engine, q)).toMap
+    val plain = tmpDir("blockidx-wide").toString
+    BlockIndex.build(docs, plain, wideLayout)
+    val refreshed = tmpDir("blockidx-wide-seg").toString
+    BlockIndex.build(docs.where(col("docId") < 250), refreshed, wideLayout)
+    BlockIndex.refresh(docs.where(col("docId") >= 250), refreshed)
+    val tombed = tmpDir("blockidx-wide-tomb").toString
+    BlockIndex.build(docs, tombed, wideLayout)
+    BlockIndex.delete(docs.select(col("docId")).where(pmod(col("docId"), lit(7)) === 3), tombed)
+    for ((dir, live) <- Seq[(String, Long => Boolean)](
+        plain -> (_ => true), refreshed -> (_ => true), tombed -> (_ % 7 != 3));
+        q <- rankQueries; k <- Seq(1, 5, 20))
+      assertSameRanking(topk(dir, q, k), naive(q).filter(h => live(h._1)).take(k),
+        s"dir=$dir q='$q' k=$k")
+    engine.index.unpersist()
+  }
+
+  test("bm25TopK launches one Spark job on a one-block plain index, at most two when tombstoned") {
+    val sp = spark
+    import sp.implicits._
+    val d = tmpDir("blockidx-jobs").toString
+    BlockIndex.build(docs, d, wideLayout)
+    val log = new graft.tools.JobLog(spark)
+    def jobsOf(q: String): (Int, Seq[(Long, Double)]) = {
+      topk(d, q) // opens the epoch (its schema inference is a job of its own)
+      val (hits, jobs) = log.record(topk(d, q))
+      (jobs.size, hits)
+    }
+    for (q <- Seq("spark join fast window", "table")) {
+      val (n, hits) = jobsOf(q)
+      assert(n == 1, s"q='$q' launched $n jobs")
+      assert(hits.nonEmpty)
+      assert(BlockIndex.lastDriverMetaRows == 0L)
+    }
+    BlockIndex.delete(Seq(1L, 2L, 3L).toDF("docId"), d)
+    val (n, hits) = jobsOf("spark join fast window")
+    assert(n <= 2, s"tombstoned query launched $n jobs")
+    assert(hits.nonEmpty && hits.forall(h => h._1 > 3L || h._1 < 1L))
+  }
+
+  test("opened epoch follows delete, refresh and overwrite rebuild in one JVM") {
+    val sp = spark
+    import sp.implicits._
+    val d = tmpDir("blockidx-epoch").toString
+    val q = "spark join fast window"
+    val k = 10
+    val full = new QueryEngine(IndexBuilder.build(docs, persist = false))
+    BlockIndex.build(docs.where(col("docId") < 300), d, wideLayout)
+    val first = topk(d, q, k + 1)
+    assert(first.nonEmpty)
+    // delete: the dropped doc vanishes, survivors keep their (stale) scores
+    val gone = first.head._1
+    BlockIndex.delete(Seq(gone).toDF("docId"), d)
+    assertSameRanking(topk(d, q, k), first.tail.take(k), "after delete")
+    // refresh: the new segment's docs rank, the tombstone still holds
+    BlockIndex.refresh(docs.where(col("docId") >= 300), d)
+    assertSameRanking(topk(d, q, k),
+      naiveRanking(full, q).filter(_._1 != gone).take(k), "after refresh")
+    // overwrite rebuild: a smaller corpus, no tombstones
+    BlockIndex.build(docs.where(col("docId") < 200), d, wideLayout, overwrite = true)
+    val small = new QueryEngine(IndexBuilder.build(docs.where(col("docId") < 200), persist = false))
+    assertSameRanking(topk(d, q, k), naiveRanking(small, q).take(k), "after overwrite")
+    full.index.unpersist()
+    small.index.unpersist()
+  }
+
+  test("an id deleted in two generations: results unchanged, no aggregate on the tombstone side") {
+    val sp = spark
+    import sp.implicits._
+    val d = tmpDir("blockidx-tomb-dup").toString
+    BlockIndex.build(docs.where(col("docId") < 100), d, layout)
+    val q = "spark join fast window"
+    BlockIndex.delete(Seq(5L, 6L).toDF("docId"), d, Some("a"))
+    val once = topk(d, q, 20)
+    BlockIndex.delete(Seq(5L).toDF("docId"), d, Some("b"))
+    assert(BlockIndex.readTombMeta(d).get.gens.size == 2)
+    assert(topk(d, q, 20) == once)
+    val live = BlockIndex.liveDocIds(spark, d)
+    val ids = live.collect().map(_.getLong(0)).toSet
+    assert(ids.size == 98 && !ids(5L) && !ids(6L))
+    val plan = live.queryExecution.executedPlan.toString
+    assert(!plan.contains("HashAggregate"), s"tombstone side aggregates:\n$plan")
+  }
+
+  test("driver IDF == IndexBundle.idfCol bit for bit (1 <= df <= V <= 2000 sweep)") {
+    val sp = spark
+    import sp.implicits._
+    // math.log10 is not Spark's log(10, x): the driver must use the latter
+    assert(IndexBundle.idf(1000, 1) != math.log10(1000.0))
+    assert(IndexBundle.idf(0, 0) == 0.0 && IndexBundle.idf(10, 0) == 0.0)
+    val bits = udf((x: Double) => java.lang.Double.doubleToRawLongBits(x))
+    val driverBits = udf((v: Long, df: Long) =>
+      java.lang.Double.doubleToRawLongBits(IndexBundle.idf(v, df)))
+    val pairs = spark.range(1, 2001).toDF("V")
+      .crossJoin(spark.range(1, 2001).toDF("df"))
+      .where(col("df") <= col("V"))
+    val mismatches = pairs.where(
+      bits(IndexBundle.idfCol(col("V").cast("double"), col("df"))) =!=
+        driverBits(col("V"), col("df")))
+    assert(pairs.count() == 2001000L)
+    assert(mismatches.count() == 0L)
+    // the literal-V form the scorers plan with
+    for (v <- Seq(1L, 999L, 1000L, 2000L)) {
+      val got = spark.range(0, v + 1).toDF("df")
+        .select(col("df"), IndexBundle.idfCol(v, col("df")))
+        .as[(Long, Double)].collect()
+      got.foreach { case (df, x) =>
+        assert(java.lang.Double.doubleToRawLongBits(x) ==
+          java.lang.Double.doubleToRawLongBits(IndexBundle.idf(v, df)), s"V=$v df=$df")
       }
     }
   }

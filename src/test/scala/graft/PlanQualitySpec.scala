@@ -48,6 +48,18 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(elsewhere.count() == 0) // and nowhere else → pruning is sound
   }
 
+  test("bm25TopK single-task plan: no Exchange, shard partition filter, In(term) pushed") {
+    // 500 docs under a 256-doc span: two block rows per term, so a
+    // two-term query is bounded by committed metadata alone
+    val df = BlockIndex.bm25TopK(spark, idxDir, "spark join", 5)
+    assert(df.collect().nonEmpty)
+    val plan = planOf(df)
+    assert(!plan.contains("Exchange"), s"single-task plan must not exchange:\n$plan")
+    assert("PartitionFilters: \\[[^\\]]*shard".r.findFirstIn(plan).nonEmpty,
+      s"shards must be pruned by a partition filter:\n$plan")
+    assert(plan.contains("PushedFilters: [In(term"), s"term filter not pushed:\n$plan")
+  }
+
   test("gram index query: In(gram) pushed to parquet; needle grams live only in routed shards") {
     val sp = spark
     import sp.implicits._

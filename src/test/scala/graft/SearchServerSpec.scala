@@ -170,6 +170,26 @@ class SearchServerSpec extends AnyFunSuite {
     assert(get("suggest?p=zzzz")._2.isEmpty)
   }
 
+  test("engine failure: 500 to the client, message and stack trace on stderr") {
+    // a docs relation without `title` makes every hit's materialize throw
+    val broken = new SearchServer(engine, docs.drop("title"), port = 0,
+      serpCacheTtlMs = 0L)
+    val port = broken.start()
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val resp =
+      try client.send(HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$port/?q=matrix+communication+channel&alg=BM25"))
+          .GET().build(), HttpResponse.BodyHandlers.ofString())
+      finally { System.setErr(saved); broken.stop() }
+    assert(resp.statusCode() == 500)
+    val msg = resp.body().stripPrefix("internal error: ").linesIterator.next()
+    val logged = err.toString("UTF-8")
+    assert(msg.nonEmpty && logged.contains(msg), s"stderr lacks '$msg':\n$logged")
+    assert(logged.contains("500 /?q=matrix"))
+  }
+
   test("server.search == the CLI query path (byName + paginate + materialize)") {
     val (hits, total) = server.search("matrix communication channel", "BM25", 1)
     assert(total == 2)
