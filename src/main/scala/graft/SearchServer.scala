@@ -5,6 +5,7 @@ import graft.index.IndexBuilder
 import graft.query.QueryEngine
 import graft.sources.CorpusSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
@@ -13,37 +14,39 @@ import java.nio.charset.StandardCharsets
   * `GET /?q=&alg=&page=` answers a query with the algorithm registry
   * (unknown → BM25, reference server.go:39-53), paginates 5 results per
   * page (server.go:11,23-28) and renders an HTML SERP with prev/next
-  * links. JDK-only (`com.sun.net.httpserver`) — no new dependency; the
-  * per-request Spark work is exactly the CLI's DataFrame plan, the server
-  * itself is stateless beyond the prebuilt index bundle.
+  * links. JDK-only (`com.sun.net.httpserver`) — no new dependency.
+  * Requests run on a fixed pool of [[SearchServer.HandlerThreads]]
+  * threads, so a slow SERP does not hold up an autocomplete keystroke.
+  * The server keeps no state beyond the prebuilt index bundle and three
+  * TTL'd LRU caches (SERP pages, did-you-mean, `/suggest`).
   */
 class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
     serpCacheTtlMs: Long = 60000L) {
+  import SearchServer.{PerPage, TtlLru}
 
   final case class Hit(docId: Long, title: String, url: String,
       snippet: String)
 
-  // ---- SERP cache -----------------------------------------------------
-  // Every request otherwise re-plans and re-runs the scoring job — a
-  // fixed multi-job Spark floor per hit of a head-heavy query
-  // distribution that serves identical results. A bounded LRU of
-  // fully-rendered pages (hits + total, snippets included) absorbs the
-  // repeats; the TTL bounds staleness against a concurrently refreshed
-  // persisted index (serpCacheTtlMs = 0 disables caching entirely).
-  private final case class SerpEntry(hits: Seq[Hit], total: Long, at: Long)
-  private val MaxSerpEntries = 256
-  private val serpCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, Int), SerpEntry](
-        64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int), SerpEntry]): Boolean =
-        size() > MaxSerpEntries
-    })
-  /** Requests answered from the SERP cache (observability + spec hook). */
-  @volatile private[graft] var cacheHits = 0L
+  // ---- caches ---------------------------------------------------------
+  // Every request otherwise re-plans and re-runs its Spark jobs — a fixed
+  // multi-job floor per hit of a head-heavy query distribution that
+  // serves identical results. Bounded LRUs of fully-rendered answers (a
+  // SERP's hits + total with snippets, a did-you-mean, a /suggest body)
+  // absorb the repeats; the TTL bounds staleness against a concurrently
+  // refreshed persisted index (serpCacheTtlMs = 0 disables all three).
+  private val serpCache = new TtlLru[(String, String, Int), (Seq[Hit], Long)](
+    256, serpCacheTtlMs)
+  private val didYouMeanCache = new TtlLru[String, Option[String]](64, serpCacheTtlMs)
+  private val suggestCache = new TtlLru[String, String](256, serpCacheTtlMs)
 
+  /** Requests answered from the SERP cache (observability + spec hook). */
+  private[graft] def cacheHits: Long = serpCache.hits.get
+
+  private val pool =
+    java.util.concurrent.Executors.newFixedThreadPool(SearchServer.HandlerThreads)
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  server.setExecutor(pool)
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try {
@@ -55,9 +58,9 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
         // zero results + a fixable typo → "did you mean" link (a bounded
         // vocab-sized candidate job, only on the empty-SERP path; cached
         // under the same TTL so a hammered dead query pays it once)
-        val didYouMean =
-          if (total == 0 && q.nonEmpty) suggestCached(q) else None
-        val body = html(q, alg, page, hits, total, didYouMean)
+        val suggestion =
+          if (total == 0 && q.nonEmpty) didYouMean(q) else None
+        val body = html(q, alg, page, hits, total, suggestion)
           .getBytes(StandardCharsets.UTF_8)
         ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
         ex.sendResponseHeaders(200, body.length)
@@ -74,9 +77,7 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
       try {
         val p = params(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
           .getOrElse("p", "")
-        val terms = engine.typeahead(p, 8).collect()
-          .map(_.getString(0)).mkString("\n")
-        val body = terms.getBytes(StandardCharsets.UTF_8)
+        val body = suggest(p).getBytes(StandardCharsets.UTF_8)
         ex.getResponseHeaders.set("Content-Type", "text/plain; charset=utf-8")
         ex.sendResponseHeaders(200, if (body.isEmpty) -1 else body.length)
         if (body.nonEmpty) ex.getResponseBody.write(body)
@@ -102,89 +103,63 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
   /** Bound port (ephemeral when constructed with port = 0). */
   def boundPort: Int = server.getAddress.getPort
   def start(): Int = { server.start(); boundPort }
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
 
   /** The query path shared by the handler and the spec: ranked results of
-    * `page` (5/page) materialized in rank order, plus the total count.
+    * `page` (5/page) in rank order with their previews, plus the total
+    * count. The ranking's page and total come from
+    * [[QueryEngine.serpPage]]; the page's rows then come in one narrow
+    * job: `docId, title, url` and the KWIC preview
+    * ([[graft.index.PositionalIndex.previewCol]]: best covering window
+    * when a hit contains every query term, else its first query term,
+    * else its lead tokens), ordered by rank on the driver.
     */
-  def search(query: String, alg: String, page: Int): (Seq[Hit], Long) = {
-    val key = (query, alg, page)
-    if (serpCacheTtlMs > 0) {
-      val e = serpCache.get(key)
-      if (e != null) {
-        if (System.currentTimeMillis() - e.at <= serpCacheTtlMs) {
-          cacheHits += 1
-          return (e.hits, e.total)
-        }
-        serpCache.remove(key)
-      }
+  def search(query: String, alg: String, page: Int): (Seq[Hit], Long) =
+    serpCache.getOrElseUpdate((query, alg, page)) {
+      val (ids, total) = engine.serpPage(alg, query, page, PerPage)
+      (if (ids.isEmpty) Nil else pageHits(query, alg, ids), total)
     }
-    // persist the ranked result so the scoring plan runs ONCE per
-    // request: count() materializes the cache, paginate+materialize read
-    // back the cached partitions instead of re-executing the query
-    val ranked = engine.byName(alg)(query)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val total = ranked.count()
-      val rows = engine.materialize(engine.paginate(ranked, page), docs)
-        .select("docId", "title", "url").collect()
-      // KWIC previews for the ≤5 page hits only: best covering window
-      // when a hit contains every query term, lead tokens otherwise
-      // (PositionalIndex.previewSnippets) — one bounded job per request
-      val terms = graft.analysis.Analyzer.tokenize(query)
-      val ids = rows.map(_.getAs[Long]("docId"))
-      val pageDocs = docs.where(org.apache.spark.sql.functions.col("docId")
-        .isin(ids.map(Long.box): _*))
-      val snippets: Map[Long, String] =
-        if (ids.isEmpty) Map.empty
-        else if (alg == "Grep" && query.nonEmpty)
-          // Grep hits are RAW substring matches (possibly crossing token
-          // boundaries), so the preview is the raw ±ctx-char excerpt
-          // with the needle bracketed — not the token-based KWIC window
-          graft.index.GramIndex.grepStats(pageDocs, "docId", "body",
-              query, ctx = 24)
-            .collect().map { r =>
-              val ex = r.getAs[String]("excerpt")
-              val i = ex.indexOf(query)
-              val marked =
-                if (i < 0) ex
-                else ex.substring(0, i) + "[" + query + "]" +
-                  ex.substring(i + query.length)
-              r.getLong(0) -> marked
-            }.toMap
-        else if (terms.isEmpty) Map.empty
-        else graft.index.PositionalIndex.previewSnippets(
-            pageDocs, terms, ctx = 3)
-          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val hits = rows.map { r =>
-        val id = r.getAs[Long]("docId")
-        Hit(id, r.getAs[String]("title"), r.getAs[String]("url"),
-          snippets.getOrElse(id, ""))
-      }
-      if (serpCacheTtlMs > 0)
-        serpCache.put(key,
-          SerpEntry(hits.toSeq, total, System.currentTimeMillis()))
-      (hits.toSeq, total)
-    } finally ranked.unpersist()
+
+  private def pageHits(query: String, alg: String, ids: Seq[Long]): Seq[Hit] = {
+    val terms = graft.analysis.Analyzer.tokenize(query)
+    val grep = alg == "Grep" && query.nonEmpty
+    val preview =
+      if (grep || terms.isEmpty) lit("")
+      else graft.index.PositionalIndex.previewCol(col("title"), col("body"), terms, ctx = 3)
+    val pageDocs = docs.where(col("docId").isin(ids.map(Long.box): _*))
+    val byId = pageDocs
+      .select(col("docId"), col("title"), col("url"), coalesce(preview, lit("")))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    // Grep hits are RAW substring matches (possibly crossing token
+    // boundaries), so the preview is the raw ±ctx-char excerpt with the
+    // needle bracketed — not the token-based KWIC window
+    val excerpts: Map[Long, String] =
+      if (!grep) Map.empty
+      else graft.index.GramIndex.grepStats(pageDocs, "docId", "body", query, ctx = 24)
+        .collect().map { r =>
+          val ex = r.getAs[String]("excerpt")
+          val i = ex.indexOf(query)
+          val marked =
+            if (i < 0) ex
+            else ex.substring(0, i) + "[" + query + "]" + ex.substring(i + query.length)
+          r.getLong(0) -> marked
+        }.toMap
+    ids.flatMap(byId.get).map { r =>
+      val id = r.getLong(0)
+      Hit(id, r.getString(1), r.getString(2),
+        excerpts.getOrElse(id, r.getString(3)))
+    }
   }
 
-  private val suggestCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (Option[String], Long)](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Option[String], Long)]): Boolean =
-        size() > 64
-    })
+  /** The did-you-mean rewrite of a zero-result query `q`, if any. */
+  private[graft] def didYouMean(q: String): Option[String] =
+    didYouMeanCache.getOrElseUpdate(q)(engine.suggestQuery(q))
 
-  private def suggestCached(q: String): Option[String] = {
-    if (serpCacheTtlMs <= 0) return engine.suggestQuery(q)
-    val e = suggestCache.get(q)
-    if (e != null && System.currentTimeMillis() - e._2 <= serpCacheTtlMs)
-      return e._1
-    val s = engine.suggestQuery(q)
-    suggestCache.put(q, (s, System.currentTimeMillis()))
-    s
-  }
+  /** The `/suggest` body for prefix `p`: up to 8 completions, one a line. */
+  private[graft] def suggest(p: String): String =
+    suggestCache.getOrElseUpdate(p) {
+      engine.typeahead(p, 8).collect().map(_.getString(0)).mkString("\n")
+    }
 
   private def params(raw: String): Map[String, String] =
     raw.split("&").iterator.filter(_.nonEmpty).map { kv =>
@@ -220,7 +195,7 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
     }.mkString("\n")
     val prev = if (page > 1)
       s"""<a id="prev" href="${pageUrl(q, alg, page - 1)}">prev</a>""" else ""
-    val next = if (page.toLong * 5 < total)
+    val next = if (page.toLong * PerPage < total)
       s"""<a id="next" href="${pageUrl(q, alg, page + 1)}">next</a>""" else ""
     s"""<!doctype html>
        |<html><head><title>graft search</title></head><body>
@@ -229,7 +204,7 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
        |<button>Search</button></form>
        |<p>query='${esc(q)}' algorithm=${esc(alg)} page=$page results=$total</p>
        |$suggest
-       |<ol start="${(page - 1) * 5 + 1}">
+       |<ol start="${(page - 1).toLong * PerPage + 1}">
        |$items
        |</ol>
        |$prev $next
@@ -242,6 +217,44 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
   * server.go:98-103).
   */
 object SearchServer {
+
+  /** Results per SERP page (reference server.go:11). */
+  val PerPage = 5
+
+  /** Request threads: enough that autocomplete keystrokes and cache hits
+    * answer while SERP misses run, few enough that concurrent misses do
+    * not oversubscribe a small local Spark.
+    */
+  val HandlerThreads = 4
+
+  /** A bounded LRU map whose entries expire `ttlMs` after they were put;
+    * `ttlMs` ≤ 0 keeps nothing. Thread-safe. `compute` runs outside the
+    * lock, so concurrent misses on one key each compute, and the last put
+    * wins.
+    */
+  private[graft] final class TtlLru[K, V](capacity: Int, ttlMs: Long) {
+    private val entries =
+      new java.util.LinkedHashMap[K, (V, Long)](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[K, (V, Long)]): Boolean =
+          size() > capacity
+      }
+    /** Lookups answered from the map. */
+    val hits = new java.util.concurrent.atomic.AtomicLong
+
+    def getOrElseUpdate(key: K)(compute: => V): V =
+      if (ttlMs <= 0) compute
+      else {
+        val now = System.currentTimeMillis()
+        entries.synchronized(Option(entries.get(key))).filter(now - _._2 <= ttlMs) match {
+          case Some((v, _)) => hits.incrementAndGet(); v
+          case None =>
+            val v = compute
+            entries.synchronized(entries.put(key, (v, System.currentTimeMillis())))
+            v
+        }
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) {
       System.err.println(

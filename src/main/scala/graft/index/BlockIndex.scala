@@ -633,7 +633,8 @@ object BlockIndex {
       if (persist) kg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else kg
     }
-    IndexBundle(postings, docLens, termStats, kgramIndex, e.stats, k)
+    IndexBundle(postings, docLens, termStats, kgramIndex, e.stats, k,
+      blockDir = Some(dir))
   }
 
   // ------------------------------------------------------------------
@@ -765,13 +766,56 @@ object BlockIndex {
     */
   def bm25TopK(
       spark: SparkSession, dir: String, query: String, k: Int,
-      k1: Double = 0.9, b: Double = 0.4): DataFrame = {
-    import spark.implicits._
+      k1: Double = 0.9, b: Double = 0.4): DataFrame =
+    route(spark, epoch(spark, dir), query, k, k1, b) match {
+      case NoMatch =>
+        import spark.implicits._
+        Seq.empty[(Long, Double)].toDF("docId", "score")
+      case OneTask(plan) => plan(false)
+      case Wand(top, _) => top
+    }
+
+  /** [[bm25TopK]]'s top `k` as (docId, score) rows plus the number of live
+    * documents matching any query term — a SERP's page and its total, on
+    * the same routes. Routes 1 and 2 answer both in their one job: the
+    * single-task plan carries the match count as a window column over its
+    * one partition (no exchange). The WAND route adds one distinct count
+    * of live docIds over the terms' blocks. A `k` above the committed
+    * document count (which bounds the total) is capped there, so any
+    * page number is safe to ask for.
+    */
+  private[graft] def bm25TopKWithTotal(
+      spark: SparkSession, dir: String, query: String, k: Long,
+      k1: Double = 0.9, b: Double = 0.4): (Seq[(Long, Double)], Long) = {
     val e = epoch(spark, dir)
+    val kk = math.max(1L, math.min(k, e.stats.nDocs)).toInt
+    def pairs(rows: Array[Row]) = rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    route(spark, e, query, kk, k1, b) match {
+      case NoMatch => (Nil, 0L)
+      case OneTask(plan) =>
+        val rows = plan(true).collect()
+        (pairs(rows), rows.headOption.fold(0L)(_.getLong(2)))
+      case Wand(top, candidates) =>
+        (pairs(top.collect()),
+          candidates.agg(count_distinct(col("docId"))).head().getLong(0))
+    }
+  }
+
+  /** How [[bm25TopK]] answers a query: nothing can match; the single-task
+    * plan of routes 1 and 2 (`plan(true)` adds the `total` column); or the
+    * WAND top k with the live postings of the query terms.
+    */
+  private sealed trait Route
+  private case object NoMatch extends Route
+  private final case class OneTask(plan: Boolean => DataFrame) extends Route
+  private final case class Wand(top: DataFrame, candidates: DataFrame) extends Route
+
+  private def route(spark: SparkSession, e: Epoch, query: String, k: Int,
+      k1: Double, b: Double): Route = {
+    import spark.implicits._
     val (stats, layout) = (e.stats, e.layout)
     val toks = Analyzer.tokenize(query)
-    lazy val emptyOut = Seq.empty[(Long, Double)].toDF("docId", "score")
-    if (toks.isEmpty) return emptyOut
+    if (toks.isEmpty) return NoMatch
     val qcnt = toks.groupBy(identity).view.mapValues(_.size.toDouble).toMap
     val terms = qcnt.keys.toSeq
 
@@ -779,7 +823,7 @@ object BlockIndex {
     val shards = terms.map(shardOf(_, layout.nShards)).distinct
 
     val termBlocks0 = e.shardBlocks(shards)
-    if (termBlocks0.isEmpty) return emptyOut
+    if (termBlocks0.isEmpty) return NoMatch
     val termBlocks = termBlocks0.get.where(col("term").isin(terms: _*))
     val avgdl = stats.avgdl
     def score(qcnt: Column, idf: Column): Column =
@@ -788,9 +832,11 @@ object BlockIndex {
         .as("score")
 
     // routes 1 and 2: one task, no exchange (qcnt is a map literal, not a
-    // broadcast join)
-    def singleTask: DataFrame =
-      e.live(termBlocks.select(col("term"), col("n"), col("bytes"))
+    // broadcast join). The total counts the scored docs over the task's
+    // partition: keyed by the partition id, which is constant on one
+    // partition, because a window without keys logs a warning per plan.
+    val singleTask = OneTask { withTotal =>
+      val scored = e.live(termBlocks.select(col("term"), col("n"), col("bytes"))
           .coalesce(1)
           .withColumn("df", sum(col("n").cast("long")).over(Window.partitionBy(col("term"))))
           .select(col("term"), IndexBundle.idfCol(stats.vocabSize, col("df")).as("idf"),
@@ -799,7 +845,12 @@ object BlockIndex {
             col("p.tf").as("tf"), col("p.dl").as("dl")))
         .groupBy(col("docId"))
         .agg(score(typedLit(qcnt).apply(col("term")), col("idf")))
+      (if (withTotal)
+        scored.withColumn("total",
+          count(lit(1)).over(Window.partitionBy(spark_partition_id())))
+       else scored)
         .orderBy(col("score").desc, col("docId").asc).limit(k)
+    }
 
     // ---- route 1: the committed bound on block rows ----
     val rowBound = e.maxDocId.map(m =>
@@ -827,7 +878,7 @@ object BlockIndex {
     if (e.env.size > EnvCap) e.env.clear()
     e.env ++= fresh
     val env = (cached ++ fresh).filter(_._2._1 > 0L)
-    if (env.isEmpty) return emptyOut
+    if (env.isEmpty) return NoMatch
     val df = env.view.mapValues(_._1).toMap
     val totalPostings = df.values.sum
     val totalTermBlocks = env.values.map(_._2).sum // ≥ distinct blockIds
@@ -856,6 +907,8 @@ object BlockIndex {
         .select(col("docId"), col("score"))
     def topK(rel: DataFrame): DataFrame =
       scoreRel(rel).orderBy(col("score").desc, col("docId").asc).limit(k)
+    def wand(rel: DataFrame): Route =
+      Wand(topK(rel), e.live(decodePostings(termBlocks).select(col("docId"))))
 
     // ---- distributed per-block upper bounds (metadata-only agg) ----
     // Max contribution of a term over docs in its block. The reference's
@@ -904,7 +957,7 @@ object BlockIndex {
         lastDriverMetaRows += t.length
         if (t.length < k) Double.NegativeInfinity else t.last.getDouble(1)
       }
-    if (theta == Double.NegativeInfinity) return topK(termBlocks)
+    if (theta == Double.NegativeInfinity) return wand(termBlocks)
 
     // survivors: every block whose UB reaches θ (a block with ub < θ
     // cannot contain a top-k doc), PLUS the phase-1 blocks explicitly.
@@ -921,8 +974,8 @@ object BlockIndex {
       .select(col("blockId"))
       .limit(SurvivorCap + 1).collect().map(_.getLong(0))
     lastDriverMetaRows += surv.length
-    if (surv.length > SurvivorCap) topK(termBlocks)
-    else topK(termBlocks.where(col("blockId").isin(surv.toSeq: _*)))
+    if (surv.length > SurvivorCap) wand(termBlocks)
+    else wand(termBlocks.where(col("blockId").isin(surv.toSeq: _*)))
   }
 
   /** Batched BM25 top-k: N queries scored in ONE pass over the index —

@@ -16,6 +16,8 @@ import org.apache.spark.storage.StorageLevel
   *   - `termStats` (term, df, maxTf)   — per-term document frequency
   *   - `kgramIndex`(gram, term)        — the k-gram index over the vocab
   *   - `stats`                         — nDocs / vocabSize / totalLen
+  *   - `blockDir`                      — the [[BlockIndex]] directory the
+  *     relations read, for a bundle from [[BlockIndex.asBundle]]
   *
   * Everything is declarative DataFrame code: tokenization is a codegen'd
   * Column expression, tf aggregation is one hash-partial + final
@@ -34,7 +36,8 @@ final case class IndexBundle(
     termStats: DataFrame,
     kgramIndex: DataFrame,
     stats: CorpusStats,
-    k: Int) {
+    k: Int,
+    blockDir: Option[String] = None) {
 
   /** idf = log10(vocabSize / df) — the reference's quirk: N is the number
     * of DISTINCT TERMS, not documents (reference index_inverted.go:128-135).

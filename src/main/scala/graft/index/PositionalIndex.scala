@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.analysis.Analyzer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Positional postings + phrase queries — the fulltext capability the
@@ -209,9 +209,10 @@ object PositionalIndex {
   }
 
   /** The single best (tightest; ties → earliest) covering window per
-    * document: (docId, win_start, win_end), position-inclusive. This is
-    * the anchor for result snippets — deterministic, so the serving
-    * layer and the SQL oracle agree on WHICH window gets rendered.
+    * document: (docId, win_start, win_end), position-inclusive — the
+    * relational form of the window [[preview]] picks per row for result
+    * snippets. Deterministic, so the serving layer and the SQL oracle
+    * agree on WHICH window gets rendered.
     */
   def bestWindows(positions: DataFrame, terms: Seq[String]): DataFrame = {
     val sp = positions.sparkSession
@@ -235,45 +236,17 @@ object PositionalIndex {
     * the document (lowercased terms), so what is highlighted is exactly
     * what matched.
     *
-    * Shape at scale: one token-position stream feeds both the window
-    * search and the render join, co-partitioned on docId; the window
-    * relation is one row per matching doc. Clamping at the document tail
-    * is implicit (positions past the end simply don't exist). Output:
-    * (docId, snippet).
+    * Shape at scale: one narrow pass — every row's window search and
+    * render run inside the row ([[preview]]), so there is no shuffle and
+    * no per-token row. Output: (docId, snippet).
     */
   def snippets(docs: DataFrame, idCol: String, textCol: String,
-      terms: Seq[String], ctx: Int = 2): DataFrame = {
-    val sp = docs.sparkSession
-    import sp.implicits._
-    val distinctTerms = terms.distinct
-    if (distinctTerms.isEmpty)
-      return Seq.empty[(Long, String)].toDF("docId", "snippet")
-    val toks = textPositions(docs, idCol, textCol)
-    renderWindows(toks, bestWindows(toks, distinctTerms), distinctTerms, ctx)
-  }
-
-  /** The render join shared by [[snippets]] and [[previewSnippets]]:
-    * expand each document's (win_start, win_end) by `ctx` positions,
-    * bracket the query terms, reassemble in position order.
-    */
-  private def renderWindows(toks: DataFrame, wins: DataFrame,
-      distinctTerms: Seq[String], ctx: Int): DataFrame = {
-    val marked =
-      (if (distinctTerms.isEmpty) col("term")
-       else when(col("term").isin(distinctTerms: _*),
-           concat(lit("["), col("term"), lit("]")))
-         .otherwise(col("term"))).as("word")
-    toks.join(wins, "docId")
-      .where(col("pos").between(
-        col("win_start") - ctx, col("win_end") + ctx))
-      .select(col("docId"), col("pos"), marked)
-      .groupBy(col("docId"))
-      .agg(array_join(
-        transform(
-          sort_array(collect_list(struct(col("pos"), col("word")))),
-          x => x.getField("word")),
-        " ").as("snippet"))
-  }
+      terms: Seq[String], ctx: Int = 2): DataFrame =
+    docs.select(col(idCol).cast("long").as("docId"),
+        previewUdf(terms, ctx, coverOnly = true)(
+          typedLit(Seq.empty[String]), Analyzer.tokensCol(col(textCol)))
+          .as("snippet"))
+      .where(col("snippet").isNotNull)
 
   /** Serving-layer previews over MODEL-FORM documents (docId, title,
     * body, …): every input doc gets a snippet, by a three-step fallback —
@@ -283,34 +256,70 @@ object PositionalIndex {
     * still show what matched); else the document's LEAD tokens. Query
     * terms inside the rendered window are bracketed. The gated
     * [[snippets]] op is deliberately partial (all-terms docs only); this
-    * is its total serving twin. Meant for page-sized `docs` relations
-    * (the ≤5 hits of a results page); token-free docs emit no row
-    * (render as no preview). Output: (docId, snippet).
+    * is its total serving twin. One narrow pass ([[previewCol]]);
+    * token-free docs emit no row (render as no preview). Output:
+    * (docId, snippet).
     */
   def previewSnippets(docs: DataFrame, terms: Seq[String],
-      ctx: Int = 2): DataFrame = {
-    val distinctTerms = terms.distinct
-    val toks = positionsStream(docs)
-    // lead anchor = the doc's FIRST actual token (an empty title shifts
-    // body positions past the field gap, so lit(0) would miss it)
-    val lead = toks.groupBy(col("docId")).agg(min(col("pos")).as("__lead"))
-    val base = docs.select(col("docId")).join(lead, Seq("docId"), "left")
-    val wins =
-      if (distinctTerms.isEmpty)
-        base.select(col("docId"),
-          col("__lead").as("win_start"), col("__lead").as("win_end"))
-      else {
-        val anyFirst = toks.where(col("term").isin(distinctTerms: _*))
-          .groupBy(col("docId")).agg(min(col("pos")).as("__first"))
-        base.join(bestWindows(toks, distinctTerms), Seq("docId"), "left")
-          .join(anyFirst, Seq("docId"), "left")
-          .select(col("docId"),
-            coalesce(col("win_start"), col("__first"), col("__lead"))
-              .as("win_start"),
-            coalesce(col("win_end"), col("__first"), col("__lead"))
-              .as("win_end"))
+      ctx: Int = 2): DataFrame =
+    docs.select(col("docId"),
+        previewCol(col("title"), col("body"), terms, ctx).as("snippet"))
+      .where(col("snippet").isNotNull)
+
+  /** [[previewSnippets]]' snippet as a column over a document's title and
+    * body strings: NULL for a token-free document.
+    */
+  def previewCol(title: Column, body: Column, terms: Seq[String],
+      ctx: Int): Column =
+    previewUdf(terms, ctx, coverOnly = false)(
+      Analyzer.tokensCol(title), Analyzer.tokensCol(body))
+
+  private def previewUdf(terms: Seq[String], ctx: Int, coverOnly: Boolean) = {
+    val qs = terms.distinct.toVector
+    udf((title: Seq[String], body: Seq[String]) =>
+      preview(title, body, qs, ctx, coverOnly))
+  }
+
+  /** The preview of ONE document from its title and body tokens, with
+    * the positions [[positionsStream]] gives them (title from 0, body
+    * after the [[FieldGapWidth]] gap). The window is the tightest one
+    * covering every distinct query term (ties → the earliest end, as
+    * [[bestWindows]]); without one, unless `coverOnly`, the first query
+    * term occurrence, else the lead token. The window's tokens plus
+    * `ctx` positions either side render in position order, query terms
+    * bracketed. None when no window exists (a token-free document; with
+    * `coverOnly`, any document lacking a query term).
+    */
+  private[graft] def preview(title: Seq[String], body: Seq[String],
+      terms: Seq[String], ctx: Int, coverOnly: Boolean): Option[String] = {
+    val qs = terms.distinct
+    val words = (title ++ body).toIndexedSeq
+    val bodyStart = title.size.toLong + FieldGapWidth
+    def pos(i: Int): Long = if (i < title.size) i.toLong else bodyStart + i - title.size
+    val last = Array.fill(qs.size)(-1L)
+    var first: Option[Long] = None
+    var best: Option[(Long, Long)] = None
+    words.iterator.zipWithIndex.foreach { case (w, i) =>
+      val t = qs.indexOf(w)
+      if (t >= 0) {
+        val p = pos(i)
+        if (first.isEmpty) first = Some(p)
+        last(t) = p
+        if (last.forall(_ >= 0)) {
+          val start = last.min
+          if (best.forall { case (s, e) => p - start < e - s }) best = Some((start, p))
+        }
       }
-    renderWindows(toks, wins, distinctTerms, ctx)
+    }
+    val window =
+      if (coverOnly) best
+      else best.orElse(first.orElse(words.headOption.map(_ => pos(0))).map(p => (p, p)))
+    window.map { case (s, e) =>
+      words.indices.iterator
+        .filter(i => pos(i) >= s - ctx && pos(i) <= e + ctx)
+        .map(i => if (qs.contains(words(i))) s"[${words(i)}]" else words(i))
+        .mkString(" ")
+    }
   }
 
   // ---------------------------------------------------------------------

@@ -187,8 +187,8 @@ final class QueryEngine(
     * Result sets are identical on both sides of the cap (spec-asserted).
     */
   private[graft] def unionOfTerms(terms: DataFrame): DataFrame = {
-    val probe = terms
-      .limit(QueryEngine.CandidateInCap + 1).collect().map(_.getString(0))
+    val probe = QueryEngine.firstRows(terms, QueryEngine.CandidateInCap + 1)
+      .map(_.getString(0))
     if (probe.length <= QueryEngine.CandidateInCap) {
       if (probe.isEmpty) emptyIds
       else postings.where(col("term").isin(probe.toIndexedSeq: _*))
@@ -749,7 +749,10 @@ final class QueryEngine(
     * "Subtoken" are this engine's extension modes — every reference name
     * resolves exactly as the reference's registry does.
     */
-  def byName(name: String): String => DataFrame = name match {
+  def byName(name: String): String => DataFrame =
+    modes.applyOrElse(name, (_: String) => (q: String) => bm25Query(q))
+
+  private def modes: PartialFunction[String, String => DataFrame] = {
     case "Classic TF-IDF" => vectorSpaceQuery
     case "Boolean" => booleanQuery
     case "Terms" => termsQuery
@@ -760,7 +763,40 @@ final class QueryEngine(
     case "Grep" => grepQuery
     case "Symbol" => symbolQuery
     case "Subtoken" => subtokenQuery
-    case _ => q => bm25Query(q)
+  }
+
+  /** SERP page `page` (≥ 1, `perPage` results per page) of `alg`'s
+    * ranking of `query`: the page's docIds in rank order and the total
+    * result count. A BM25 page (unknown names fall back to BM25) over a
+    * bundle from [[graft.index.BlockIndex.asBundle]] is ranked through
+    * that directory's opened epoch, page and total in one job on small
+    * candidate sets ([[graft.index.BlockIndex.bm25TopKWithTotal]]). Every
+    * other ranking is persisted and counted, and the page is read from
+    * the cached rows in one more job. A page past the last result is
+    * empty, and no limit or offset is built for it.
+    */
+  def serpPage(alg: String, query: String, page: Int,
+      perPage: Int = 5): (Seq[Long], Long) = {
+    require(page >= 1, s"page must be >= 1, got $page")
+    val skip = (page - 1).toLong * perPage
+    index.blockDir.filterNot(_ => modes.isDefinedAt(alg)) match {
+      case Some(dir) =>
+        val (top, total) = graft.index.BlockIndex.bm25TopKWithTotal(
+          spark, dir, query, page.toLong * perPage, k1, b)
+        (if (skip >= top.size) Nil else top.drop(skip.toInt).map(_._1), total)
+      case None =>
+        // persisted so the ranking runs ONCE: the count fills the cache,
+        // the page reads the cached partitions back, one job each (an RDD
+        // count needs no exchange)
+        val ranked = byName(alg)(query).select(col("docId"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val total = ranked.rdd.count()
+          if (skip >= total) (Nil, total)
+          else (QueryEngine.firstRows(ranked, (skip + perPage).toInt)
+            .drop(skip.toInt).map(_.getLong(0)).toSeq, total)
+        } finally ranked.unpersist()
+    }
   }
 
   /** Rank-preserving materialization of result documents — the reference's
@@ -804,6 +840,16 @@ object QueryEngine {
     * not.
     */
   val CandidateInCap = 4096
+
+  /** The first `n` rows of `rel` in ONE job: every partition sends its
+    * first `n` rows at once, where a limit scans partitions incrementally,
+    * a job per step. The rows keep `rel`'s order when it is sorted (a
+    * sorted plan's partitions are in order). The driver holds at most
+    * partitions × `n` rows, as a limit's widest step does.
+    */
+  private[query] def firstRows(rel: DataFrame, n: Int): Array[org.apache.spark.sql.Row] =
+    rel.rdd.mapPartitions(rows => Iterator(rows.take(n).toArray)).collect()
+      .flatten.take(n)
 
   /** Repository-grouped results (the GitHub-code-search "group by repo"
     * SERP view): scored hits collapsed to one row per group — best score,

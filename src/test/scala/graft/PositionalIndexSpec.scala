@@ -416,6 +416,89 @@ class PositionalIndexSpec extends AnyFunSuite {
     assert(lead == Map(1L -> "aa table", 2L -> "xx yy", 3L -> "pp qq"))
   }
 
+  /** The relational preview plan the serving layer ran before the per-row
+    * function — a window dataflow over the exploded token positions,
+    * joined back and re-assembled per doc — kept here as the oracle.
+    */
+  private def relationalPreviews(docs: DataFrame, terms: Seq[String],
+      ctx: Int): DataFrame = {
+    val distinctTerms = terms.distinct
+    val toks = PositionalIndex.positionsStream(docs)
+    val lead = toks.groupBy(col("docId")).agg(min(col("pos")).as("__lead"))
+    val base = docs.select(col("docId")).join(lead, Seq("docId"), "left")
+    val wins =
+      if (distinctTerms.isEmpty)
+        base.select(col("docId"),
+          col("__lead").as("win_start"), col("__lead").as("win_end"))
+      else {
+        val anyFirst = toks.where(col("term").isin(distinctTerms: _*))
+          .groupBy(col("docId")).agg(min(col("pos")).as("__first"))
+        base.join(PositionalIndex.bestWindows(toks, distinctTerms), Seq("docId"), "left")
+          .join(anyFirst, Seq("docId"), "left")
+          .select(col("docId"),
+            coalesce(col("win_start"), col("__first"), col("__lead")).as("win_start"),
+            coalesce(col("win_end"), col("__first"), col("__lead")).as("win_end"))
+      }
+    renderWindows(toks, wins, distinctTerms, ctx)
+  }
+
+  /** The relational twin of [[PositionalIndex.snippets]] (the oracle). */
+  private def relationalSnippets(docs: DataFrame, terms: Seq[String],
+      ctx: Int): DataFrame = {
+    val toks = PositionalIndex.textPositions(docs, "docId", "body")
+    renderWindows(toks, PositionalIndex.bestWindows(toks, terms.distinct),
+      terms.distinct, ctx)
+  }
+
+  private def renderWindows(toks: DataFrame, wins: DataFrame,
+      distinctTerms: Seq[String], ctx: Int): DataFrame = {
+    val marked =
+      (if (distinctTerms.isEmpty) col("term")
+       else when(col("term").isin(distinctTerms: _*),
+           concat(lit("["), col("term"), lit("]")))
+         .otherwise(col("term"))).as("word")
+    toks.join(wins, "docId")
+      .where(col("pos").between(col("win_start") - ctx, col("win_end") + ctx))
+      .select(col("docId"), col("pos"), marked)
+      .groupBy(col("docId"))
+      .agg(array_join(
+        transform(sort_array(collect_list(struct(col("pos"), col("word")))),
+          x => x.getField("word")),
+        " ").as("snippet"))
+  }
+
+  test("per-row previews ≡ the relational plan: seeded corpus × edge term sets") {
+    val generated = graft.sources.CorpusSource.sourceFilesToDocs(
+        graft.tools.CorpusGen.generate(spark, 60, seed = 17))
+      .select(col("docId"), col("title"), col("body"), col("url"))
+    // an empty title shifts the body past the gap; a token-free doc
+    // previews nothing
+    val docs = generated.unionByName(modelDocs(Seq(
+      (1001L, "", "def val id0 return def"), (1002L, "", ""),
+      (1003L, "src main", "")))).cache()
+    // titles are `repo-N/src/main/<lang>/pkgN/FileN.<lang>`: `src` and
+    // `main` occur in titles only, so `main`+`def` covers across the gap
+    val termSets = Seq(
+      Seq.empty[String], // lead tokens
+      Seq("nosuchterm"), // absent
+      Seq("src", "main"), // title-only
+      Seq("def", "def", "val"), // repeated
+      Seq("main", "def"), // spans the title/body gap
+      Seq("def", "id0", "nosuchterm"), // partial: first-occurrence fallback
+      Seq("return"))
+    def rows(df: DataFrame): Map[Long, String] =
+      df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    for (terms <- termSets; ctx <- Seq(0, 3)) {
+      val want = rows(relationalPreviews(docs, terms, ctx))
+      assert(want.nonEmpty)
+      assert(rows(PositionalIndex.previewSnippets(docs, terms, ctx)) == want,
+        s"previewSnippets terms=$terms ctx=$ctx")
+      assert(rows(PositionalIndex.snippets(docs, "docId", "body", terms, ctx)) ==
+        rows(relationalSnippets(docs, terms, ctx)), s"snippets terms=$terms ctx=$ctx")
+    }
+    docs.unpersist()
+  }
+
   test("phraseHits plan: ONE data exchange (votes co-partitioned by docId)") {
     val docs = modelDocs((1L to 30L).map(id =>
       (id, "", s"alpha beta gamma alpha beta doc$id")))
