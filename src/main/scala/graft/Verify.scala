@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import java.nio.file.{Files, Paths, StandardCopyOption}
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json (written before the first gate) for the DuckDB compare
+  * and verify_status.json (gate → ok/failed and seconds, rewritten after
+  * every gate). `graft.Verify <sfDir> <outDir> [gate,gate…]`. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated gate names — local single-gate
@@ -20,19 +22,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        // per-gate wall time on stderr: when a replay runs long, the
-        // straggler gate is identifiable without a thread dump
-        System.err.println(
-          f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -45,9 +34,39 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // written whole to a temporary name and moved over the old file, so a
+    // Verify killed at any point leaves a complete, parseable file
+    def writeJson(name: String, entries: Iterable[String]): Unit = {
+      val tmp = Paths.get(s"$outDir/.$name.tmp")
+      Files.writeString(tmp, entries.mkString("{", ",", "}"))
+      Files.move(tmp, Paths.get(s"$outDir/$name"), StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+    }
+    // the oracle SQL first: a sweep cut short still leaves a comparable
+    // record for every gate it dumped
+    writeJson("oracle_sql.json", SparkEntry.oracleSql.filter(kv => keep(kv._1))
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" })
+    // gate -> {status, seconds}, rewritten after every gate
+    val status = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val ok =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          false
+        }
+      val secs = (System.nanoTime() - t0) / 1e9
+      // per-gate wall time on stderr: when a replay runs long, the
+      // straggler gate is identifiable without a thread dump
+      if (ok) System.err.println(f"[verify] $name ok in $secs%.1fs")
+      status(name) = s"""{"status": "${if (ok) "ok" else "failed"}", "seconds": ${
+        "%.3f".formatLocal(java.util.Locale.ROOT, secs)}}"""
+      writeJson("verify_status.json", status.map { case (k, v) => s"${q(k)}: $v" })
+    }
     spark.stop()
     // Forked JVM (build.sbt run/fork): hard-exit so a lingering
     // non-daemon thread can never hang the driver's correctness gate

@@ -589,7 +589,7 @@ object BlockIndex {
         col("p.dl").as("dl"))
 
   /** [[decodePostings]] keeping the blockId — the co-location key for
-    * shuffle-light scoring ([[bm25TopK]]'s score plan).
+    * shuffle-light WAND scoring.
     */
   private def decodePostingsWithBlock(blocks: DataFrame): DataFrame =
     blocks.select(col("blockId"), col("term"),
@@ -651,17 +651,46 @@ object BlockIndex {
     * every segment (a query prunes shards with a partition filter on
     * `shard`, so file listing and schema inference run once per epoch,
     * not per query), the opened tombstone relation, and the per-term
-    * (df, nBlocks) envelope entries the WAND route memoizes.
+    * (df, nBlocks) envelope entries that [[bm25TopK]] and
+    * [[bm25TopKBatch]] memoize.
     */
   private[graft] final class Epoch(
       val key: (Long, Seq[String]), val stats: CorpusStats,
       val layout: Layout, val nSegs: Int, val maxDocId: Option[Long],
       val blocks: Option[DataFrame], val tombs: Option[SegmentStore.Tombs]) {
-    val env = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
+    private val env = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
 
-    /** The block rows of `shards` (None for an index without blocks). */
-    def shardBlocks(shards: Seq[Int]): Option[DataFrame] =
-      blocks.map(_.where(col("shard").isin(shards: _*)))
+    /** The block rows of `terms`, read from their shards only (shard of
+      * each term by driver-local xxhash64, no Spark job); None for an
+      * index without blocks.
+      */
+    def termBlocks(terms: Seq[String]): Option[DataFrame] =
+      blocks.map(_
+        .where(col("shard").isin(terms.map(shardOf(_, layout.nShards)).distinct: _*))
+        .where(col("term").isin(terms: _*)))
+
+    /** (df, block rows) of each of `terms` present in the index: at most
+      * |terms| driver rows whatever the df (the bytes column is never
+      * read), from one job over the terms not seen before in this epoch.
+      * Absent terms are remembered too, or OOV terms would re-run it.
+      * Sets [[lastDriverMetaRows]] to the rows it collected.
+      */
+    def envelope(termBlocks: DataFrame, terms: Seq[String]): Map[String, (Long, Long)] = {
+      val known = terms.flatMap(t => env.get(t).map(t -> _)).toMap
+      val uncached = terms.filterNot(known.contains)
+      val found =
+        if (uncached.isEmpty) Map.empty[String, (Long, Long)]
+        else termBlocks.where(col("term").isin(uncached: _*))
+          .groupBy(col("term"))
+          .agg(sum(col("n").cast("long")).as("df"), count(lit(1)).as("nBlocks"))
+          .collect()
+          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      lastDriverMetaRows = found.size.toLong
+      val fresh = uncached.map(t => t -> found.getOrElse(t, (0L, 0L)))
+      if (env.size > EnvCap) env.clear()
+      env ++= fresh
+      (known ++ fresh).filter(_._2._1 > 0L)
+    }
 
     def live(rel: DataFrame): DataFrame = tombs.fold(rel)(_.live(rel))
   }
@@ -711,8 +740,9 @@ object BlockIndex {
     */
   private val SmallBlockCut = 8
 
-  /** Driver-collected metadata row count of the LAST bm25TopK call —
-    * instrumentation for the boundedness spec, not an API.
+  /** Driver-collected metadata row count of the LAST bm25TopK or
+    * bm25TopKBatch call — instrumentation for the boundedness spec, not
+    * an API.
     */
   @volatile private[graft] var lastDriverMetaRows: Long = 0L
 
@@ -731,28 +761,11 @@ object BlockIndex {
     *      term: ≤ |terms| driver rows, memoized per epoch, so it runs only
     *      for terms not seen before) shows ≤ 16·k postings or ≤ 8 block
     *      rows: the same single-task plan.
-    *   3. WAND — two-phase block-max pruning (Ding & Suel's block-max
-    *      WAND adapted to a batch engine):
-    *      a. a per-block score upper bound from BLOCK METADATA only
-    *         (term/blockId/n/maxTf/minDl — parquet never touches the
-    *         posting bytes):
-    *         UB(block) = Σ_terms qcnt·idf·(k1+1)·maxTf / (k1·(1−b+b·minDl/avgdl)+maxTf)
-    *         — monotone ↑ in tf, ↓ in dl, so it dominates every doc in
-    *         the block;
-    *      b. phase 1 scores the highest-UB blocks covering ≥ k docs → the
-    *         k-th score θ there is a LOWER bound of the true k-th score;
-    *      c. every block with UB < θ is pruned (no doc in it can reach
-    *         the top k); the survivors are scored exactly after one
-    *         shuffle of compressed blocks by blockId. EXACT — pruning, not
-    *         approximation.
-    *
-    * Scale: the driver never collects per-block metadata proportional to
-    * df. Its state per query is bounded: the per-term envelope, the top-2k
-    * phase-1 blocks, the k θ scores, and at most `SurvivorCap`+1 surviving
-    * block ids. Block upper bounds are computed DISTRIBUTED, so a
-    * stop-word-grade term with df ≈ 10^11 adds zero driver memory; when
-    * more than `SurvivorCap` blocks survive θ-pruning the code scores all
-    * candidate blocks instead (in that regime pruning saves nothing).
+    *   3. WAND — [[bm25TopKBatch]]'s block-max WAND for this one query,
+    *      always pruning (`prune = Some(true)`), with idf from the
+    *      envelope's df; the top k is a per-partition top k plus a driver
+    *      merge, so a head-term query never sorts all its candidates in
+    *      one task.
     *
     * Every route reads through the directory's opened [[Epoch]] (stats,
     * block and tombstone relations, envelope entries), one per
@@ -760,9 +773,10 @@ object BlockIndex {
     * build, refresh, compaction or delete commit — or when more than
     * `MaxOpenDirs` (16) directories are open, least recently used first.
     *
-    * IDF uses the reference's N = vocabulary size quirk
-    * (reference index_inverted.go:128-135), so ranks match the reference
-    * and the naive [[graft.query.QueryEngine.bm25Query]] exactly.
+    * Every route scores with [[IndexBundle.bm25Weight]] and IDF uses the
+    * reference's N = vocabulary size quirk (reference
+    * index_inverted.go:128-135), so ranks match the reference and the
+    * naive [[graft.query.QueryEngine.bm25Query]] exactly.
     */
   def bm25TopK(
       spark: SparkSession, dir: String, query: String, k: Int,
@@ -810,26 +824,26 @@ object BlockIndex {
   private final case class OneTask(plan: Boolean => DataFrame) extends Route
   private final case class Wand(top: DataFrame, candidates: DataFrame) extends Route
 
+  /** Query tokens → their counts: duplicate tokens double-score
+    * (reference searcher.go:249).
+    */
+  private def tokenCounts(query: String): Map[String, Double] =
+    Analyzer.tokenize(query).groupBy(identity).view.mapValues(_.size.toDouble).toMap
+
+  /** One BM25 summand per decoded posting or block row: its query-term
+    * count times the [[IndexBundle.bm25Weight]] of its `idf` column.
+    */
+  private def summand(e: Epoch, qcnt: Column, tf: String, dl: String,
+      k1: Double, b: Double): Column =
+    qcnt * IndexBundle.bm25Weight(col("idf"), col(tf).cast("double"),
+      col(dl).cast("double"), lit(e.stats.avgdl), k1, b)
+
   private def route(spark: SparkSession, e: Epoch, query: String, k: Int,
       k1: Double, b: Double): Route = {
-    import spark.implicits._
-    val (stats, layout) = (e.stats, e.layout)
-    val toks = Analyzer.tokenize(query)
-    if (toks.isEmpty) return NoMatch
-    val qcnt = toks.groupBy(identity).view.mapValues(_.size.toDouble).toMap
+    val qcnt = tokenCounts(query)
+    if (qcnt.isEmpty) return NoMatch
     val terms = qcnt.keys.toSeq
-
-    // shard of each term — driver-local xxhash64, no Spark job
-    val shards = terms.map(shardOf(_, layout.nShards)).distinct
-
-    val termBlocks0 = e.shardBlocks(shards)
-    if (termBlocks0.isEmpty) return NoMatch
-    val termBlocks = termBlocks0.get.where(col("term").isin(terms: _*))
-    val avgdl = stats.avgdl
-    def score(qcnt: Column, idf: Column): Column =
-      sum(qcnt * idf * (k1 + 1) * col("tf") /
-        (lit(k1) * (lit(1 - b) + lit(b) * col("dl") / lit(avgdl)) + col("tf")))
-        .as("score")
+    val termBlocks = e.termBlocks(terms).getOrElse(return NoMatch)
 
     // routes 1 and 2: one task, no exchange (qcnt is a map literal, not a
     // broadcast join). The total counts the scored docs over the task's
@@ -839,12 +853,12 @@ object BlockIndex {
       val scored = e.live(termBlocks.select(col("term"), col("n"), col("bytes"))
           .coalesce(1)
           .withColumn("df", sum(col("n").cast("long")).over(Window.partitionBy(col("term"))))
-          .select(col("term"), IndexBundle.idfCol(stats.vocabSize, col("df")).as("idf"),
+          .select(col("term"), IndexBundle.idfCol(e.stats.vocabSize, col("df")).as("idf"),
             explode(VarByteDecodeExpr.decode(col("bytes"))).as("p"))
           .select(col("term"), col("idf"), col("p.docId").as("docId"),
             col("p.tf").as("tf"), col("p.dl").as("dl")))
         .groupBy(col("docId"))
-        .agg(score(typedLit(qcnt).apply(col("term")), col("idf")))
+        .agg(sum(summand(e, typedLit(qcnt).apply(col("term")), "tf", "dl", k1, b)).as("score"))
       (if (withTotal)
         scored.withColumn("total",
           count(lit(1)).over(Window.partitionBy(spark_partition_id())))
@@ -854,138 +868,39 @@ object BlockIndex {
 
     // ---- route 1: the committed bound on block rows ----
     val rowBound = e.maxDocId.map(m =>
-      terms.size.toLong * e.nSegs * (if (m < 0) 0L else m / layout.blockSpan + 1))
+      terms.size.toLong * e.nSegs * (if (m < 0) 0L else m / e.layout.blockSpan + 1))
     if (rowBound.exists(_ <= SmallBlockCut)) {
       lastDriverMetaRows = 0L
       return singleTask
     }
 
-    // ---- per-term envelope: ≤ |terms| rows regardless of df (bytes
-    // column never read); the job runs only for terms not seen before in
-    // this epoch ----
-    val cached = terms.flatMap(t => e.env.get(t).map(t -> _)).toMap
-    val uncached = terms.filterNot(cached.contains)
-    val found =
-      if (uncached.isEmpty) Map.empty[String, (Long, Long)]
-      else termBlocks.where(col("term").isin(uncached: _*))
-        .groupBy(col("term"))
-        .agg(sum(col("n").cast("long")).as("df"), count(lit(1)).as("nBlocks"))
-        .collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    lastDriverMetaRows = found.size.toLong
-    // absent terms (df = 0) are kept too, or OOV terms would re-run the job
-    val fresh = uncached.map(t => t -> found.getOrElse(t, (0L, 0L)))
-    if (e.env.size > EnvCap) e.env.clear()
-    e.env ++= fresh
-    val env = (cached ++ fresh).filter(_._2._1 > 0L)
+    val env = e.envelope(termBlocks, terms)
     if (env.isEmpty) return NoMatch
-    val df = env.view.mapValues(_._1).toMap
-    val totalPostings = df.values.sum
-    val totalTermBlocks = env.values.map(_._2).sum // ≥ distinct blockIds
-
-    // ---- route 2: a small candidate set ----
-    if (totalPostings <= 16L * k || totalTermBlocks <= SmallBlockCut) return singleTask
+    // ---- route 2: a small candidate set (block rows ≥ distinct blockIds) ----
+    if (env.values.map(_._1).sum <= 16L * k || env.values.map(_._2).sum <= SmallBlockCut)
+      return singleTask
 
     // ---- route 3: block-max WAND ----
-    def idf(t: String): Double = IndexBundle.idf(stats.vocabSize, df.getOrElse(t, 0L))
-    val idfDf = broadcast(terms.map(t => (t, idf(t), qcnt(t))).toDF("term", "idf", "qcnt"))
-    /** Shuffle-light scoring: the ONE shuffle moves COMPRESSED blocks
-      * keyed by blockId (a stop-word query ships ~df/blockSpan block rows,
-      * not df decoded postings). docId determines blockId, so after that
-      * exchange every term's postings for a doc are co-located:
-      * groupBy(blockId, docId) is satisfied by the blockId hash
-      * partitioning — no second shuffle — and the final top-k is a
-      * per-partition TakeOrdered + driver merge of nPartitions·k rows.
-      */
-    def scoreRel(rel: DataFrame): DataFrame =
-      e.live(decodePostingsWithBlock(
-        rel.select(col("term"), col("blockId"), col("bytes"))
-          .repartition(col("blockId"))))
-        .join(idfDf, "term")
-        .groupBy(col("blockId"), col("docId"))
-        .agg(score(col("qcnt"), col("idf")))
+    Wand(
+      wand(e, termBlocks, Seq(qcnt), env.view.mapValues(_._1).toMap,
+          k, k1, b, prune = Some(true))
         .select(col("docId"), col("score"))
-    def topK(rel: DataFrame): DataFrame =
-      scoreRel(rel).orderBy(col("score").desc, col("docId").asc).limit(k)
-    def wand(rel: DataFrame): Route =
-      Wand(topK(rel), e.live(decodePostings(termBlocks).select(col("docId"))))
-
-    // ---- distributed per-block upper bounds (metadata-only agg) ----
-    // Max contribution of a term over docs in its block. The reference's
-    // vocabulary-size IDF (N = #terms) goes NEGATIVE when df > vocab —
-    // common on small-vocab corpora — so the extremal (tf, dl) corner
-    // flips with the sign of idf. sat() is positive, ↑ in tf, ↓ in dl.
-    def sat(tf: Column, dl: Column): Column =
-      lit(k1 + 1) * tf / (lit(k1) * (lit(1 - b) + lit(b) * dl / lit(avgdl)) + tf)
-    val iqDf = broadcast(terms.map(t => (t, qcnt(t) * idf(t))).toDF("term", "iq"))
-    // Per-block UB over docs: a doc absent from a term contributes 0, so
-    // positive per-term bounds add up; if every term's bound is negative
-    // the best doc still matches ≥1 term (blocks hold only matching docs)
-    // and the max single negative bound dominates.
-    val blockUbDf = termBlocks
-      .select("term", "blockId", "n", "maxTf", "minTf", "minDl", "maxDl")
-      .join(iqDf, "term")
-      .withColumn("pub", when(col("iq") >= 0,
-          col("iq") * sat(col("maxTf").cast("double"), col("minDl").cast("double")))
-        .otherwise(
-          col("iq") * sat(col("minTf").cast("double"), col("maxDl").cast("double"))))
-      .groupBy(col("blockId"))
-      .agg(
-        sum(when(col("pub") > 0, col("pub")).otherwise(0.0)).as("pos"),
-        max(col("pub")).as("maxPub"),
-        max(when(col("pub") >= 0, 1).otherwise(0)).as("anyNonNeg"),
-        max(col("n")).as("nDocs"))
-      .withColumn("ub",
-        when(col("anyNonNeg") === 1, col("pos")).otherwise(col("maxPub")))
-
-    // phase 1: enough highest-UB blocks to cover ≥ 2k docs. TakeOrdered
-    // (orderBy+limit) keeps the collect ≤ 2k rows — each block holds ≥ 1
-    // doc, and disjoint blockIds hold disjoint docs.
-    val top = blockUbDf.orderBy(col("ub").desc, col("blockId").asc)
-      .select(col("blockId"), col("ub"), col("nDocs"))
-      .limit(2 * k).collect()
-    lastDriverMetaRows += top.length
-    var cum = 0L
-    val phase1: Seq[Long] = top.takeWhile { r =>
-      val take = cum < 2L * k; cum += r.getInt(2); take
-    }.map(_.getLong(0)).toSeq
-    val phase1Covers = top.length < 2 * k && phase1.length == top.length
-    val theta: Double =
-      if (phase1Covers) Double.NegativeInfinity
-      else {
-        val t = topK(termBlocks.where(col("blockId").isin(phase1: _*))).collect()
-        lastDriverMetaRows += t.length
-        if (t.length < k) Double.NegativeInfinity else t.last.getDouble(1)
-      }
-    if (theta == Double.NegativeInfinity) return wand(termBlocks)
-
-    // survivors: every block whose UB reaches θ (a block with ub < θ
-    // cannot contain a top-k doc), PLUS the phase-1 blocks explicitly.
-    // Mathematically a phase-1 top-k doc's own block has ub ≥ its score
-    // ≥ θ, but ub and θ come from differently-associated floating-point
-    // expressions — for a block whose best doc IS the kth-ranked doc, ub
-    // can land 1 ULP below θ and the ≥ test alone would prune a true
-    // top-k doc. Forcing phase-1 retention keeps the EXACT contract
-    // independent of FP association. Collect at most SurvivorCap ids for
-    // a pushed-down isin filter; beyond the cap the filter would not
-    // pay, so score all candidate blocks.
-    val surv = blockUbDf
-      .where(col("ub") >= theta || col("blockId").isin(phase1: _*))
-      .select(col("blockId"))
-      .limit(SurvivorCap + 1).collect().map(_.getLong(0))
-    lastDriverMetaRows += surv.length
-    if (surv.length > SurvivorCap) wand(termBlocks)
-    else wand(termBlocks.where(col("blockId").isin(surv.toSeq: _*)))
+        .orderBy(col("score").desc, col("docId").asc).limit(k),
+      e.live(decodePostings(termBlocks).select(col("docId"))))
   }
 
   /** Batched BM25 top-k: N queries scored in ONE pass over the index —
     * every query's terms are read together (their shards union), decoded
-    * once, scored with a broadcast (query, term, qcnt) relation, and
+    * once, scored with a broadcast (query id, term, qcnt, idf) relation, and
     * ranked with a per-query window. Rank/score-identical to running
     * [[bm25TopK]] per query (spec-asserted), but the per-job floor —
     * which dominates single-query latency on Spark — is paid once for the
     * whole batch: the right shape for offline query workloads (relevance
-    * evals, mining, distillation) at cluster scale.
+    * evals, mining, distillation) at cluster scale. It is the block-max
+    * WAND of [[bm25TopK]]'s third route: `prune = None` probes whether
+    * θ-pruning can pay, `Some(true)` always prunes, `Some(false)` scores
+    * every candidate block. df per term comes from the epoch's memoized
+    * envelope, so the batch and the single route share one IDF.
     *
     * Output: (query, docId, score, rank), rank 1..k per query, ordered
     * (score desc, docId asc) within each query. Queries with no matching
@@ -997,156 +912,178 @@ object BlockIndex {
       prune: Option[Boolean] = None): DataFrame = {
     import spark.implicits._
     val e = epoch(spark, dir)
-    val (stats, layout) = (e.stats, e.layout)
     val emptyOut = Seq.empty[(String, Long, Double, Int)]
       .toDF("query", "docId", "score", "rank")
-    // (query, term, qcnt) — duplicate tokens double-count (reference
-    // searcher.go:249)
-    val qTerms: Seq[(String, String, Double)] = for {
-      q <- queries.distinct
-      (t, n) <- Analyzer.tokenize(q).groupBy(identity).view.mapValues(_.size).toSeq
-    } yield (q, t, n.toDouble)
-    if (qTerms.isEmpty) return emptyOut
-    val terms = qTerms.map(_._2).distinct
-    val termBlocks0 = e.shardBlocks(terms.map(shardOf(_, layout.nShards)).distinct)
-    if (termBlocks0.isEmpty) return emptyOut
-    val termBlocks = termBlocks0.get.where(col("term").isin(terms: _*))
-    // df per term computed in-plan (no driver envelope needed: the batch
-    // amortizes one aggregation across all queries); idf via the
-    // vocabulary-size quirk (reference index_inverted.go:128-135)
-    val termDf = termBlocks.groupBy(col("term"))
-      .agg(sum(col("n").cast("long")).as("df"))
-      .withColumn("idf", IndexBundle.idfCol(stats.vocabSize, col("df")))
-    val qDf = broadcast(qTerms.toDF("query", "term", "qcnt"))
-    val avgdl = stats.avgdl
-
-    // same shuffle-light shape as bm25TopK's scoreRel: one exchange of
-    // compressed blocks by blockId, then a co-located aggregation
-    // (hashpartitioning(blockId) satisfies the (query, blockId, docId)
-    // clustering — no second shuffle before the per-query window).
-    // `restrict` limits decode + scoring to the given (query, blockId)
-    // pairs: the blockId In-filter is pushed down to the parquet scan so
-    // pruned blocks' bytes are never read, and the broadcast pair join
-    // drops decoded rows of blocks another query needs but this one
-    // pruned.
-    def scored(restrict: Option[Seq[(String, Long)]]): DataFrame = {
-      val blocksRel = restrict match {
-        // the In-filter only pays (and only stays plan-sized) while the
-        // distinct block list is small; past the cap keep the pair join
-        // (which still prunes decode→aggregate work) and scan all blocks
-        case Some(pairs) if pairs.map(_._2).distinct.size <= SurvivorCap =>
-          termBlocks.where(col("blockId").isin(pairs.map(_._2).distinct: _*))
-        case _ => termBlocks
-      }
-      val base = e.live(decodePostingsWithBlock(
-          blocksRel.select(col("term"), col("blockId"), col("bytes"))
-            .repartition(col("blockId"))))
-        .join(broadcast(termDf.select(col("term"), col("idf"))), "term")
-        .join(qDf, "term")
-      val restricted = restrict match {
-        case Some(pairs) =>
-          base.join(broadcast(pairs.toDF("query", "blockId")), Seq("query", "blockId"))
-        case None => base
-      }
-      restricted
-        .groupBy(col("query"), col("blockId"), col("docId"))
-        .agg(sum(col("qcnt") * col("idf") * (k1 + 1) * col("tf") /
-          (lit(k1) * (lit(1 - b) + lit(b) * col("dl") / lit(avgdl)) + col("tf")))
-          .as("score"))
-        .select(col("query"), col("docId"), col("score"))
-    }
+    val counts = queries.distinct.map(q => q -> tokenCounts(q))
+    val terms = counts.flatMap(_._2.keys).distinct
+    if (terms.isEmpty) return emptyOut
+    val termBlocks = e.termBlocks(terms).getOrElse(return emptyOut)
+    val env = e.envelope(termBlocks, terms)
+    val matching = counts.filter(_._2.keys.exists(env.contains))
+    if (matching.isEmpty) return emptyOut
     val w = Window
-      .partitionBy(col("query"))
+      .partitionBy(col("qid"))
       .orderBy(col("score").desc, col("docId").asc)
-    def ranked(rel: DataFrame): DataFrame =
-      rel.withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .orderBy(col("query"), col("rank"))
+    wand(e, termBlocks, matching.map(_._2), env.view.mapValues(_._1).toMap, k, k1, b, prune)
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(typedLit(matching.map(_._1)).apply(col("qid")).as("query"),
+        col("docId"), col("score"), col("rank"))
+      .orderBy(col("query"), col("rank"))
+  }
 
-    if (prune.contains(false)) return ranked(scored(None))
-    lastDriverMetaRows = 0L
+  /** Block-max WAND (Ding & Suel's block-max pruning adapted to a batch
+    * engine) for `queries` (the token counts of each, every one matching
+    * a term of `df`) over their terms' block rows: the scored relation
+    * (qid, docId, score) of every block that can hold one of a query's
+    * top k documents, `qid` being the query's index in `queries`.
+    *
+    *   a. a per-(query, block) score upper bound from BLOCK METADATA only
+    *      (term/blockId/n/maxTf/minTf/minDl/maxDl — parquet never touches
+    *      the posting bytes): each term's [[IndexBundle.bm25Weight]] at
+    *      the block's extreme (tf, dl) corner, which dominates every doc
+    *      in the block;
+    *   b. `prune = None` prunes only when some query's block bounds vary
+    *      (one metadata-only aggregation) on a grid of more than 256
+    *      blocks; `Some(_)` decides without that job;
+    *   c. phase 1 scores each query's highest-UB blocks covering ≥ 2k
+    *      docs, whose k-th score θ is a LOWER bound of the true k-th
+    *      score; a query whose phase 1 holds all its blocks needs no θ;
+    *   d. every block with UB < θ is pruned (no doc in it can reach the
+    *      top k); the survivors are scored exactly. EXACT — pruning, not
+    *      approximation.
+    *
+    * Scale: the driver never collects per-block metadata proportional to
+    * df. Its state per query is bounded: ≤ 2k phase-1 rows, ≤ k θ rows and
+    * at most `SurvivorCap` surviving blocks (4M pairs in all); past that
+    * the batch scores every candidate block (pruning saves nothing
+    * there). Block upper bounds are computed DISTRIBUTED, so a
+    * stop-word-grade term with df ≈ 10^11 adds zero driver memory.
+    */
+  private def wand(e: Epoch, termBlocks: DataFrame,
+      queries: Seq[Map[String, Double]], df: Map[String, Long],
+      k: Int, k1: Double, b: Double, prune: Option[Boolean]): DataFrame = {
+    val spark = termBlocks.sparkSession
+    import spark.implicits._
+    // one query needs no per-query join or window: it ranks by a
+    // per-partition top n and takes θ as a literal
+    val single = queries.size == 1
+    val qDf = broadcast(queries.zipWithIndex.flatMap { case (c, q) =>
+        c.collect { case (t, n) if df.contains(t) =>
+          (q, t, n, IndexBundle.idf(e.stats.vocabSize, df(t))) }
+      }.toDF("qid", "term", "qcnt", "idf"))
+    def pairs(blocks: Map[Int, Seq[Long]]) =
+      blocks.toSeq.flatMap { case (q, ids) => ids.map(q -> _) }
 
-    // ---- batched block-max WAND: the single-query θ pruning, shared
-    // across the whole batch in bounded driver steps ----
-    // per-(query, block) upper bound from block metadata only (bytes
-    // never read): same envelope algebra as bm25TopK's blockUbDf
-    val iqRel = termBlocks
+    /** Shuffle-light scoring: the ONE shuffle moves COMPRESSED blocks
+      * keyed by blockId (a stop-word query ships ~df/blockSpan block rows,
+      * not df decoded postings). docId determines blockId, so after that
+      * exchange every term's postings for a doc are co-located:
+      * groupBy(qid, blockId, docId) is satisfied by the blockId hash
+      * partitioning — no second shuffle. `restrict` limits decoding and
+      * scoring to (qid, blockId) pairs: the blockId In-filter reaches the
+      * parquet scan while at most `SurvivorCap` blocks are named, and with
+      * several queries a broadcast pair join drops the decoded rows of
+      * blocks another query needs but this one pruned.
+      */
+    def scored(restrict: Option[Seq[(Int, Long)]]): DataFrame = {
+      val blocks = restrict.map(_.map(_._2).distinct).filter(_.size <= SurvivorCap)
+        .fold(termBlocks)(ids => termBlocks.where(col("blockId").isin(ids: _*)))
+      val rows = e.live(decodePostingsWithBlock(
+          blocks.select(col("term"), col("blockId"), col("bytes"))
+            .repartition(col("blockId"))))
+        .join(qDf, "term")
+      restrict.filter(_ => !single)
+        .fold(rows)(p => rows.join(broadcast(p.toDF("qid", "blockId")), Seq("qid", "blockId")))
+        .groupBy(col("qid"), col("blockId"), col("docId"))
+        .agg(sum(summand(e, col("qcnt"), "tf", "dl", k1, b)).as("score"))
+        .select(col("qid"), col("docId"), col("score"))
+    }
+
+    // The reference's vocabulary-size IDF (N = #terms) goes NEGATIVE when
+    // df > vocab — common on small-vocab corpora. The weight is idf times
+    // a factor ↑ in tf and ↓ in dl, so the extremal (tf, dl) corner flips
+    // with the sign of idf.
+    // A doc absent from a term contributes 0, so positive bounds add up;
+    // if every bound is negative the best doc still matches ≥ 1 term
+    // (blocks hold only matching docs) and the largest one dominates.
+    val ub = termBlocks
       .select("term", "blockId", "n", "maxTf", "minTf", "minDl", "maxDl")
-      .join(broadcast(termDf.select(col("term"), col("idf"))), "term")
       .join(qDf, "term")
-      .withColumn("iq", col("qcnt") * col("idf"))
-    def sat(tf: Column, dl: Column): Column =
-      (lit(k1) + 1) * tf / (lit(k1) * (lit(1 - b) + lit(b) * dl / lit(avgdl)) + tf)
-    val qBlockUb = iqRel
-      .withColumn("pub", when(col("iq") >= 0,
-          col("iq") * sat(col("maxTf").cast("double"), col("minDl").cast("double")))
-        .otherwise(
-          col("iq") * sat(col("minTf").cast("double"), col("maxDl").cast("double"))))
-      .groupBy(col("query"), col("blockId"))
+      .withColumn("pub", when(col("idf") >= 0, summand(e, col("qcnt"), "maxTf", "minDl", k1, b))
+        .otherwise(summand(e, col("qcnt"), "minTf", "maxDl", k1, b)))
+      .groupBy(col("qid"), col("blockId"))
       .agg(
         sum(when(col("pub") > 0, col("pub")).otherwise(0.0)).as("pos"),
         max(col("pub")).as("maxPub"),
-        max(when(col("pub") >= 0, 1).otherwise(0)).as("anyNonNeg"),
         max(col("n")).as("nDocs"))
-      .withColumn("ub",
-        when(col("anyNonNeg") === 1, col("pos")).otherwise(col("maxPub")))
+      .select(col("qid"), col("blockId"), col("nDocs"),
+        when(col("maxPub") >= 0, col("pos")).otherwise(col("maxPub")).as("ub"))
+
     // auto mode: θ pruning only pays when block-level UB VARIANCE exists
     // — which on a docId-grid index is a property of the docId
     // assignment order (content-clustered ids → a query's rare terms
     // occupy few blocks and the rest fall below θ; scattered ids →
     // every term in every block, nothing can be excluded — measured
-    // both ways in BENCH.md / tools/PruneBench). One metadata-only
-    // aggregation decides: prune iff some query has a block whose UB is
-    // under half its best block's (a necessary condition for θ to bite),
-    // and the grid is big enough (> 256 blocks) for the extra jobs to
-    // ever pay. Explicit prune=Some(_) skips the probe entirely.
+    // both ways in BENCH.md / tools/PruneBench). Prune iff some query has
+    // a block whose UB is under half its best block's (a necessary
+    // condition for θ to bite) and the grid is big enough for the extra
+    // jobs to ever pay.
     val doPrune = prune.getOrElse {
-      stats.nDocs / layout.blockSpan > 256 && {
-        val spread = qBlockUb.groupBy(col("query"))
+      e.stats.nDocs / e.layout.blockSpan > 256 && {
+        val spread = ub.groupBy(col("qid"))
           .agg(max(col("ub")).as("mx"), min(col("ub")).as("mn")).collect()
         lastDriverMetaRows += spread.length.toLong
         spread.exists(r => r.getDouble(1) > 0 && r.getDouble(2) < 0.5 * r.getDouble(1))
       }
     }
-    if (!doPrune) return ranked(scored(None))
-    // phase 1 per query: highest-UB blocks covering ≥ 2k docs (running
-    // doc count via a per-query window — no driver loop)
-    val wCum = Window
-      .partitionBy(col("query"))
-      .orderBy(col("ub").desc, col("blockId").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val marked = qBlockUb.withColumn("cum",
-      coalesce(sum(col("nDocs")).over(wCum), lit(0L)))
-    // driver step 1: the phase-1 pairs (≤ ~2k rows per query)
-    val p1 = marked.where(col("cum") < 2L * k)
-      .select(col("query"), col("blockId"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    lastDriverMetaRows += p1.length.toLong
-    // driver step 2: θ per query = its kth phase-1 score (absent when a
-    // query has < k phase-1 docs → no pruning for that query)
-    val thetas: Map[String, Double] = ranked(scored(Some(p1)))
-      .where(col("rank") === k)
-      .select(col("query"), col("score"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    lastDriverMetaRows += thetas.size
-    if (thetas.isEmpty) return ranked(scored(None))
-    // driver step 3: survivors = phase-1 pairs ∪ (ub ≥ θ_q); phase-1 is
-    // force-retained so FP association of ub vs θ can never prune a true
-    // top-k doc (same argument as bm25TopK). The collect is capped at
-    // SurvivorCap PAIRS PER QUERY; past that pruning can't pay — score
-    // everything rather than hold unbounded driver state.
-    // capped at SurvivorCap pairs per query AND an absolute ceiling so
-    // driver state stays bounded (and limit() stays a valid Int) for
-    // arbitrarily large query batches
-    val pairCap = math.min(SurvivorCap.toLong * queries.distinct.size, 4000000L)
-    val thetaDf = broadcast(thetas.toSeq.toDF("query", "theta"))
-    val surv = marked.join(thetaDf, Seq("query"), "left")
-      .where(col("cum") < 2L * k || col("theta").isNull || col("ub") >= col("theta"))
-      .select(col("query"), col("blockId"))
-      .limit(pairCap.toInt + 1)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    if (!doPrune) return scored(None)
+
+    // each query's best n rows by `order`, in that order: a per-partition
+    // top n plus a driver merge, or a row_number window (Spark keeps a
+    // per-partition top n below its exchange)
+    def best(rel: DataFrame, n: Int, order: Column*): Map[Int, Seq[Row]] = {
+      val rows =
+        if (single) rel.orderBy(order: _*).limit(n).collect().toSeq
+        else rel.withColumn("r", row_number().over(Window.partitionBy(col("qid")).orderBy(order: _*)))
+          .where(col("r") <= n).collect().toSeq.sortBy(_.getAs[Int]("r"))
+      lastDriverMetaRows += rows.length
+      rows.groupBy(_.getAs[Int]("qid"))
+    }
+    // phase 1: the highest-UB blocks until they hold ≥ 2k docs — at most
+    // 2k blocks, since each holds ≥ 1 doc and distinct blockIds hold
+    // distinct docs
+    val top = best(ub, 2 * k, col("ub").desc, col("blockId").asc)
+    val phase1 = top.map { case (q, rows) =>
+      var cum = 0L
+      q -> rows.takeWhile { r =>
+        val take = cum < 2L * k; cum += r.getAs[Int]("nDocs"); take
+      }.map(_.getAs[Long]("blockId"))
+    }
+    val open = phase1.filter { case (q, p) => top(q).size == 2 * k || p.size < top(q).size }
+    if (open.isEmpty) return scored(None)
+    // θ per query: its k-th phase-1 score (none below k docs: no pruning)
+    val thetas = best(scored(Some(pairs(open))), k, col("score").desc, col("docId").asc)
+      .collect { case (q, rows) if rows.size == k => q -> rows.last.getAs[Double]("score") }
+    if (thetas.isEmpty) return scored(None)
+
+    // survivors: every block whose UB reaches θ (queries without θ keep
+    // all), PLUS the phase-1 blocks explicitly. Mathematically a phase-1
+    // top-k doc's own block has ub ≥ its score ≥ θ, but ub and θ are sums
+    // in different floating-point orders — for a block whose best doc IS
+    // the kth-ranked doc, ub can land 1 ULP below θ and the ≥ test alone
+    // would prune a true top-k doc. At most `SurvivorCap` pairs per query
+    // (4M in all) are collected; past that pruning cannot pay.
+    val cap = math.min(SurvivorCap.toLong * queries.size, 4000000L).toInt
+    val withTheta =
+      if (single) ub.withColumn("theta", lit(thetas.head._2))
+      else ub.join(broadcast(thetas.toSeq.toDF("qid", "theta")), Seq("qid"), "left")
+    val surv = withTheta
+      .where(col("theta").isNull || col("ub") >= col("theta"))
+      .select(col("qid"), col("blockId"))
+      .limit(cap + 1).collect().map(r => (r.getInt(0), r.getLong(1)))
     lastDriverMetaRows += surv.length
-    if (surv.length > pairCap) ranked(scored(None))
-    else ranked(scored(Some(surv)))
+    if (surv.length > cap) scored(None)
+    else scored(Some((surv.toSeq ++ pairs(phase1)).distinct))
   }
 }

@@ -69,6 +69,16 @@ object IndexBundle {
   def idf(vocabSize: Long, df: Long): Double =
     if (vocabSize <= 0 || df <= 0) 0.0
     else StrictMath.log(vocabSize.toDouble / df.toDouble) / StrictMath.log(10.0)
+
+  /** The one BM25 term weight of every BM25 scorer and of the block-max
+    * WAND upper bound: idf · (k1+1)·tf / (k1·(1−b+b·dl/avgdl) + tf)
+    * (reference searcher.go:245-268). A document scores
+    * Σ_terms qcnt · weight, so every scorer groups the floating-point
+    * arithmetic the same way.
+    */
+  def bm25Weight(idf: Column, tf: Column, dl: Column, avgdl: Column,
+      k1: Double, b: Double): Column =
+    idf * (lit(k1 + 1) * tf / (lit(k1) * (lit(1 - b) + lit(b) * dl / avgdl) + tf))
 }
 
 object IndexBuilder {

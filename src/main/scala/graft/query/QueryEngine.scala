@@ -274,28 +274,21 @@ final class QueryEngine(
   }
 
   /** Okapi BM25 (k1 = 0.9, b = 0.4 reference defaults;
-    * searcher.go:245-268). `topK = None` returns every matching document,
-    * like the reference; `Some(k)` compiles to TakeOrderedAndProject.
+    * searcher.go:245-268): [[bm25WeightedQuery]] with each query token's
+    * occurrence count as its weight, so duplicate tokens double-score.
+    * `topK = None` returns every matching document, like the reference;
+    * `Some(k)` compiles to TakeOrderedAndProject.
     */
-  def bm25Query(query: String, topK: Option[Int] = None): DataFrame = {
-    val toks = Analyzer.tokenize(query)
-    if (toks.isEmpty) scoredEmpty
-    else {
-      val idf = index.idfCol(col("df"))
-      val tf = col("tf").cast("double")
-      val dl = col("len").cast("double")
-      val partial = idf * (k1 + 1) * tf /
-        (lit(k1) * (lit(1 - b) + lit(b) * dl / lit(index.stats.avgdl)) + tf)
-      val scored = postings
-        .join(broadcast(queryTermsDf(toks)), "term")
-        .join(index.termStats, "term")
-        .join(index.docLens, "docId")
-        .groupBy(col("docId"))
-        .agg(sum(col("qcnt") * partial).as("score"))
-        .orderBy(col("score").desc, col("docId").asc)
-      topK.fold(scored)(scored.limit)
-    }
-  }
+  def bm25Query(query: String, topK: Option[Int] = None): DataFrame =
+    bm25WeightedQuery(Analyzer.tokenize(query).groupBy(identity)
+      .map { case (t, ts) => t -> ts.size.toDouble }.toSeq, topK)
+
+  /** [[IndexBundle.bm25Weight]] of a (term, docId) row joined with its
+    * term's `df` and its doc's `len`.
+    */
+  private def bm25Weight: Column =
+    IndexBundle.bm25Weight(index.idfCol(col("df")), col("tf").cast("double"),
+      col("len").cast("double"), lit(index.stats.avgdl), k1, b)
 
   /** Batched BM25: N queries scored in ONE pass over the logical index —
     * the in-memory twin of
@@ -314,17 +307,12 @@ final class QueryEngine(
     } yield (q, t, n.toDouble)
     if (qTerms.isEmpty)
       return Seq.empty[(String, Long, Double, Int)].toDF("query", "docId", "score", "rank")
-    val idf = index.idfCol(col("df"))
-    val tf = col("tf").cast("double")
-    val dl = col("len").cast("double")
-    val partial = idf * (k1 + 1) * tf /
-      (lit(k1) * (lit(1 - b) + lit(b) * dl / lit(index.stats.avgdl)) + tf)
     val scored = postings
       .join(broadcast(qTerms.toDF("query", "term", "qcnt")), "term")
       .join(index.termStats, "term")
       .join(index.docLens, "docId")
       .groupBy(col("query"), col("docId"))
-      .agg(sum(col("qcnt") * partial).as("score"))
+      .agg(sum(col("qcnt") * bm25Weight).as("score"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query"))
       .orderBy(col("score").desc, col("docId").asc)
@@ -477,11 +465,9 @@ final class QueryEngine(
     }
   }
 
-  /** BM25 with explicit fractional per-term weights — the scoring
-    * primitive behind pseudo-relevance feedback: identical arithmetic to
-    * [[bm25Query]] with caller-supplied weights in place of the integer
-    * query-token multiplicities (bm25Query ≡ this with each token's
-    * occurrence count as its weight). Terms absent from the vocabulary
+  /** BM25 with explicit fractional per-term weights in place of query-token
+    * counts — the scoring primitive behind [[bm25Query]] and
+    * pseudo-relevance feedback. Terms absent from the vocabulary
     * contribute nothing (inner join); an empty weight list scores empty.
     */
   def bm25WeightedQuery(termWeights: Seq[(String, Double)],
@@ -490,17 +476,12 @@ final class QueryEngine(
     else {
       val sp = spark
       import sp.implicits._
-      val idf = index.idfCol(col("df"))
-      val tf = col("tf").cast("double")
-      val dl = col("len").cast("double")
-      val partial = idf * (k1 + 1) * tf /
-        (lit(k1) * (lit(1 - b) + lit(b) * dl / lit(index.stats.avgdl)) + tf)
       val scored = postings
         .join(broadcast(termWeights.toDF("term", "qcnt")), "term")
         .join(index.termStats, "term")
         .join(index.docLens, "docId")
         .groupBy(col("docId"))
-        .agg(sum(col("qcnt") * partial).as("score"))
+        .agg(sum(col("qcnt") * bm25Weight).as("score"))
         .orderBy(col("score").desc, col("docId").asc)
       topK.fold(scored)(scored.limit)
     }
@@ -603,10 +584,7 @@ final class QueryEngine(
   def ltrFeatures(query: String): DataFrame = {
     val toks = Analyzer.tokenize(query)
     val idf = index.idfCol(col("df"))
-    val tf = col("tf").cast("double")
     val dl = col("len").cast("double")
-    val bm25Partial = idf * (k1 + 1) * tf /
-      (lit(k1) * (lit(1 - b) + lit(b) * dl / lit(index.stats.avgdl)) + tf)
     // an empty query yields an empty (term, qcnt) frame: the join is
     // empty with the right schema — no sentinel special-casing needed
     postings
@@ -615,7 +593,7 @@ final class QueryEngine(
       .join(index.docLens, "docId")
       .groupBy(col("docId"))
       .agg(
-        round(sum(col("qcnt") * bm25Partial), 6).as("bm25"),
+        round(sum(col("qcnt") * bm25Weight), 6).as("bm25"),
         round(sum(col("qcnt") * col("tf") * idf) / max(dl), 6).as("tfidf"),
         count(lit(1)).as("n_matched"),
         sum(col("tf").cast("long")).as("sum_tf"),
@@ -947,10 +925,8 @@ object QueryEngine {
         lit(wBody) * size(Analyzer.tokensCol(col("body"))))
         .cast("double").as("wdl"))
     val avg = wdl.agg((sum(col("wdl")) / count(lit(1))).as("__avgwdl"))
-    val idf = graft.index.IndexBundle.idfCol(col("__v"), col("df"))
-    val partial = idf * (col("wtf") * (k1 + 1)) /
-      (lit(k1) * (lit(1 - b) + lit(b) * col("wdl") / col("__avgwdl")) +
-        col("wtf"))
+    val weight = IndexBundle.bm25Weight(IndexBundle.idfCol(col("__v"), col("df")),
+      col("wtf"), col("wdl"), col("__avgwdl"), k1, b)
     val scored = wtf
       .join(broadcast(qdf), "term")
       .join(dfRel, "term")
@@ -958,7 +934,7 @@ object QueryEngine {
       .crossJoin(broadcast(vocab))
       .crossJoin(broadcast(avg))
       .groupBy(col("docId"))
-      .agg(sum(col("qcnt") * partial).as("score"))
+      .agg(sum(col("qcnt") * weight).as("score"))
       .orderBy(col("score").desc, col("docId").asc)
     topK.fold(scored)(scored.limit)
   }

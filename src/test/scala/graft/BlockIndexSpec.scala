@@ -645,6 +645,40 @@ class BlockIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("batched WAND auto mode on a 500-block grid: the probe engages or declines; both ≡ unpruned ≡ per-query ≡ naive") {
+    val sp = spark
+    import sp.implicits._
+    // the WAND big path corpus: 2000 docs under span 4 → 500 blocks, above
+    // the 256 blocks where the auto probe starts to run
+    val sdocs = (1 to 2000).map(i =>
+      (i.toLong, "", s"stopword unique$i filler${i % 7}", ""))
+      .toDF("docId", "title", "body", "url")
+    val d = tmpDir("blockidx-stopword-batch").toString
+    BlockIndex.build(sdocs, d, BlockIndex.Layout(blockSpan = 4, nShards = 4))
+    val engine = new QueryEngine(IndexBuilder.build(sdocs, persist = false))
+    val k = 3
+    def batch(q: String, prune: Option[Boolean]) =
+      BlockIndex.bm25TopKBatch(spark, d, Seq(q), k, prune = prune).collect()
+        .map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    // "filler5 unique77": the unique77 block bounds far above the rest, so
+    // the probe engages; "stopword": every block bounds alike, so it declines
+    for ((q, engages) <- Seq("filler5 unique77" -> true, "stopword" -> false)) {
+      val single = topk(d, q, k) // memoizes the envelope of q's terms
+      val auto = batch(q, None)
+      // the probe collects one row for the one query; phase 1, θ and the
+      // survivors add more only when it engages
+      assert((BlockIndex.lastDriverMetaRows > 1) == engages,
+        s"q='$q' collected ${BlockIndex.lastDriverMetaRows} metadata rows")
+      val want = engine.bm25Query(q, Some(k)).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(want.size == k)
+      for ((got, what) <- Seq(auto -> "auto batch", batch(q, Some(false)) -> "unpruned batch",
+          single -> "bm25TopK"))
+        assertSameRanking(got, want, s"$what q='$q'")
+    }
+    engine.index.unpersist()
+  }
+
   test("WAND big path: driver metadata bounded for stop-word-grade terms; result == naive") {
     val sp = spark
     import sp.implicits._

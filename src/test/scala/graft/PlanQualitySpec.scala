@@ -60,6 +60,31 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters: [In(term"), s"term filter not pushed:\n$plan")
   }
 
+  test("one-query WAND ranks by a per-partition top k below its exchange") {
+    // 4-doc blocks: a head term spans ~30 block rows, past the single-task
+    // routes, so bm25TopK prunes; the one-query batch prunes by request
+    val d = java.nio.file.Files.createTempDirectory("plan-wand").toString
+    val docs = graft.sources.CorpusSource.sourceFilesToDocs(
+      graft.tools.CorpusGen.generate(spark, 120, seed = 23))
+    BlockIndex.build(docs, d, BlockIndex.Layout(blockSpan = 4, nShards = 4))
+    val single = BlockIndex.bm25TopK(spark, d, "def val", 5)
+    assert(single.collect().length == 5)
+    assert(BlockIndex.lastDriverMetaRows > 2, "the WAND route collects phase-1 and θ rows")
+    val singlePlan = planOf(single)
+    assert(singlePlan.contains("TakeOrderedAndProject"),
+      s"bm25TopK must take a per-partition top k:\n$singlePlan")
+    val batch = BlockIndex.bm25TopKBatch(spark, d, Seq("def val"), 5, prune = Some(true))
+    assert(batch.collect().length == 5)
+    val batchPlan = planOf(batch)
+    // Spark infers a partial WindowGroupLimit for row_number() <= k and
+    // runs it before the shuffle on the query key
+    val partial = batchPlan.linesIterator.indexWhere(l =>
+      l.contains("WindowGroupLimit") && l.contains("Partial"))
+    val exchange = batchPlan.linesIterator.indexWhere(_.contains("Exchange hashpartitioning(qid"))
+    assert(partial >= 0 && exchange >= 0 && exchange < partial,
+      s"the one-query batch must limit each partition below its exchange:\n$batchPlan")
+  }
+
   test("gram index query: In(gram) pushed to parquet; needle grams live only in routed shards") {
     val sp = spark
     import sp.implicits._
