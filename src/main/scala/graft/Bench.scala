@@ -49,7 +49,7 @@ object Bench {
     // logical in-memory index for the naive query paths
     val (bundle, logicalSec) = time {
       val b = IndexBuilder.build(docs)
-      b.postings.count(); b.docLens.count(); b.kgramIndex.count() // materialize caches
+      b.postings.count(); b.docLens.count() // materialize caches
       b
     }
     val engine = new QueryEngine(bundle)

@@ -1,11 +1,32 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json (written before the first gate) for the DuckDB compare
   * and verify_status.json (gate → ok/failed and seconds, rewritten after
-  * every gate). `graft.Verify <sfDir> <outDir> [gate,gate…]`. */
+  * every gate). Gates run cheapest first by the seconds of the previous
+  * run's verify_status.json. `graft.Verify <sfDir> <outDir> [gate,gate…]`. */
 object Verify {
+
+  /** `names` cheapest first: ordered by the seconds each gate took in the
+    * verify_status.json at `statusFile`, so a run cut short by a time
+    * budget loses its slowest gates. Gates the file does not time go last,
+    * in their given order; a missing file, or one that does not parse,
+    * keeps the given order.
+    */
+  private[graft] def cheapestFirst(names: Seq[String], statusFile: Path): Seq[String] = {
+    val seconds: Map[String, Double] =
+      try {
+        Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(statusFile.toFile))
+          .iterator.flatMap(_.properties().asScala)
+          .filter(_.getValue.path("seconds").isNumber)
+          .map(e => e.getKey -> e.getValue.get("seconds").asDouble).toMap
+      } catch { case _: java.io.IOException => Map.empty }
+    val (timed, untimed) = names.partition(seconds.contains)
+    timed.sortBy(seconds) ++ untimed
+  }
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated gate names — local single-gate
     // replay (tools/compare_oracle.py); the driver passes exactly two
@@ -22,6 +43,8 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val gates = SparkEntry.queries.filter(kv => keep(kv._1))
+    val order = cheapestFirst(gates.keys.toSeq, Paths.get(s"$outDir/verify_status.json"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -48,7 +71,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" })
     // gate -> {status, seconds}, rewritten after every gate
     val status = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+    order.foreach { name =>
+      val fn = gates(name)
       val t0 = System.nanoTime()
       val ok =
         try {

@@ -602,8 +602,10 @@ object BlockIndex {
     * wildcard, TF-IDF, BM25) runs against the compressed on-disk artifact
     * — not just the WAND BM25 fast path. The relations are lazy
     * DataFrames over the sharded parquet (decode happens per-query on the
-    * blocks the query touches); `persist=true` caches the k-gram index,
-    * which is vocabulary-sized and reused by every fuzzy/wildcard query.
+    * blocks the query touches); `persist=true` caches `termStats` (a
+    * group-by over every block row, computed by the first query that reads
+    * it), which is vocabulary-sized and read by every fuzzy, wildcard,
+    * did-you-mean and typeahead query.
     */
   def asBundle(spark: SparkSession, dir: String, k: Int = 3,
       persist: Boolean = true): IndexBundle = {
@@ -624,16 +626,13 @@ object BlockIndex {
         docLensPaths.map(p => spark.read.parquet(p).select(col("docId"), col("len")))
           .reduce(_ unionByName _)
       else decoded.select(col("docId"), col("dl").as("len")).distinct()
-    val termStats = blocks.groupBy(col("term"))
-      .agg(sum(col("n").cast("long")).as("df"), max(col("maxTf")).as("maxTf"))
-    val kgramIndex = {
-      val kg = termStats
-        .select(explode(Analyzer.kgramsCol(col("term"), k)).as("gram"), col("term"))
-        .distinct()
-      if (persist) kg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else kg
+    val termStats = {
+      val ts = blocks.groupBy(col("term"))
+        .agg(sum(col("n").cast("long")).as("df"), max(col("maxTf")).as("maxTf"))
+      if (persist) ts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else ts
     }
-    IndexBundle(postings, docLens, termStats, kgramIndex, e.stats, k,
+    IndexBundle(postings, docLens, termStats, e.stats, k,
       blockDir = Some(dir))
   }
 

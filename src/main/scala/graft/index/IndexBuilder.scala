@@ -14,7 +14,6 @@ import org.apache.spark.storage.StorageLevel
   *   - `postings`  (term, docId, tf)   — the inverted index + tf map
   *   - `docLens`   (docId, len)        — body word counts
   *   - `termStats` (term, df, maxTf)   — per-term document frequency
-  *   - `kgramIndex`(gram, term)        — the k-gram index over the vocab
   *   - `stats`                         — nDocs / vocabSize / totalLen
   *   - `blockDir`                      — the [[BlockIndex]] directory the
   *     relations read, for a bundle from [[BlockIndex.asBundle]]
@@ -34,7 +33,6 @@ final case class IndexBundle(
     postings: DataFrame,
     docLens: DataFrame,
     termStats: DataFrame,
-    kgramIndex: DataFrame,
     stats: CorpusStats,
     k: Int,
     blockDir: Option[String] = None) {
@@ -45,9 +43,17 @@ final case class IndexBundle(
     */
   def idfCol(df: Column): Column = IndexBundle.idfCol(stats.vocabSize, df)
 
+  /** (gram, term): the k-gram index over the vocabulary, derived from
+    * `termStats` on each call. No query mode reads it: Fuzzy and Wildcard
+    * test each term's k-grams per row. distinct() mirrors the reference's
+    * per-gram dedup of terms (index_kgram.go:18-36).
+    */
+  def kgramIndex: DataFrame =
+    termStats.select(explode(kgramsCol(col("term"), k)).as("gram"), col("term"))
+      .distinct()
+
   def unpersist(): Unit = {
-    postings.unpersist(); docLens.unpersist()
-    termStats.unpersist(); kgramIndex.unpersist()
+    postings.unpersist(); docLens.unpersist(); termStats.unpersist()
   }
 }
 
@@ -104,9 +110,8 @@ object IndexBuilder {
       .select(col("p.term").as("term"), col("docId"), col("p.tf").as("tf"))
 
   /** Build the full logical index. The postings relation is NARROW (tf is
-    * folded into the tokenizer scan); the only shuffles are the (small,
-    * term-keyed) term-stats aggregation and the k-gram distinct over the
-    * vocabulary (vocab ≪ corpus).
+    * folded into the tokenizer scan); the only shuffle is the (small,
+    * term-keyed) term-stats aggregation.
     */
   /** Raise scan parallelism for under-partitioned sources (small/few
     * files collapse into a handful of input splits and the tokenize stage
@@ -136,19 +141,12 @@ object IndexBuilder {
       postings.groupBy(col("term"))
         .agg(count(lit(1)).as("df"), max(col("tf")).as("maxTf")))
 
-    // Vocabulary k-gram index. distinct() mirrors the reference's
-    // per-gram dedup of terms (index_kgram.go:18-36).
-    val kgramIndex = maybePersist(
-      termStats
-        .select(explode(kgramsCol(col("term"), k)).as("gram"), col("term"))
-        .distinct())
-
     val Array(nDocs, totalLen) = docLens
       .agg(count(lit(1)), coalesce(sum(col("len")), lit(0L)))
       .head().toSeq.map(_.asInstanceOf[Long]).toArray
     val vocabSize = termStats.count()
 
-    IndexBundle(postings, docLens, termStats, kgramIndex,
+    IndexBundle(postings, docLens, termStats,
       CorpusStats(nDocs, vocabSize, totalLen), k)
   }
 }

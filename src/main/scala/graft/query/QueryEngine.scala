@@ -2,8 +2,10 @@ package graft.query
 
 import graft.analysis.Analyzer
 import graft.index.IndexBundle
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** The six query modes of the reference engine (searcher.go), composed as
   * declarative DataFrame plans over the [[IndexBundle]] Datasets. Query
@@ -35,6 +37,7 @@ final class QueryEngine(
       */
     val rawDocs: Option[DataFrame] = None
 ) extends Serializable {
+  import QueryEngine.{Candidates, Listed, Wide}
 
   private def spark = index.postings.sparkSession
   private def postings = index.postings
@@ -113,129 +116,200 @@ final class QueryEngine(
   }
 
   // ---------------------------------------------------------------------
-  // Approximate matching (k-gram candidate generation;
+  // Approximate matching (k-gram filter-then-verify per vocabulary term;
   // reference index_kgram.go + searcher.go:142-189)
   // ---------------------------------------------------------------------
 
-  /** Small broadcast table of the query string's k-grams WITH multiplicity
-    * — the reference counts each occurrence of a repeated gram separately
-    * (index_kgram.go:58-67).
+  /** Whether `gram` is one of the vocabulary term's k-grams. A term's
+    * k-grams are the length-k windows of its `$`-padded form, or the term
+    * itself when it is shorter than k-1 ([[Analyzer.kgrams]]), so the test
+    * is a substring test on the padded term, evaluated per row with no
+    * k-gram relation.
     */
-  private def queryGramsDf(grams: Seq[String]): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    grams.groupBy(identity).view.mapValues(_.size).toSeq
-      .toDF("gram", "qcnt")
+  private def hasGram(gram: String): Column = {
+    val term = col("term")
+    val pad = lit("$" * (kk - 1))
+    if (gram.length == kk) length(term) >= kk - 1 && concat(pad, term, pad).contains(gram)
+    else term === gram
   }
 
-  /** Vocabulary terms within `maxEditDistance` of `str`: k-gram overlap
-    * pre-filter (the cheap conjunct, evaluated first) gating the exact
-    * levenshtein (reference index_kgram.go:94-108). Returns (term).
+  /** The vocabulary term is within `maxEditDistance` of `str`: the k-gram
+    * overlap bound, counting each occurrence of a repeated query gram
+    * (reference index_kgram.go:58-67, 94-108), gates the exact levenshtein.
+    * A term sharing no gram never qualifies, as in the reference's
+    * gram-posting merge.
     */
-  def closeTerms(str: String, maxEditDistance: Int): DataFrame = {
-    val grams = Analyzer.kgrams(str, kk)
-    val bound =
-      greatest(lit(str.length), length(col("term"))) - 1 -
-        lit((maxEditDistance - 1) * kk)
-    index.kgramIndex
-      .join(broadcast(queryGramsDf(grams)), "gram")
-      .groupBy(col("term")).agg(sum(col("qcnt")).as("__overlap"))
-      .where(col("__overlap") >= bound &&
-        levenshtein(lit(str), col("term")) <= maxEditDistance)
-      .select(col("term"))
+  private def closeTo(str: String, maxEditDistance: Int): Column = {
+    val overlap = Analyzer.kgrams(str, kk).groupBy(identity)
+      .map { case (g, occ) => when(hasGram(g), occ.size).otherwise(0) }
+      .reduce(_ + _)
+    val bound = greatest(lit(str.length), length(col("term"))) - 1 -
+      lit((maxEditDistance - 1) * kk)
+    overlap >= greatest(bound, lit(1)) &&
+      levenshtein(lit(str), col("term")) <= maxEditDistance
   }
 
-  /** Vocabulary terms containing every non-wildcard k-gram of the pattern
+  /** The vocabulary term holds every non-wildcard k-gram of the pattern
     * (reference index_kgram.go:71-90). All-wildcard patterns have no
     * non-wildcard grams and match nothing.
     */
-  def kgramMatch(pattern: String): DataFrame = {
-    val grams = Analyzer.kgrams(pattern, kk)
-      .filterNot(g => g.contains('*') || g.contains('?'))
-    if (grams.isEmpty) index.kgramIndex.select(col("term")).where(lit(false))
-    else
-      index.kgramIndex
-        .join(broadcast(queryGramsDf(grams)), "gram")
-        .groupBy(col("term")).agg(sum(col("qcnt")).as("__overlap"))
-        .where(col("__overlap") === grams.size)
-        .select(col("term"))
-  }
+  private def holdsGramsOf(pattern: String): Column =
+    Analyzer.kgrams(pattern, kk).filterNot(g => g.contains('*') || g.contains('?'))
+      .distinct.map(hasGram).reduceOption(_ && _).getOrElse(lit(false))
 
-  /** Union of the postings of a term-candidate relation
-    * (fuzzy/wildcard; reference searcher.go:142-189).
+  /** The wildcard token matches the vocabulary term: its k-grams, then the
+    * exact match as an anchored regex (`*`→`.*`, `?`→`.`), which has the
+    * semantics of the reference's DP (`*` = zero or more) and kills k-gram
+    * false positives like `sem*ts*c` vs `semantic`.
+    */
+  private def matchesWildcard(tok: String): Column =
+    holdsGramsOf(tok) && col("term").rlike(Analyzer.wildcardRegex(tok))
+
+  /** The vocabulary: one row per indexed term with its df. */
+  private def vocab: DataFrame = index.termStats.select(col("term"), col("df"))
+
+  /** Vocabulary terms within `maxEditDistance` of `str`. Returns (term). */
+  def closeTerms(str: String, maxEditDistance: Int): DataFrame =
+    vocab.where(closeTo(str, maxEditDistance)).select(col("term"))
+
+  /** Vocabulary terms containing every non-wildcard k-gram of the pattern
+    * (the wildcard candidate pre-filter). Returns (term).
+    */
+  def kgramMatch(pattern: String): DataFrame =
+    vocab.where(holdsGramsOf(pattern)).select(col("term"))
+
+  /** The candidate probe: ONE pass over the vocabulary that tests every
+    * token's predicate on each term and keeps (term, df, hits), `hits`
+    * the indexes of the tokens the term is a candidate for.
+    */
+  private def probe(preds: Seq[Column]): RDD[Row] =
+    vocab.select(col("term"), col("df"),
+        filter(array(preds.zipWithIndex.map { case (p, i) => when(p, lit(i)) }: _*),
+          _.isNotNull).as("hits"))
+      .where(size(col("hits")) > 0)
+      .rdd
+
+  /** Each token's candidate terms from one [[probe]] job. The candidate
+    * set is VOCABULARY-bounded, not constant-bounded: a loose pattern
+    * (`a*`, or a short token with edit budget 2) can match a large fraction
+    * of a 10⁷–10⁸-term vocabulary. So every partition sends at most
+    * [[QueryEngine.CandidateInCap]]+1 terms per token, and
     *
-    * The candidate set is VOCABULARY-bounded, not constant-bounded: a
-    * loose pattern (`a*`, or a short token with edit budget 2) can match
-    * a large fraction of a 10⁷–10⁸-term vocabulary, and unconditionally
-    * broadcasting that relation is a driver/executor OOM at scale. Same
-    * bounded-probe move as the WAND SurvivorCap
-    * ([[graft.index.BlockIndex]]): collect at most
-    * [[QueryEngine.CandidateInCap]]+1 candidate terms —
-    *
-    *   - ≤ cap: the full candidate set is in hand; push it into the
-    *     postings scan as an `In(term, …)` filter (row-group pruning at
-    *     the source — strictly better than the broadcast join it
-    *     replaces, and the common case: real fuzzy/wildcard tokens
-    *     yield tens of candidates);
-    *   - > cap: leave the candidates distributed and SHUFFLE a LEFT
-    *     SEMI join (postings ⋉ candidates), hinted `shuffle_hash` on
-    *     the candidate side so neither the static planner nor AQE
-    *     re-broadcasts what the probe just proved unbounded (Catalyst's
-    *     size estimate through the candidate aggregation is a guess;
-    *     the probe's row count is a fact).
+    *   - ≤ cap: the token's full candidate set is in hand with each term's
+    *     df; its postings come from the scan as an `In(term, …)` filter;
+    *   - > cap: its candidates stay distributed, and its postings come
+    *     from a SHUFFLE LEFT SEMI join (postings ⋉ candidates), hinted
+    *     `shuffle_hash` on the candidate side so neither the static planner
+    *     nor AQE re-broadcasts what the probe just proved unbounded.
     *
     * Result sets are identical on both sides of the cap (spec-asserted).
     */
-  private[graft] def unionOfTerms(terms: DataFrame): DataFrame = {
-    val probe = QueryEngine.firstRows(terms, QueryEngine.CandidateInCap + 1)
-      .map(_.getString(0))
-    if (probe.length <= QueryEngine.CandidateInCap) {
-      if (probe.isEmpty) emptyIds
-      else postings.where(col("term").isin(probe.toIndexedSeq: _*))
-        .select(col("docId")).distinct()
-    } else
-      postings.join(terms.hint("shuffle_hash"), Seq("term"), "left_semi")
-        .select(col("docId")).distinct()
+  private def candidates(preds: Seq[Column]): IndexedSeq[Candidates] = {
+    if (preds.isEmpty) return IndexedSeq.empty
+    val cap = QueryEngine.CandidateInCap
+    val perPart = QueryEngine.keepPerToken(probe(preds), preds.size, cap + 1).collect()
+    preds.indices.map { i =>
+      val terms = perPart.iterator.flatMap(_(i)).take(cap + 1).toSeq
+      if (terms.size <= cap) Listed(terms)
+      else Wide(vocab.where(preds(i)).select(col("term")))
+    }
   }
 
-  /** Per-token candidate sets folded with the reference's reset-on-empty
-    * quirk: when the accumulated result is empty the next token's union
-    * REPLACES it instead of short-circuiting (searcher.go:147-151,182-185).
-    * The emptiness check is a driver-side action per token, exactly like
-    * the reference's `len(results) == 0`.
+  /** (docId, tok) for every posting of a candidate term of token `tok` ≥
+    * `from`, duplicates kept. The listed tokens' postings come from one
+    * scan, each term mapped to the tokens it is a candidate for.
     */
-  private def foldResetOnEmpty(perToken: Seq[DataFrame]): DataFrame = {
-    var results: DataFrame = null
-    for (u <- perToken) {
-      results =
-        if (results == null || results.isEmpty) u
-        else intersectOf(results, u)
+  private def tokenPostings(cands: IndexedSeq[Candidates], from: Int): DataFrame = {
+    val tokens = from until cands.size
+    val listed = (for (i <- tokens; (t, _) <- cands(i).listed) yield t -> i)
+      .groupMap(_._1)(_._2)
+    val scan =
+      if (listed.isEmpty) None
+      else Some(postings.where(col("term").isin(listed.keys.toSeq: _*))
+        .select(col("docId"), explode(typedLit(listed).apply(col("term"))).as("tok")))
+    val wide = tokens.flatMap { i =>
+      cands(i) match {
+        case Wide(terms) => Some(postings.join(terms.hint("shuffle_hash"), Seq("term"), "left_semi")
+          .select(col("docId"), lit(i).as("tok")))
+        case _ => None
+      }
     }
-    if (results == null) emptyIds else results.orderBy(col("docId"))
+    (scan ++ wide).reduceOption(_ union _)
+      .getOrElse(emptyIds.select(col("docId"), lit(0).as("tok")))
+  }
+
+  /** Candidate postings at or under which a Fuzzy or Wildcard fold and
+    * page run in one task: [[QueryEngine.OneTaskPostings]], lowered only
+    * by specs that exercise the distributed plan on small corpora.
+    */
+  @volatile private[graft] var oneTaskPostings: Long = QueryEngine.OneTaskPostings
+
+  /** A Fuzzy or Wildcard query after its candidate probe: per token, its
+    * candidates; `oneTask` when the listed terms' df — the index's term
+    * statistics, which count every committed posting — bound the
+    * candidate postings under [[oneTaskPostings]], so the fold and the
+    * page each run as one task with no exchange.
+    */
+  private final class Expansion(cands: IndexedSeq[Candidates]) {
+    val n: Int = cands.size
+    private val oneTask = cands.forall(_.isInstanceOf[Listed]) &&
+      cands.iterator.flatMap(_.listed).map(_._2).sum <= oneTaskPostings
+
+    private def covered(from: Int) =
+      QueryEngine.coveredByDoc(tokenPostings(cands, from), n, oneTask)
+
+    /** The reference fold (searcher.go:147-151, 182-185) replayed from one
+      * aggregate job ([[QueryEngine.FoldTally]]): the token where its last
+      * reset-on-empty started the final intersection of tokens from..n-1,
+      * and that intersection's doc count. No job when no token has a
+      * candidate.
+      */
+    lazy val (from: Int, total: Long) =
+      if (cands.forall(_ == Listed(Nil))) (n - 1, 0L)
+      else QueryEngine.FoldTally.of(covered(0), n).replay
+
+    /** The first `m` ascending docIds of the final intersection, one job. */
+    def firstIds(m: Int): Seq[Long] = {
+      val need = n - from
+      covered(from).filter(_._2.cardinality == need).keys.takeOrdered(m).toSeq
+    }
+
+    /** The final intersection as an ascending (docId) relation; a single
+      * token needs no fold job.
+      */
+    def docIds: DataFrame =
+      if (n == 0 || (n > 1 && total == 0)) emptyIds
+      else {
+        val s = if (n == 1) 0 else from
+        tokenPostings(cands, s).groupBy(col("docId"))
+          .agg(count_distinct(col("tok")).as("__m"))
+          .where(col("__m") === n - s)
+          .select(col("docId")).orderBy(col("docId"))
+      }
+  }
+
+  /** The [[Expansion]] of a Fuzzy or Wildcard query; None for other modes. */
+  private def expand(alg: String, query: String): Option[Expansion] = alg match {
+    case "Fuzzy" => Some(new Expansion(candidates(Analyzer.tokenize(query)
+      .map(t => closeTo(t, Analyzer.getFuzziness(t))))))
+    case "Wildcard" => Some(new Expansion(candidates(
+      Analyzer.tokenizeWildcard(query).map(matchesWildcard))))
+    case _ => None
   }
 
   /** Fuzzy retrieval with the per-token-length edit budget
-    * (reference searcher.go:142-168).
+    * (reference searcher.go:142-168): each token's close terms, folded
+    * with the reference's reset-on-empty quirk — when the accumulated
+    * result is empty the next token's union REPLACES it instead of
+    * short-circuiting. The probe and the fold run as two jobs here;
+    * the result is an ascending (docId) relation.
     */
-  def fuzzyQuery(query: String): DataFrame =
-    foldResetOnEmpty(
-      Analyzer.tokenize(query).map { tok =>
-        unionOfTerms(closeTerms(tok, Analyzer.getFuzziness(tok)))
-      })
+  def fuzzyQuery(query: String): DataFrame = expand("Fuzzy", query).get.docIds
 
-  /** Wildcard retrieval: k-gram candidates post-filtered by the exact
-    * wildcard match — kills k-gram false positives like `sem*ts*c` vs
-    * `semantic` (reference searcher.go:173-189). The post-filter runs
-    * executor-side as an anchored regex (`*`→`.*`, `?`→`.`), which has
-    * semantics identical to the reference's DP (`*` = zero or more).
+  /** Wildcard retrieval: each token's matching terms, folded as in
+    * [[fuzzyQuery]] (reference searcher.go:173-189).
     */
-  def wildcardQuery(query: String): DataFrame =
-    foldResetOnEmpty(
-      Analyzer.tokenizeWildcard(query).map { tok =>
-        val cands = kgramMatch(tok)
-          .where(col("term").rlike(Analyzer.wildcardRegex(tok)))
-        unionOfTerms(cands)
-      })
+  def wildcardQuery(query: String): DataFrame = expand("Wildcard", query).get.docIds
 
   // ---------------------------------------------------------------------
   // Scored query modes
@@ -604,42 +678,37 @@ final class QueryEngine(
   /** "Did you mean": deterministic per-token spelling suggestion over the
     * index vocabulary — each token's best close term by (edit distance
     * asc, df desc, term asc) within its length-scaled edit budget
-    * ([[Analyzer.getFuzziness]]), using the same k-gram-prefiltered
-    * candidate generation as [[fuzzyQuery]]. A token present in the
-    * vocabulary is its own unique distance-0 candidate, so it suggests
-    * itself; a token with NO candidate (garbage, or the reference's
-    * short-token overlap-bound quirk) falls back to itself via the left
-    * join. Output: (pos, token, suggestion), one row per query token.
+    * ([[Analyzer.getFuzziness]]), from the same candidate probe as
+    * [[fuzzyQuery]] in one job: every partition sends its best term per
+    * token, and the driver merges at most partitions × tokens rows. A
+    * token present in the vocabulary is its own unique distance-0
+    * candidate, so it suggests itself; a token with NO candidate (garbage,
+    * or the reference's short-token overlap-bound quirk) falls back to
+    * itself. Output: (pos, token, suggestion), one row per query token.
     */
   def didYouMean(query: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val toks = Analyzer.tokenize(query)
-    if (toks.isEmpty)
-      return Seq.empty[(Int, String, String)].toDF("pos", "token", "suggestion")
-    toks.zipWithIndex.map { case (t, i) =>
-      val best = closeTerms(t, Analyzer.getFuzziness(t))
-        .join(index.termStats, "term")
-        .orderBy(levenshtein(lit(t), col("term")).asc,
-          col("df").desc, col("term").asc)
-        .limit(1)
-        .select(lit(i).as("pos"), lit(t).as("token"),
-          col("term").as("suggestion"))
-      Seq((i, t)).toDF("pos", "token")
-        .join(best, Seq("pos", "token"), "left")
-        .select(col("pos"), col("token"),
-          coalesce(col("suggestion"), col("token")).as("suggestion"))
-    }.reduce(_ union _)
+    suggestions(query).zipWithIndex.map { case ((t, s), i) => (i, t, s) }
+      .toDF("pos", "token", "suggestion")
+  }
+
+  /** [[didYouMean]]'s (token, suggestion) pairs in query order. */
+  private def suggestions(query: String): Seq[(String, String)] = {
+    val toks = Analyzer.tokenize(query).toIndexedSeq
+    val best =
+      if (toks.isEmpty) Map.empty[Int, String]
+      else QueryEngine.bestPerToken(
+        probe(toks.map(t => closeTo(t, Analyzer.getFuzziness(t)))), toks)
+    toks.zipWithIndex.map { case (t, i) => t -> best.getOrElse(i, t) }
   }
 
   /** [[didYouMean]] folded back into a query string (driver-side, bounded
     * by the token count); None when no token changed.
     */
   def suggestQuery(query: String): Option[String] = {
-    val rows = didYouMean(query).orderBy(col("pos")).collect()
-    val suggested = rows.map(_.getAs[String]("suggestion"))
-    if (rows.exists(r => r.getAs[String]("token") != r.getAs[String]("suggestion")))
-      Some(suggested.mkString(" "))
+    val pairs = suggestions(query)
+    if (pairs.exists { case (t, s) => t != s }) Some(pairs.map(_._2).mkString(" "))
     else None
   }
 
@@ -748,20 +817,28 @@ final class QueryEngine(
     * result count. A BM25 page (unknown names fall back to BM25) over a
     * bundle from [[graft.index.BlockIndex.asBundle]] is ranked through
     * that directory's opened epoch, page and total in one job on small
-    * candidate sets ([[graft.index.BlockIndex.bm25TopKWithTotal]]). Every
-    * other ranking is persisted and counted, and the page is read from
-    * the cached rows in one more job. A page past the last result is
-    * empty, and no limit or offset is built for it.
+    * candidate sets ([[graft.index.BlockIndex.bm25TopKWithTotal]]). A
+    * Fuzzy or Wildcard page takes three jobs on any bundle while every
+    * token's candidates are listed: the candidate probe, the fold
+    * aggregate, which also gives the total, and the page's ascending
+    * docIds. Every other ranking is persisted and counted, and
+    * the page is read from the cached rows in one more job. A page past
+    * the last result is empty, and no limit or offset is built for it.
     */
   def serpPage(alg: String, query: String, page: Int,
       perPage: Int = 5): (Seq[Long], Long) = {
     require(page >= 1, s"page must be >= 1, got $page")
     val skip = (page - 1).toLong * perPage
+    lazy val expansion = expand(alg, query)
     index.blockDir.filterNot(_ => modes.isDefinedAt(alg)) match {
       case Some(dir) =>
         val (top, total) = graft.index.BlockIndex.bm25TopKWithTotal(
           spark, dir, query, page.toLong * perPage, k1, b)
         (if (skip >= top.size) Nil else top.drop(skip.toInt).map(_._1), total)
+      case None if expansion.nonEmpty =>
+        val e = expansion.get
+        if (skip >= e.total) (Nil, e.total)
+        else (e.firstIds((skip + perPage).toInt).drop(skip.toInt), e.total)
       case None =>
         // persisted so the ranking runs ONCE: the count fills the cache,
         // the page reads the cached partitions back, one job each (an RDD
@@ -810,14 +887,131 @@ final class QueryEngine(
 
 object QueryEngine {
 
-  /** Largest fuzzy/wildcard candidate-term set the driver will collect
-    * and push into the postings scan as an `In(term, …)` filter; above
-    * it the candidates stay distributed and join by shuffle
-    * ([[QueryEngine.unionOfTerms]]). Same order of magnitude as the WAND
+  /** Largest fuzzy/wildcard candidate-term set per token the driver will
+    * collect and push into the postings scan as an `In(term, …)` filter;
+    * above it the candidates stay distributed and join by shuffle
+    * ([[QueryEngine.candidates]]). Same order of magnitude as the WAND
     * SurvivorCap: thousands of strings are driver-trivial, millions are
     * not.
     */
   val CandidateInCap = 4096
+
+  /** Candidate postings (the listed candidate terms' summed df) at or
+    * under which a Fuzzy or Wildcard fold and page each run in one task.
+    * On 4 local cores the one-task fold and page still beat the shuffled
+    * plan at 1.2M postings (about 2.0 s against 2.4 s); the cut keeps one
+    * task's share to about a million postings, a second's work.
+    */
+  private[graft] val OneTaskPostings = 1L << 20
+
+  /** A token's candidate terms: listed with their df (≤ [[CandidateInCap]])
+    * or left distributed as a (term) relation.
+    */
+  private[query] sealed trait Candidates { def listed: Seq[(String, Long)] = Nil }
+  private[query] final case class Listed(override val listed: Seq[(String, Long)])
+      extends Candidates
+  private[query] final case class Wide(terms: DataFrame) extends Candidates
+
+  /** At most `m` (term, df) probe rows per token from each partition. */
+  private def keepPerToken(rows: RDD[Row], n: Int, m: Int): RDD[Array[Array[(String, Long)]]] =
+    rows.mapPartitions { it =>
+      val kept = Array.fill(n)(mutable.ArrayBuilder.make[(String, Long)])
+      val sizes = new Array[Int](n)
+      it.foreach { r =>
+        r.getSeq[Int](2).foreach { i =>
+          if (sizes(i) < m) { kept(i) += ((r.getString(0), r.getLong(1))); sizes(i) += 1 }
+        }
+      }
+      Iterator(kept.map(_.result()))
+    }
+
+  /** The best probe row per token by (edit distance asc, df desc, term
+    * asc): each partition sends its best, the driver merges them.
+    * Analyzer tokens are ASCII, where [[Analyzer.editDistance]] equals
+    * Spark's `levenshtein`.
+    */
+  private def bestPerToken(rows: RDD[Row], toks: IndexedSeq[String]): Map[Int, String] = {
+    val order = Ordering.by[(Int, Long, String), (Int, Long, String)] {
+      case (d, df, t) => (d, -df, t)
+    }
+    rows.mapPartitions { it =>
+      val best = mutable.Map.empty[Int, (Int, Long, String)]
+      it.foreach { r =>
+        val (term, df) = (r.getString(0), r.getLong(1))
+        r.getSeq[Int](2).foreach { i =>
+          val c = (Analyzer.editDistance(toks(i), term), df, term)
+          if (best.get(i).forall(order.gt(_, c))) best(i) = c
+        }
+      }
+      best.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(order.min).view.mapValues(_._3).toMap
+  }
+
+  /** (docId, tokens covered) per doc of a (docId, tok) relation: grouped
+    * inside one task (`oneTask`, no exchange) or by a shuffle.
+    */
+  private def coveredByDoc(rows: DataFrame, n: Int,
+      oneTask: Boolean): RDD[(Long, java.util.BitSet)] = {
+    val pairs = rows.queryExecution.toRdd.map(r => (r.getLong(0), r.getInt(1)))
+    if (oneTask)
+      pairs.coalesce(1).mapPartitions { it =>
+        val byDoc = mutable.LongMap.empty[java.util.BitSet]
+        it.foreach { case (d, t) => byDoc.getOrElseUpdate(d, new java.util.BitSet(n)).set(t) }
+        byDoc.iterator
+      }
+    else pairs.aggregateByKey(new java.util.BitSet(n))(
+      (b, t) => { b.set(t); b }, (b, o) => { b.or(o); b })
+  }
+
+  /** The statistics that decide the reference's reset-on-empty fold over
+    * n tokens (searcher.go:147-151, 182-185): for each start token s, the
+    * longest run of consecutive tokens from s that one doc covers
+    * (`maxRun(s)`, max over docs) and the number of docs covering all of
+    * s..n-1 (`cover(s)`) — 2n values whatever the token count. The
+    * intersection of tokens s..i is empty iff maxRun(s) < i-s+1, so
+    * [[replay]] repeats the fold exactly.
+    */
+  private[graft] final class FoldTally(val maxRun: Array[Int], val cover: Array[Long])
+      extends Serializable {
+    def add(covered: java.util.BitSet): FoldTally = {
+      val n = maxRun.length
+      var run = 0
+      for (s <- n - 1 to 0 by -1) {
+        run = if (covered.get(s)) run + 1 else 0
+        if (run > maxRun(s)) maxRun(s) = run
+        if (run == n - s) cover(s) += 1
+      }
+      this
+    }
+
+    def merge(o: FoldTally): FoldTally = {
+      for (s <- maxRun.indices) {
+        maxRun(s) = math.max(maxRun(s), o.maxRun(s))
+        cover(s) += o.cover(s)
+      }
+      this
+    }
+
+    /** The fold replayed: (s, docs) where the last reset started the final
+      * intersection of tokens s..n-1, which holds `docs` documents. The
+      * first token starts it; a later token i restarts it when tokens
+      * s..i-1 intersect to nothing.
+      */
+    def replay: (Int, Long) = {
+      var s = 0
+      for (i <- 1 until maxRun.length) if (maxRun(s) < i - s) s = i
+      (s, cover(s))
+    }
+  }
+
+  private[graft] object FoldTally {
+    def empty(n: Int): FoldTally = new FoldTally(new Array[Int](n), new Array[Long](n))
+
+    /** The tally of the docs of `covered`, in one job. */
+    def of(covered: RDD[(Long, java.util.BitSet)], n: Int): FoldTally =
+      covered.mapPartitions(docs => Iterator(docs.foldLeft(empty(n))(_ add _._2)))
+        .fold(empty(n))(_ merge _)
+  }
 
   /** The first `n` rows of `rel` in ONE job: every partition sends its
     * first `n` rows at once, where a limit scans partitions incrementally,
@@ -829,15 +1023,6 @@ object QueryEngine {
     rel.rdd.mapPartitions(rows => Iterator(rows.take(n).toArray)).collect()
       .flatten.take(n)
 
-  /** Repository-grouped results (the GitHub-code-search "group by repo"
-    * SERP view): scored hits collapsed to one row per group — best score,
-    * the doc achieving it (min docId on score ties — deterministic), and
-    * the group's hit count — ranked (best_score desc, n_files desc, key).
-    * `hits` is a (docId, score) relation, top-k bounded by the caller, so
-    * the metadata join is hit-sized (broadcast) and the groupBy touches
-    * ≤ k rows; the corpus-sized `meta` relation is never shuffled. The
-    * argmax is one `max(struct(score, −docId))` — no window.
-    */
   /** SERP near-duplicate collapse: drop any hit whose sketch is within
     * `maxHamming` bits of a HIGHER-ranked hit (rank = score desc, docId
     * asc). This is the PREDECESSOR rule, not MOSS/Lucene's greedy
@@ -870,6 +1055,15 @@ object QueryEngine {
       .orderBy(col("score").desc, col("docId").asc)
   }
 
+  /** Repository-grouped results (the GitHub-code-search "group by repo"
+    * SERP view): scored hits collapsed to one row per group — best score,
+    * the doc achieving it (min docId on score ties — deterministic), and
+    * the group's hit count — ranked (best_score desc, n_files desc, key).
+    * `hits` is a (docId, score) relation, top-k bounded by the caller, so
+    * the metadata join is hit-sized (broadcast) and the groupBy touches
+    * ≤ k rows; the corpus-sized `meta` relation is never shuffled. The
+    * argmax is one `max(struct(score, −docId))` — no window.
+    */
   def groupHitsBy(hits: DataFrame, meta: DataFrame,
       keyCol: String): DataFrame =
     meta.join(broadcast(hits.select(col("docId"), col("score"))), "docId")

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.index.BlockIndex
+import graft.query.QueryEngine
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
@@ -8,29 +9,41 @@ import scala.jdk.CollectionConverters._
 /** Print the executed plan of a WAND BM25 query and the Spark jobs it
   * launched — for plan iteration and for checking which `bm25TopK` route
   * a query takes on any index dir:
-  * `runMain graft.tools.ExplainQuery <indexDir> "<query>"`.
-  * The query runs twice: the first call also opens the index epoch.
+  * `runMain graft.tools.ExplainQuery <indexDir> "<query>" [mode]`.
+  * The query runs twice: the first call also opens the index epoch. With
+  * a mode name (e.g. `Wildcard`, `Fuzzy`, `BM25`), it prints instead the
+  * jobs of SERP page 1 in that mode, `QueryEngine.serpPage` over the
+  * index's `BlockIndex.asBundle`, for a first and a second call.
   */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/tmp/graft-idx2m"
     val q = if (args.length > 1) args(1) else "def val return"
+    val mode = args.lift(2)
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val log = new JobLog(spark)
+    lazy val engine = new QueryEngine(BlockIndex.asBundle(spark, dir))
     for (call <- Seq("first", "second")) {
       val (df, jobs) = log.record {
-        val df = BlockIndex.bm25TopK(spark, dir, q, 10)
-        df.collect()
-        df
+        mode match {
+          case Some(m) =>
+            val (ids, total) = engine.serpPage(m, q, 1)
+            println(s"=== $m page 1 ($call call): ${ids.mkString(", ")} of $total ===")
+            None
+          case None =>
+            val df = BlockIndex.bm25TopK(spark, dir, q, 10)
+            df.collect()
+            Some(df)
+        }
       }
       println(s"=== SPARK JOBS ($call call): ${jobs.size} ===")
       jobs.zipWithIndex.foreach { case (stages, i) =>
         println(s"job ${i + 1}: ${stages.mkString(" | ")}")
       }
-      if (call == "second") {
+      if (call == "second") df.foreach { df =>
         println("=== EXECUTED PLAN ===")
         println(df.queryExecution.executedPlan.toString)
       }

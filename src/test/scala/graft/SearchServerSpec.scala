@@ -308,6 +308,36 @@ class SearchServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("block-backed Wildcard and Fuzzy SERP misses: at most 4 Spark jobs, none per token") {
+    val idx = tmpDir("serp-approx-jobs")
+    BlockIndex.build(genDocs, idx, BlockIndex.Layout(blockSpan = 4096, nShards = 4))
+    val log = new JobLog(spark)
+    val engine = new QueryEngine(BlockIndex.asBundle(spark, idx))
+    val memory = new QueryEngine(IndexBuilder.build(genDocs, k = 3))
+    val srv = new SearchServer(engine, genDocs)
+    try {
+      srv.suggest("im") // opens the index epoch and caches the vocabulary
+      // five tokens: no reset, a reset after a token without candidates,
+      // and two resets
+      for ((alg, q) <- Seq(("Wildcard", "retur* overrid* publi* stati* extend*"),
+          ("Wildcard", "retur* zzzq* clas* objec* packag*"),
+          ("Fuzzy", "retrn overide publc statc extnds"),
+          ("Fuzzy", "retrn zzzzqq clas objct pakage"),
+          ("Fuzzy", "retrn zzzzqq clas zzzzqq pakage"))) {
+        val ((hits, total), miss) = log.record(srv.search(q, alg, 1))
+        assert(hits.nonEmpty && total > 0, s"$alg '$q'")
+        assert(miss.size <= 4, s"$alg '$q':\n${miss.mkString("\n")}")
+        val want = memory.serpPage(alg, q, 1)
+        assert((hits.map(_.docId), total) == want, s"$alg '$q'")
+      }
+      // did-you-mean runs the same probe, one job for every token
+      val (dym, jobs) = log.record(srv.didYouMean("retrn zzzzqq clas objct pakage"))
+      assert(dym == memory.suggestQuery("retrn zzzzqq clas objct pakage"))
+      assert(dym.contains("return zzzzqq class object package"), dym)
+      assert(jobs.size == 1, jobs.mkString("\n"))
+    } finally srv.stop()
+  }
+
   test("suggest and did-you-mean caches: repeats launch no Spark job; TTL=0 disables") {
     val log = new JobLog(spark)
     val cached = new SearchServer(engine, docs, port = 0)
