@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.JsonNode
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
@@ -9,6 +10,16 @@ import scala.jdk.CollectionConverters._
   * run's verify_status.json. `graft.Verify <sfDir> <outDir> [gate,gate…]`. */
 object Verify {
 
+  /** The entries of the verify_status.json at `statusFile`, gate ->
+    * {status, seconds}, in file order; none when the file is missing or
+    * does not parse.
+    */
+  private[graft] def previousStatus(statusFile: Path): Seq[(String, JsonNode)] =
+    try {
+      Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(statusFile.toFile))
+        .iterator.flatMap(_.properties().asScala).map(e => e.getKey -> e.getValue).toSeq
+    } catch { case _: java.io.IOException => Nil }
+
   /** `names` cheapest first: ordered by the seconds each gate took in the
     * verify_status.json at `statusFile`, so a run cut short by a time
     * budget loses its slowest gates. Gates the file does not time go last,
@@ -16,16 +27,23 @@ object Verify {
     * keeps the given order.
     */
   private[graft] def cheapestFirst(names: Seq[String], statusFile: Path): Seq[String] = {
-    val seconds: Map[String, Double] =
-      try {
-        Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(statusFile.toFile))
-          .iterator.flatMap(_.properties().asScala)
-          .filter(_.getValue.path("seconds").isNumber)
-          .map(e => e.getKey -> e.getValue.get("seconds").asDouble).toMap
-      } catch { case _: java.io.IOException => Map.empty }
+    val seconds = previousStatus(statusFile).collect {
+      case (gate, e) if e.path("seconds").isNumber => gate -> e.get("seconds").asDouble
+    }.toMap
     val (timed, untimed) = names.partition(seconds.contains)
     timed.sortBy(seconds) ++ untimed
   }
+
+  /** The entries of the verify_status.json at `statusFile` that this run
+    * keeps: those of the `known` gates it does not `run`. A gate-list
+    * replay into a sweep's directory thus keeps every other gate's time,
+    * and the next sweep still runs them cheapest first.
+    */
+  private[graft] def carriedOver(statusFile: Path, known: Set[String],
+      run: Set[String]): Seq[(String, String)] =
+    previousStatus(statusFile).collect {
+      case (gate, e) if known(gate) && !run(gate) => gate -> e.toString
+    }
 
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated gate names — local single-gate
@@ -43,8 +61,10 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val gates = SparkEntry.queries.filter(kv => keep(kv._1))
-    val order = cheapestFirst(gates.keys.toSeq, Paths.get(s"$outDir/verify_status.json"))
+    val all = SparkEntry.queries
+    val gates = all.filter(kv => keep(kv._1))
+    val statusFile = Paths.get(s"$outDir/verify_status.json")
+    val order = cheapestFirst(gates.keys.toSeq, statusFile)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -70,7 +90,8 @@ object Verify {
     writeJson("oracle_sql.json", SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" })
     // gate -> {status, seconds}, rewritten after every gate
-    val status = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val status = scala.collection.mutable.LinkedHashMap.from(
+      carriedOver(statusFile, all.keySet, gates.keySet))
     order.foreach { name =>
       val fn = gates(name)
       val t0 = System.nanoTime()

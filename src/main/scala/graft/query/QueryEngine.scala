@@ -221,7 +221,7 @@ final class QueryEngine(
     */
   private def tokenPostings(cands: IndexedSeq[Candidates], from: Int): DataFrame = {
     val tokens = from until cands.size
-    val listed = (for (i <- tokens; (t, _) <- cands(i).listed) yield t -> i)
+    val listed = (for (i <- tokens; t <- cands(i).listed) yield t -> i)
       .groupMap(_._1)(_._2)
     val scan =
       if (listed.isEmpty) None
@@ -238,25 +238,18 @@ final class QueryEngine(
       .getOrElse(emptyIds.select(col("docId"), lit(0).as("tok")))
   }
 
-  /** Candidate postings at or under which a Fuzzy or Wildcard fold and
-    * page run in one task: [[QueryEngine.OneTaskPostings]], lowered only
-    * by specs that exercise the distributed plan on small corpora.
-    */
-  @volatile private[graft] var oneTaskPostings: Long = QueryEngine.OneTaskPostings
-
   /** A Fuzzy or Wildcard query after its candidate probe: per token, its
-    * candidates; `oneTask` when the listed terms' df — the index's term
-    * statistics, which count every committed posting — bound the
-    * candidate postings under [[oneTaskPostings]], so the fold and the
-    * page each run as one task with no exchange.
+    * candidates. The fold and the page group the candidates' postings by
+    * doc in one task with no exchange; a shuffle by docId instead ran
+    * slower at every size measured, up to 1.2M candidate postings.
     */
   private final class Expansion(cands: IndexedSeq[Candidates]) {
     val n: Int = cands.size
-    private val oneTask = cands.forall(_.isInstanceOf[Listed]) &&
-      cands.iterator.flatMap(_.listed).map(_._2).sum <= oneTaskPostings
 
-    private def covered(from: Int) =
-      QueryEngine.coveredByDoc(tokenPostings(cands, from), n, oneTask)
+    /** (docId, toks): the tokens ≥ `from` each doc holds a candidate of. */
+    private def covered(from: Int): DataFrame =
+      tokenPostings(cands, from).coalesce(1).groupBy(col("docId"))
+        .agg(collect_set(col("tok")).as("toks"))
 
     /** The reference fold (searcher.go:147-151, 182-185) replayed from one
       * aggregate job ([[QueryEngine.FoldTally]]): the token where its last
@@ -268,24 +261,17 @@ final class QueryEngine(
       if (cands.forall(_ == Listed(Nil))) (n - 1, 0L)
       else QueryEngine.FoldTally.of(covered(0), n).replay
 
-    /** The first `m` ascending docIds of the final intersection, one job. */
-    def firstIds(m: Int): Seq[Long] = {
-      val need = n - from
-      covered(from).filter(_._2.cardinality == need).keys.takeOrdered(m).toSeq
-    }
+    /** The final intersection: the docs holding every token from..n-1. */
+    private def intersection: DataFrame =
+      covered(from).where(size(col("toks")) === n - from).select(col("docId"))
 
-    /** The final intersection as an ascending (docId) relation; a single
-      * token needs no fold job.
-      */
+    /** The first `m` ascending docIds of the final intersection, one job. */
+    def firstIds(m: Int): Seq[Long] =
+      intersection.queryExecution.toRdd.map(_.getLong(0)).takeOrdered(m).toSeq
+
+    /** The final intersection as an ascending (docId) relation. */
     def docIds: DataFrame =
-      if (n == 0 || (n > 1 && total == 0)) emptyIds
-      else {
-        val s = if (n == 1) 0 else from
-        tokenPostings(cands, s).groupBy(col("docId"))
-          .agg(count_distinct(col("tok")).as("__m"))
-          .where(col("__m") === n - s)
-          .select(col("docId")).orderBy(col("docId"))
-      }
+      if (total == 0) emptyIds else intersection.orderBy(col("docId"))
   }
 
   /** The [[Expansion]] of a Fuzzy or Wildcard query; None for other modes. */
@@ -896,30 +882,22 @@ object QueryEngine {
     */
   val CandidateInCap = 4096
 
-  /** Candidate postings (the listed candidate terms' summed df) at or
-    * under which a Fuzzy or Wildcard fold and page each run in one task.
-    * On 4 local cores the one-task fold and page still beat the shuffled
-    * plan at 1.2M postings (about 2.0 s against 2.4 s); the cut keeps one
-    * task's share to about a million postings, a second's work.
+  /** A token's candidate terms: listed (≤ [[CandidateInCap]]) or left
+    * distributed as a (term) relation.
     */
-  private[graft] val OneTaskPostings = 1L << 20
-
-  /** A token's candidate terms: listed with their df (≤ [[CandidateInCap]])
-    * or left distributed as a (term) relation.
-    */
-  private[query] sealed trait Candidates { def listed: Seq[(String, Long)] = Nil }
-  private[query] final case class Listed(override val listed: Seq[(String, Long)])
+  private[query] sealed trait Candidates { def listed: Seq[String] = Nil }
+  private[query] final case class Listed(override val listed: Seq[String])
       extends Candidates
   private[query] final case class Wide(terms: DataFrame) extends Candidates
 
-  /** At most `m` (term, df) probe rows per token from each partition. */
-  private def keepPerToken(rows: RDD[Row], n: Int, m: Int): RDD[Array[Array[(String, Long)]]] =
+  /** At most `m` probe terms per token from each partition. */
+  private def keepPerToken(rows: RDD[Row], n: Int, m: Int): RDD[Array[Array[String]]] =
     rows.mapPartitions { it =>
-      val kept = Array.fill(n)(mutable.ArrayBuilder.make[(String, Long)])
+      val kept = Array.fill(n)(mutable.ArrayBuilder.make[String])
       val sizes = new Array[Int](n)
       it.foreach { r =>
         r.getSeq[Int](2).foreach { i =>
-          if (sizes(i) < m) { kept(i) += ((r.getString(0), r.getLong(1))); sizes(i) += 1 }
+          if (sizes(i) < m) { kept(i) += r.getString(0); sizes(i) += 1 }
         }
       }
       Iterator(kept.map(_.result()))
@@ -945,22 +923,6 @@ object QueryEngine {
       }
       best.iterator
     }.collect().groupMapReduce(_._1)(_._2)(order.min).view.mapValues(_._3).toMap
-  }
-
-  /** (docId, tokens covered) per doc of a (docId, tok) relation: grouped
-    * inside one task (`oneTask`, no exchange) or by a shuffle.
-    */
-  private def coveredByDoc(rows: DataFrame, n: Int,
-      oneTask: Boolean): RDD[(Long, java.util.BitSet)] = {
-    val pairs = rows.queryExecution.toRdd.map(r => (r.getLong(0), r.getInt(1)))
-    if (oneTask)
-      pairs.coalesce(1).mapPartitions { it =>
-        val byDoc = mutable.LongMap.empty[java.util.BitSet]
-        it.foreach { case (d, t) => byDoc.getOrElseUpdate(d, new java.util.BitSet(n)).set(t) }
-        byDoc.iterator
-      }
-    else pairs.aggregateByKey(new java.util.BitSet(n))(
-      (b, t) => { b.set(t); b }, (b, o) => { b.or(o); b })
   }
 
   /** The statistics that decide the reference's reset-on-empty fold over
@@ -1007,10 +969,15 @@ object QueryEngine {
   private[graft] object FoldTally {
     def empty(n: Int): FoldTally = new FoldTally(new Array[Int](n), new Array[Long](n))
 
-    /** The tally of the docs of `covered`, in one job. */
-    def of(covered: RDD[(Long, java.util.BitSet)], n: Int): FoldTally =
-      covered.mapPartitions(docs => Iterator(docs.foldLeft(empty(n))(_ add _._2)))
-        .fold(empty(n))(_ merge _)
+    /** The tally of a (docId, toks) relation, in one job. */
+    def of(covered: DataFrame, n: Int): FoldTally =
+      covered.queryExecution.toRdd.mapPartitions { docs =>
+        Iterator(docs.foldLeft(empty(n)) { (tally, doc) =>
+          val toks = new java.util.BitSet(n)
+          doc.getArray(1).toIntArray.foreach(toks.set)
+          tally.add(toks)
+        })
+      }.fold(empty(n))(_ merge _)
   }
 
   /** The first `n` rows of `rel` in ONE job: every partition sends its

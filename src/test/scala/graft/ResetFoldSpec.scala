@@ -135,11 +135,9 @@ class ResetFoldSpec extends AnyFunSuite {
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.collect().map(_.getLong(0)).toSeq
 
-  for ((bundle, name) <- Seq((() => memory, "in-memory"), (() => block, "block-backed"));
-       (oneTask, side) <- Seq((true, "one task"), (false, "distributed"))) {
-    test(s"$name bundle, $side: wildcardQuery, fuzzyQuery and serpPage ≡ the per-token fold") {
+  for ((bundle, name) <- Seq((() => memory, "in-memory"), (() => block, "block-backed"))) {
+    test(s"$name bundle: wildcardQuery, fuzzyQuery and serpPage ≡ the per-token fold") {
       val e = new QueryEngine(bundle())
-      if (!oneTask) e.oneTaskPostings = 0L
       val log = new JobLog(spark)
       e.typeahead("a").collect() // the vocabulary's first read, outside the logs
       for ((alg, q, resets) <- queries) {
@@ -150,10 +148,9 @@ class ResetFoldSpec extends AnyFunSuite {
         for (page <- 1 to 3) {
           val ((got, total), jobs) = log.record(e.serpPage(alg, q, page, perPage = 1))
           assert(total == want.size && got == want.slice(page - 1, page), s"$alg '$q' page $page")
-          // after the probe, one-task plans run one stage per job; the
-          // distributed fold and page shuffle by docId
-          if (want.nonEmpty)
-            assert(jobs.tail.exists(_.size > 1) != oneTask, s"$alg '$q' page $page:\n${jobs.mkString("\n")}")
+          // after the probe, the fold and the page run one stage each:
+          // the postings are grouped by doc with no exchange
+          assert(jobs.tail.forall(_.size == 1), s"$alg '$q' page $page:\n${jobs.mkString("\n")}")
         }
       }
     }

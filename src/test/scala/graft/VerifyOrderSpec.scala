@@ -37,4 +37,14 @@ class VerifyOrderSpec extends AnyFunSuite {
         "", "not json", """["q01", "q02"]"""))
       assert(Verify.cheapestFirst(gates, status(body)) == gates, body)
   }
+
+  test("a gate-list replay keeps the previous entries of the known gates it does not run") {
+    val f = status("""{"q01": {"status": "ok", "seconds": 9.5},
+      |"q02": {"status": "failed", "seconds": 0.25}, "q99": {"status": "ok", "seconds": 1},
+      |"q03": {"status": "ok", "seconds": 3.0}}""".stripMargin)
+    assert(Verify.carriedOver(f, gates.toSet, Set("q02")) == Seq(
+      "q01" -> """{"status":"ok","seconds":9.5}""",
+      "q03" -> """{"status":"ok","seconds":3.0}"""))
+    assert(Verify.carriedOver(status("not json"), gates.toSet, Set("q02")).isEmpty)
+  }
 }
