@@ -3,7 +3,6 @@ package graft
 import graft.index.{BlockIndex, IndexBuilder}
 import graft.pipeline.{Dedup, Similarity}
 import graft.query.QueryEngine
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark main. Prints ONE JSON line:
@@ -20,14 +19,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-bench", 32)
+    val cpus = spark.sparkContext.defaultParallelism
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

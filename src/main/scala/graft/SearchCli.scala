@@ -65,20 +65,13 @@ object SearchCli {
       }
     // Phrase/Proximity modes read positions straight off the corpus
     // relation (lazy plan; a deployment with a persisted sidecar queries
-    // PositionalIndex.phraseSearch/proximitySearch directly instead).
-    // When serving a tombstoned index, the corpus-derived positions must
-    // exclude the deleted docs too — the bundle already does.
-    val rawPositions = graft.index.PositionalIndex.positionsStream(docs)
-    val tombs = idxDir.flatMap(BlockIndex.tombstones(spark, _))
-    val positions = Some(tombs
-      .fold(rawPositions)(t => rawPositions.join(
-        org.apache.spark.sql.functions.broadcast(t.distinct()),
-        Seq("docId"), "left_anti")))
-    // Grep mode scans the raw corpus — likewise tombstone-filtered so
-    // substring hits cannot resurrect docs the index already excludes
-    val liveDocs = Some(tombs.fold(docs)(t => docs.join(
-      org.apache.spark.sql.functions.broadcast(t.distinct()),
-      Seq("docId"), "left_anti")))
+    // PositionalIndex.phraseSearch/proximitySearch directly instead), and
+    // Grep mode scans the raw corpus. When serving a tombstoned index,
+    // both must exclude the deleted docs too — the bundle already does.
+    def live(rel: org.apache.spark.sql.DataFrame) =
+      idxDir.fold(rel)(graft.index.SegmentStore.liveOnly(_, rel))
+    val positions = Some(live(graft.index.PositionalIndex.positionsStream(docs)))
+    val liveDocs = Some(live(docs))
     val engine = idxDir match {
       case Some(d) =>
         new QueryEngine(BlockIndex.asBundle(spark, d, k),
@@ -97,14 +90,7 @@ object SearchCli {
     }
     val Array(path, alg, query) = args.take(3)
     val page = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-search")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-search")
     try {
       val (engine, docs) = resolve(spark, path)
       val ranked = engine.byName(alg)(query)

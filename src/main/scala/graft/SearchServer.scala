@@ -4,7 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.index.IndexBuilder
 import graft.query.QueryEngine
 import graft.sources.CorpusSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -263,14 +263,7 @@ object SearchServer {
     }
     val path = args(0)
     val port = if (args.length > 1) args(1).toInt else 8080
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-serve")
     // "corpus@indexDir" serves from the persisted (plain or segmented)
     // block index — no per-process rebuild (SearchCli.resolve)
     val (engine, docs) = SearchCli.resolve(spark, path)

@@ -928,7 +928,11 @@ object BlockIndex {
       .where(col("rank") <= k)
       .select(typedLit(matching.map(_._1)).apply(col("qid")).as("query"),
         col("docId"), col("score"), col("rank"))
-      .orderBy(col("query"), col("rank"))
+      // the window stays spread over the qid partitions; its ≤ k rows per
+      // query then go to one partition and one task sorts them, where a
+      // global orderBy would sample and range-partition them (a job more)
+      .repartition(1)
+      .sortWithinPartitions(col("query"), col("rank"))
   }
 
   /** Block-max WAND (Ding & Suel's block-max pruning adapted to a batch
@@ -1024,7 +1028,7 @@ object BlockIndex {
     // assignment order (content-clustered ids → a query's rare terms
     // occupy few blocks and the rest fall below θ; scattered ids →
     // every term in every block, nothing can be excluded — measured
-    // both ways in BENCH.md / tools/PruneBench). Prune iff some query has
+    // both ways in BENCH.md, `Harness wand`). Prune iff some query has
     // a block whose UB is under half its best block's (a necessary
     // condition for θ to bite) and the grid is big enough for the extra
     // jobs to ever pay.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Asserts the custom expressions really run inside compiled codegen —
@@ -10,13 +9,9 @@ import org.apache.spark.sql.functions._
   */
 object CodegenCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      // fail loudly instead of falling back to interpreted eval
-      .config("spark.sql.codegen.fallback", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session("graft-codegen-check", 2)
+    // fail loudly instead of falling back to interpreted eval
+    spark.conf.set("spark.sql.codegen.fallback", "false")
     import spark.implicits._
     val docs = Seq((1L, "Title Here", "body text body"), (2L, null: String, "x y"))
       .toDF("docId", "title", "body")

@@ -74,11 +74,7 @@ object CorpusGen {
   def main(args: Array[String]): Unit = {
     val nDocs = args(0).toLong
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session("graft-corpusgen", 32)
     val corpus = generate(spark, nDocs)
     corpus.write.mode("overwrite").parquet(s"$outDir/corpus.parquet")
     spark.read.parquet(s"$outDir/corpus.parquet")

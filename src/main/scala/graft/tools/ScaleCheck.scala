@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.index.{BlockIndex, IndexBuilder}
 import graft.query.QueryEngine
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Large-corpus correctness validation (the "works at scale, not just on
@@ -23,16 +22,9 @@ import org.apache.spark.sql.functions._
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val corpusDir = if (args.nonEmpty) args(0) else "/tmp/graft-corpus2m"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session("graft-scalecheck", 32)
 
-    val docs = spark.read.parquet(s"$corpusDir/corpus.parquet")
-      .select(col("docId"),
-        concat_ws("/", col("repo"), col("path")).as("title"),
-        col("content").as("body"))
+    val docs = Harness.titled(Harness.corpus(spark, corpusDir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDocs = docs.count()
 

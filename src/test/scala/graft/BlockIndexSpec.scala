@@ -817,4 +817,39 @@ class BlockIndexSpec extends AnyFunSuite {
     assert(BlockIndex.readBlocks(spark, d).count() == 0)
     assert(BlockIndex.bm25TopK(spark, d, "anything", 5).count() == 0)
   }
+
+  test("bm25TopKBatch orders its ranked rows without a range-partitioned sort") {
+    val sp = spark
+    import sp.implicits._
+    // the WAND big path corpus under span 4: 500 blocks, every block holds
+    // the stop word
+    val sdocs = (1 to 2000).map(i =>
+      (i.toLong, "", s"stopword unique$i filler${i % 7}", ""))
+      .toDF("docId", "title", "body", "url")
+    val d = tmpDir("blockidx-batch-jobs").toString
+    BlockIndex.build(sdocs, d, BlockIndex.Layout(blockSpan = 4, nShards = 4))
+    def batch(qs: Seq[String]) =
+      BlockIndex.bm25TopKBatch(spark, d, qs, 3, prune = Some(false)).collect()
+    val qs = Seq("stopword", "filler5 unique77", "filler3")
+    batch(qs) // opens the epoch and memoizes the terms' envelope
+    val (rows, jobs) = new graft.tools.JobLog(spark).record(batch(Seq("stopword")))
+    // a global orderBy(query, rank) took 6 jobs here: its range
+    // partitioning samples the ranked rows in a job of its own
+    assert(jobs.size < 6, s"one unpruned query launched ${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(rows.map(_.getInt(3)).toSeq == Seq(1, 2, 3))
+    val keys = batch(qs).map(r => (r.getString(0), r.getInt(3))).toSeq
+    assert(keys == keys.sorted && keys.map(_._1).distinct.size == 3, keys)
+    // k above the partial WindowGroupLimit threshold (1000): every scored
+    // row reaches the window, which must stay below the one-partition
+    // exchange rather than be merged into its task
+    val big = BlockIndex.bm25TopKBatch(spark, d, qs, 1500, prune = Some(false))
+    val plan = big.queryExecution.executedPlan.toString
+    val lines = plan.linesIterator.toSeq
+    val single = lines.indexWhere(_.contains("Exchange SinglePartition"))
+    val window = lines.indexWhere(_.contains("Window ["))
+    assert(single >= 0 && window > single && !plan.contains("Coalesce"), plan)
+    val bigKeys = big.collect().map(r => (r.getString(0), r.getInt(3))).toSeq
+    assert(bigKeys == bigKeys.sorted, "rows out of (query, rank) order")
+    assert(bigKeys.filter(_._1 == "stopword").map(_._2) == (1 to 1500), "stopword ranks")
+  }
 }

@@ -14,7 +14,7 @@ VM-day drift caveat (BENCH.md ADR): absolute numbers on this VM swing
 r5 same-day A/B re-ran the r3 tree against the r5 tree and the OLD code
 was slower). A flagged entry is therefore a *prompt to A/B the previous
 round's code on the same day* (git worktree + the same harness, e.g.
-graft.tools.WandBench), not proof of a code regression. The guard
+graft.Bench or graft.tools.Harness), not proof of a code regression. The guard
 exists so no drift ships unexamined.
 """
 import json
